@@ -18,7 +18,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from pprl_spark.functions.features import bigram_col
 from pprl_spark.functions import text as TXT
@@ -31,6 +30,7 @@ NUM_HASHES = 2
 MH_PERMS = 6
 MH_BANDS = 3
 MH_ROWS = MH_PERMS // MH_BANDS
+ENTRY_SF_DIR = "/root/testdata/sf0.001"  # the table set entry() links
 
 
 # Per-session memo of base/derived DataFrames. Besides avoiding repeated
@@ -117,7 +117,8 @@ def _grams(df: DataFrame) -> DataFrame:
 
 
 def _bloom(df: DataFrame) -> DataFrame:
-    """(doc_id, feats, bf_indices, collision_fraction) via the parity kernel.
+    """(doc_id, feats, bf_indices, bf_bitmap, mh_sig, collision_fraction)
+    through the embed stage's batch kernel (``embedding.bloom_batch``).
 
     mapInPandas rather than a column pandas UDF: a logical operator cannot
     be missed by Python-UDF extraction (Spark 4.1 drops the extraction on
@@ -125,39 +126,13 @@ def _bloom(df: DataFrame) -> DataFrame:
     raw PythonUDF inside a codegen Project), and the batch iterator shares
     one hash memo across the whole Arrow batch.
     """
-    import pandas as pd
-
-    from pprl_spark.functions.hashing import bloom_indices_with_collisions
 
     def kernel(batches):
-        from pprl_spark.functions.hashing import pack_bitmap
-        from pprl_spark.operators.blocking import minhash_signatures
+        from pprl_spark.operators.embedding import bloom_batch
 
         for pdf in batches:
-            memo: dict = {}
-            out = [
-                bloom_indices_with_collisions(
-                    f, BF_SIZE, NUM_HASHES, 0, "", _memo=memo
-                )
-                for f in pdf["feats"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "feats": pdf["feats"],
-                    "bf_indices": [o[0] for o in out],
-                    # join-side bitmap precomputed HERE (not as a JVM
-                    # higher-order function): HOFs are interpreted-eval
-                    # and may be re-evaluated once per consumer — the
-                    # cause of an intermittent 5x stall in the pair join
-                    "bf_bitmap": [pack_bitmap(o[0], BF_SIZE // 64) for o in out],
-                    # minhash signature precomputed here for the same
-                    # reason as the bitmap: blocking.minhash_col is an
-                    # interpreted higher-order fold per row; the numpy
-                    # twin is bit-identical (pinned by test)
-                    "mh_sig": minhash_signatures([o[0] for o in out], MH_PERMS),
-                    "collision_fraction": [o[1] for o in out],
-                }
+            yield pdf.assign(
+                **bloom_batch(pdf["feats"], BF_SIZE, NUM_HASHES, 0, "", MH_PERMS)
             )
 
     return df.mapInPandas(
@@ -184,30 +159,22 @@ def _embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, bf_indices, block_key): one single-pass minhash signature
-    per row (blocking.minhash_col), band keys sliced from the materialized
-    `_sig` column — same closed-form constants as the SQL oracle."""
-    from pprl_spark.operators.blocking import minhash_col
-
+    """(doc_id, bf_indices, bf_bitmap, block_key): band keys sliced from the
+    embed kernel's MinHash signature (``mh_sig``) — same closed-form
+    constants and ``mh{band}-…`` key strings as the SQL oracle."""
     emb = _embedded(spark, sf_dir)
 
     def build():
-        # the _bloom kernel precomputes mh_sig (vectorized numpy,
-        # bit-identical to minhash_col — the interpreted JVM fold is the
-        # fallback for stage tables written before the column existed)
-        if "mh_sig" in emb.columns:
-            sig, sig_col = emb, F.col("mh_sig")
-        else:
-            sig = emb.withColumn("_sig", minhash_col("bf_indices", MH_PERMS))
-            sig_col = F.col("_sig")
-        keys = []
-        for band in range(MH_BANDS):
-            parts = [
-                sig_col.getItem(band * MH_ROWS + r).cast("string")
-                for r in range(MH_ROWS)
-            ]
-            keys.append(F.concat_ws("-", F.lit(f"mh{band}"), *parts))
-        return sig.select(
+        sig = F.col("mh_sig")
+        keys = [
+            F.concat_ws(
+                "-",
+                F.lit(f"mh{band}"),
+                *[sig.getItem(band * MH_ROWS + r).cast("string") for r in range(MH_ROWS)],
+            )
+            for band in range(MH_BANDS)
+        ]
+        return emb.select(
             "doc_id",
             "bf_indices",
             "bf_bitmap",
@@ -217,50 +184,18 @@ def _blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memoized((_skey(spark), sf_dir, "blocked"), build)
 
 
-def _scored_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _score_block_pairs(_blocked(spark, sf_dir))
-
-
 def _score_block_pairs(blocks: DataFrame, sim: str = "cosine") -> DataFrame:
-    # hashed join key + Bloom bitmaps: identical sim values (bit_count of
-    # AND == size(array_intersect) on distinct indices — oracle-exact),
-    # ~2.7x smaller join rows and a word-AND intersect kernel. The bitmap
-    # comes precomputed from the _bloom kernel (bf_bitmap) — never as a
-    # JVM higher-order function, which is interpreted and re-evaluable
-    # per consumer (the intermittent 5x pair-join stall). ``sim``
-    # selects cosine (default) or the reference's Dice coefficient,
-    # mirroring operators.candidates' similarity switch.
-    from pprl_spark.operators.candidates import bitmap_intersect_count
+    """Distinct ``id1 < id2`` pairs sharing a block key, scored by
+    ``generate_candidates`` (cosine, or the reference's Dice) and rounded
+    to the oracle's 6 decimals. ``cap=False``: the oracles score every
+    blocked pair, so no block is thinned."""
+    from pprl_spark.config import EmbedderConfig
+    from pprl_spark.operators.candidates import generate_candidates
 
-    sides = blocks.select(
-        "doc_id",
-        F.xxhash64("block_key").alias("bk"),
-        F.col("bf_bitmap").alias("bm"),
-        F.size("bf_indices").alias("n"),
+    cfg = EmbedderConfig(bf_size=BF_SIZE, num_hashes=NUM_HASHES, similarity=sim)
+    return generate_candidates(blocks, None, cfg, cap=False).select(
+        "id1", "id2", F.round("sim", 6).alias("sim")
     )
-    left = sides.select(
-        F.col("doc_id").alias("id1"), "bk", F.col("bm").alias("bm1"), F.col("n").alias("n1")
-    )
-    right = sides.select(
-        F.col("doc_id").alias("id2"), "bk", F.col("bm").alias("bm2"), F.col("n").alias("n2")
-    )
-    inter = bitmap_intersect_count(
-        F.col("bm1"), F.col("bm2"), BF_SIZE // 64
-    ).cast("double")
-    if sim == "cosine":
-        sim_col = inter / (F.sqrt("n1") * F.sqrt("n2"))
-    elif sim == "dice":
-        sim_col = F.lit(2.0) * inter / (F.col("n1") + F.col("n2")).cast("double")
-    else:
-        raise ValueError(f"sim must be cosine|dice, got {sim!r}")
-    pairs = (
-        left.join(right, "bk")
-        .where(F.col("id1") < F.col("id2"))
-        .withColumn("sim", sim_col)
-        .groupBy("id1", "id2")
-        .agg(F.round(F.first("sim"), 6).alias("sim"))
-    )
-    return pairs
 
 
 def _scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,7 +208,7 @@ def _scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return _memoized(
         (_skey(spark), sf_dir, "scored_pairs"),
-        lambda: _scored_pairs_build(spark, sf_dir).localCheckpoint(),
+        lambda: _score_block_pairs(_blocked(spark, sf_dir)).localCheckpoint(),
     )
 
 
@@ -370,10 +305,9 @@ def _mutual_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``entry`` all consume it — one ranking pass per session."""
 
     def build():
-        # rank-1-both-ways via the lexicographic-max narrowing in
-        # operators.matching (r6): map-side-combined per-side max aggs +
-        # broadcast joins instead of two full exchanges+sorts of the
-        # pair table; the memoized pair checkpoint is the materialization
+        # rank-1-both-ways via mutual_best_match's two ranking windows
+        # (desc sim, asc partner id); the memoized pair checkpoint is the
+        # materialization, so no second boundary is taken here
         from pprl_spark.operators.matching import mutual_best_match
 
         pairs = _scored_pairs(spark, sf_dir).select("id1", "id2", "sim")
@@ -540,15 +474,7 @@ def entry(spark: SparkSession) -> DataFrame:
     over the sf0.001 documents table (the full PPRL dataflow minus the
     parties split: tokenize -> Bloom-embed -> LSH block -> score -> match).
     """
-    pairs = _scored_pairs(spark, "/root/testdata/sf0.001")
-    w1 = Window.partitionBy("id1").orderBy(F.desc("sim"), F.asc("id2"))
-    w2 = Window.partitionBy("id2").orderBy(F.desc("sim"), F.asc("id1"))
-    return (
-        pairs.withColumn("r1", F.row_number().over(w1))
-        .withColumn("r2", F.row_number().over(w2))
-        .where((F.col("r1") == 1) & (F.col("r2") == 1))
-        .select("id1", "id2", "sim")
-    )
+    return _mutual_best(spark, ENTRY_SF_DIR).select("id1", "id2", "sim")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -230,7 +230,6 @@ def generate_candidates(
     blocks2: DataFrame | None,
     config: EmbedderConfig,
     id_col: str = "doc_id",
-    score: bool = True,
     cap: bool = True,
     min_sim: float | None = None,
     allow_uncapped: bool = False,
@@ -238,7 +237,7 @@ def generate_candidates(
     """Join exploded block tables into scored candidate pairs.
 
     ``blocks2=None`` means self-linkage (dedup): pairs within one table
-    with ``id1 < id2``. Output: (id1, id2, block_key_hash, sim?) with one
+    with ``id1 < id2``. Output: (id1, id2, block_key_hash, sim) with one
     row per distinct pair (provenance is the xxhash64 of the block key —
     the join carries hashed keys + bitmaps, never the strings/arrays).
 
@@ -398,63 +397,57 @@ def generate_candidates(
     if "_salt" in pairs.columns:
         pairs = pairs.drop("_salt")
 
-    if score:
-        # Score BEFORE the pair-dedupe shuffle: the intersect runs on the
-        # join output where both bitmaps are already co-located, so the
-        # groupBy below shuffles only (id1, id2, key, sim) scalars — at
-        # 10^12 docs the pair table dominates, and not carrying two
-        # vectors through the exchange is a ~10x shuffle saving.
-        # Intersect form: the UNROLLED flat bit_count sum (codegen) only
-        # when no min_sim filter follows (2.8s -> 0.8s on 18.4M pairs);
-        # the compact interpreted HOF fold under a trailing filter. The
-        # unrolled-under-filter alternatives were measured and rejected
-        # TWICE (r6, both sessions), in both join shapes:
-        # - broadcast shape, 20k docs/side, noop sink: fold 3.0s vs
-        #   unrolled 7.5s, unrolled + a monotonically_increasing_id
-        #   pushdown barrier 7.2s — the 16-term chain un-JITs the fused
-        #   broadcast-probe + salt-explode stage with or without the
-        #   pushed-down filter duplicating it;
-        # - merge shape, 100k docs/side, local[4] (the at-scale shape):
-        #   match phase 58.6s with the fold vs 241.4s with
-        #   unrolled+barrier. A 20k merge-shape .count() probe had
-        #   suggested the opposite (3.4s vs 8.9s) — but count() lets
-        #   Catalyst prune first(sim) from the pair-dedupe aggregate, so
-        #   that probe measured a plan the real query never runs.
-        #   Probe with a noop sink or at the real consumer, not count().
-        pairs = (
-            pairs.withColumn(
-                "_isect",
-                bitmap_intersect_count(
-                    F.col("_bm1"),
-                    F.col("_bm2"),
-                    n_words if min_sim is None else None,
-                ),
-            )
-            .withColumn("sim", _similarity_expr(config.similarity))
-            .drop("_isect", "_bm1", "_bm2", "_n1", "_n2")
+    # Score BEFORE the pair-dedupe shuffle: the intersect runs on the
+    # join output where both bitmaps are already co-located, so the
+    # groupBy below shuffles only (id1, id2, key, sim) scalars — at
+    # 10^12 docs the pair table dominates, and not carrying two
+    # vectors through the exchange is a ~10x shuffle saving.
+    # Intersect form: the UNROLLED flat bit_count sum (codegen) only
+    # when no min_sim filter follows (2.8s -> 0.8s on 18.4M pairs);
+    # the compact interpreted HOF fold under a trailing filter. The
+    # unrolled-under-filter alternatives were measured and rejected
+    # twice, in both join shapes:
+    # - broadcast shape, 20k docs/side, noop sink: fold 3.0s vs
+    #   unrolled 7.5s, unrolled + a monotonically_increasing_id
+    #   pushdown barrier 7.2s — the 16-term chain un-JITs the fused
+    #   broadcast-probe + salt-explode stage with or without the
+    #   pushed-down filter duplicating it;
+    # - merge shape, 100k docs/side, local[4] (the at-scale shape):
+    #   match phase 58.6s with the fold vs 241.4s with
+    #   unrolled+barrier. A 20k merge-shape .count() probe had
+    #   suggested the opposite (3.4s vs 8.9s) — but count() lets
+    #   Catalyst prune first(sim) from the pair-dedupe aggregate, so
+    #   that probe measured a plan the real query never runs.
+    #   Probe with a noop sink or at the real consumer, not count().
+    pairs = (
+        pairs.withColumn(
+            "_isect",
+            bitmap_intersect_count(
+                F.col("_bm1"),
+                F.col("_bm2"),
+                n_words if min_sim is None else None,
+            ),
         )
-        if min_sim is not None:
-            pairs = pairs.where(F.col("sim") >= F.lit(min_sim))
-        # a pair sharing k block keys appears k times with equal sim; the
-        # dedupe is REQUIRED before mutual-best ranking (duplicate rows of
-        # one pair could take rank 1 in the two windows independently and
-        # lose the pair), and it shuffles only scalars. Provenance is the
-        # hashed key (the string key never survives to the join sides).
-        # Shape-dependent dedupe (same mechanism as setjoin.py): in the
-        # sort-merge shape the join output is partitioned by block key,
-        # so a pair's duplicates are cross-partition and the map-side
-        # partial aggregate dedupes ~nothing — repartition(id1, id2)
-        # runs both aggregate passes clustered instead. In the broadcast
-        # shape the probe side is doc-ordered, duplicates are already
-        # co-partitioned, and the map-side partial dedupes them before
-        # any exchange — keep the plain groupBy there.
-        if hint != "broadcast":
-            pairs = pairs.repartition(F.col("id1"), F.col("id2"))
-        return pairs.groupBy("id1", "id2").agg(
-            F.min("_bk").alias("block_key_hash"), F.first("sim").alias("sim")
-        )
-    return (
-        pairs.drop("_bm1", "_bm2", "_n1", "_n2")
-        .groupBy("id1", "id2")
-        .agg(F.min("_bk").alias("block_key_hash"))
+        .withColumn("sim", _similarity_expr(config.similarity))
+        .drop("_isect", "_bm1", "_bm2", "_n1", "_n2")
+    )
+    if min_sim is not None:
+        pairs = pairs.where(F.col("sim") >= F.lit(min_sim))
+    # a pair sharing k block keys appears k times with equal sim; the
+    # dedupe is REQUIRED before mutual-best ranking (duplicate rows of
+    # one pair could take rank 1 in the two windows independently and
+    # lose the pair), and it shuffles only scalars. Provenance is the
+    # hashed key (the string key never survives to the join sides).
+    # Shape-dependent dedupe (same mechanism as setjoin.py): in the
+    # sort-merge shape the join output is partitioned by block key,
+    # so a pair's duplicates are cross-partition and the map-side
+    # partial aggregate dedupes ~nothing — repartition(id1, id2)
+    # runs both aggregate passes clustered instead. In the broadcast
+    # shape the probe side is doc-ordered, duplicates are already
+    # co-partitioned, and the map-side partial dedupes them before
+    # any exchange — keep the plain groupBy there.
+    if hint != "broadcast":
+        pairs = pairs.repartition(F.col("id1"), F.col("id2"))
+    return pairs.groupBy("id1", "id2").agg(
+        F.min("_bk").alias("block_key_hash"), F.first("sim").alias("sim")
     )

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pprl_spark.config import EmbedderConfig
+from pprl_spark.functions.hashing import bloom_indices_with_collisions, pack_bitmap
+from pprl_spark.operators.blocking import minhash_signatures
 
 SPAN_ORDERED = "array_sort(transform(spans, s -> struct(s.offset as offset, s.kind as kind, s.text as text, s.media_ref as media_ref)))"
 
@@ -60,6 +62,43 @@ def normalize_documents(df: DataFrame, config: EmbedderConfig) -> DataFrame:
     return out.drop("_fields")
 
 
+def bloom_batch(
+    feature_lists,
+    bf_size: int,
+    num_hashes: int,
+    offset: int,
+    salt: str,
+    mh_perms: int,
+) -> dict:
+    """One Arrow batch of per-row feature sets -> the Bloom stage columns.
+
+    Returns ``bf_indices``, ``bf_bitmap``, ``mh_sig`` and
+    ``collision_fraction``, one list entry per input row. The hash memo is
+    shared across the batch (repeated features hash once). The join-side
+    bitmap and the MinHash signature are computed here, once per row, not
+    as JVM higher-order functions: those are interpreted (never
+    codegen'd) and can be re-evaluated per consumer — see
+    ``functions.hashing.pack_bitmap``. ``minhash_signatures`` is the
+    vectorized, bit-identical twin of ``blocking.minhash_col``.
+    """
+    memo: dict = {}
+    n_words = -(-(bf_size + offset) // 64)
+    idx_out, bm_out, coll_out = [], [], []
+    for feats in feature_lists:
+        idx, coll = bloom_indices_with_collisions(
+            feats, bf_size, num_hashes, offset, salt, _memo=memo
+        )
+        idx_out.append(idx)
+        bm_out.append(pack_bitmap(idx, n_words))
+        coll_out.append(coll)
+    return {
+        "bf_indices": idx_out,
+        "bf_bitmap": bm_out,
+        "mh_sig": minhash_signatures(idx_out, mh_perms),
+        "collision_fraction": coll_out,
+    }
+
+
 def embed_documents(
     df: DataFrame,
     config: EmbedderConfig,
@@ -95,7 +134,6 @@ def embed_documents(
         config.salt,
     )
     in_fields = [f.name for f in df.schema.fields]
-    n_words = -(-(bf_size + offset) // 64)
     mh_perms = config.minhash_perms
     out_schema = T.StructType(
         list(df.schema.fields)
@@ -110,11 +148,6 @@ def embed_documents(
 
     def kernel(batches):
         from pprl_spark.functions import tokens as TK
-        from pprl_spark.functions.hashing import (
-            bloom_indices_with_collisions,
-            pack_bitmap,
-        )
-        from pprl_spark.operators.blocking import minhash_signatures
 
         kernels = TK.FEATURE_KERNELS
         plan = []
@@ -127,39 +160,19 @@ def embed_documents(
             plan.append((field, kernels[ftype], kw))
 
         for pdf in batches:
-            memo: dict = {}
-            n = len(pdf)
-            feats_out, idx_out, bm_out, coll_out = [], [], [], []
+            feats_out = []
             cols = {field: pdf[field].to_numpy() for field, _, _ in plan}
-            for i in range(n):
+            for i in range(len(pdf)):
                 per_col = []
                 for field, kern, kw in plan:
                     v = cols[field][i]
                     if v is not None and not isinstance(v, str):
                         v = None if v != v else v  # NaN -> None
                     per_col.append(kern(v, **kw))
-                feats = TK.union_features(per_col)
-                idx, coll = bloom_indices_with_collisions(
-                    feats, bf_size, num_hashes, offset, salt, _memo=memo
-                )
-                feats_out.append(sorted(feats))
-                idx_out.append(idx)
-                # join-side bitmap computed ONCE here: the JVM
-                # higher-order-function form is interpreted (never
-                # codegen'd) and can be re-evaluated per consumer —
-                # see functions.hashing.pack_bitmap
-                bm_out.append(pack_bitmap(idx, n_words))
-                coll_out.append(coll)
+                feats_out.append(sorted(TK.union_features(per_col)))
             yield pdf.assign(
                 features=feats_out,
-                bf_indices=idx_out,
-                bf_bitmap=bm_out,
-                # signature precomputed here (vectorized, bit-identical
-                # to the JVM fold) so add_block_keys never pays the
-                # interpreted higher-order minhash_col — same pattern as
-                # bf_bitmap above
-                mh_sig=minhash_signatures(idx_out, mh_perms),
-                collision_fraction=coll_out,
+                **bloom_batch(feats_out, bf_size, num_hashes, offset, salt, mh_perms),
             )
 
     emb = df.mapInPandas(kernel, out_schema)

@@ -165,46 +165,12 @@ def jaro_winkler_rescore(
     return scored.withColumn(sim_col, blended).drop(out_col)
 
 
-def _best_partner_map(
-    cand: DataFrame, side: str, partner: str, order_cols: tuple[str, ...]
-) -> DataFrame:
-    """(side -> rank-1 partner) under (order_cols DESC..., partner ASC).
-
-    Lexicographic-max narrowing instead of a ranking window: for each
-    order column in turn, keep only the rows achieving the per-side max
-    (map-side-combined HashAggregate + explicit-broadcast join back —
-    the build side is one row per document, so the pair table is never
-    exchanged, let alone sorted), then the deterministic tie-break is
-    one min(partner) aggregation over the rank-1 ties. ``eqNullSafe``
-    keeps window parity on null order values (desc = nulls last: a null
-    row survives narrowing only when the whole partition is null).
-
-    The input must be materialized: each narrowing pass re-scans it.
-    """
-    surv = cand.select(side, partner, *order_cols)
-    for c in order_cols:
-        mx = surv.groupBy(side).agg(F.max(c).alias("_mx"))
-        # explicit broadcast: the max table is one row per document —
-        # bounded by |docs|, not |pairs| — but Catalyst's estimate for a
-        # derived aggregate is unknown and the static planner otherwise
-        # picks a sort-merge join that exchanges+sorts the full pair
-        # table per narrowing pass (measured 4x slower than the windows
-        # it was meant to replace)
-        surv = (
-            surv.join(F.broadcast(mx), side)
-            .where(F.col(c).eqNullSafe(F.col("_mx")))
-            .drop("_mx")
-        )
-    return surv.groupBy(side).agg(F.min(partner).alias(partner))
-
-
 def mutual_best_match(
     candidates: DataFrame,
     rounds: int = 1,
     self_linkage: bool = False,
     order_cols: tuple[str, ...] = ("sim",),
     materialize: str = "checkpoint",
-    strategy: str = "window",
 ) -> DataFrame:
     """Keep pairs that are each other's best candidate (rank 1 both ways).
 
@@ -224,24 +190,11 @@ def mutual_best_match(
     other — globally one-to-one over the single namespace. Residual
     rounds remove matched documents from both columns.
 
-    ``strategy`` picks how rank-1-per-side is computed; both produce
-    IDENTICAL results (equality pinned in tests):
-
-    - ``"window"`` (default): two ranking windows over one scan. Costs two
-      exchanges + sorts of the pair table, but they are the ONLY passes —
-      measured fastest on every local configuration tried (r5: 89-256s
-      end-to-end across 4-32 cores at 100k docs/source; r6 at sf0.1:
-      1.3s vs 3.0s for the agg form on 7.9M pairs).
-    - ``"agg"``: lexicographic-max narrowing (:func:`_best_partner_map`).
-      The pair table is NEVER exchanged — the only shuffles are map-side-
-      combined HashAggregates carrying one row per document, with the max
-      tables broadcast back (bounded by |docs|, not |pairs|). Re-scans the
-      materialized pair table ~5x, so it loses locally where DRAM is fast
-      and sorts are cheap, but it is the shape for clusters where the
-      pair-table exchange is the bottleneck (the naive agg forms —
-      ``min(struct(...))``, ``max_by`` — plan as SortAggregate and were
-      rejected in r2; the narrowing loop keeps codegen HashAggregate by
-      taking one scalar max per pass).
+    Rank 1 per side comes from two ranking windows over one scan: two
+    exchanges + sorts of the pair table, and they are the ONLY passes.
+    Aggregate narrowing that never exchanges the pair table measured
+    slower at every configuration tried (sf0.1, 7.9M pairs: 3.0s vs
+    1.3s; OPTIMIZATION_r06.md).
 
     ``rounds > 1`` re-runs the ranking on the residual pairs after
     removing matched documents — the distributed analog of greedy
@@ -250,10 +203,7 @@ def mutual_best_match(
     """
     from pprl_spark.operators.dedup import _materialize
 
-    if strategy not in ("window", "agg"):
-        raise ValueError(f"strategy must be window|agg, got {strategy!r}")
-
-    def one_round_window(cand: DataFrame) -> DataFrame:
+    def one_round(cand: DataFrame) -> DataFrame:
         ob = [F.desc(c) for c in order_cols]
         w1 = Window.partitionBy("id1").orderBy(*ob, F.asc("id2"))
         w2 = Window.partitionBy("id2").orderBy(*ob, F.asc("id1"))
@@ -264,13 +214,7 @@ def mutual_best_match(
             .drop("_r1", "_r2")
         )
 
-    def one_round_agg(cand: DataFrame) -> DataFrame:
-        b1 = _best_partner_map(cand, "id1", "id2", order_cols)
-        b2 = _best_partner_map(cand, "id2", "id1", order_cols)
-        mutual = b1.join(F.broadcast(b2), ["id1", "id2"])
-        return cand.join(F.broadcast(mutual), ["id1", "id2"], "left_semi")
-
-    def one_round_self_window(cand: DataFrame) -> DataFrame:
+    def one_round_self(cand: DataFrame) -> DataFrame:
         # symmetrize, rank each doc's best partner over BOTH orientations,
         # then keep original-orientation pairs whose partners are mutual
         sym = cand.select("id1", "id2", *order_cols).unionByName(
@@ -292,31 +236,6 @@ def mutual_best_match(
             b2, ["id1", "id2"], "left_semi"
         )
 
-    def one_round_self_agg(cand: DataFrame) -> DataFrame:
-        sym = cand.select("id1", "id2", *order_cols).unionByName(
-            cand.select(
-                F.col("id2").alias("id1"), F.col("id1").alias("id2"), *order_cols
-            )
-        )
-        # tiny (one row per doc); materialized because BOTH orientation
-        # frames below reference it — without the boundary the whole
-        # narrowing lineage would run twice
-        best = (
-            _best_partner_map(sym, "id1", "id2", order_cols)
-            .select(F.col("id1").alias("_doc"), F.col("id2").alias("_partner"))
-            .localCheckpoint()
-        )
-        b1 = best.select(F.col("_doc").alias("id1"), F.col("_partner").alias("id2"))
-        b2 = best.select(F.col("_partner").alias("id1"), F.col("_doc").alias("id2"))
-        return cand.join(F.broadcast(b1), ["id1", "id2"], "left_semi").join(
-            F.broadcast(b2), ["id1", "id2"], "left_semi"
-        )
-
-    if strategy == "agg":
-        one_round, one_round_self = one_round_agg, one_round_self_agg
-    else:
-        one_round, one_round_self = one_round_window, one_round_self_window
-
     def residual(cand: DataFrame, matched: DataFrame) -> DataFrame:
         if self_linkage:
             # one namespace: a doc matched on EITHER side is out of play
@@ -331,16 +250,15 @@ def mutual_best_match(
         ).join(matched.select("id2").distinct(), "id2", "left_anti")
 
     select_round = one_round_self if self_linkage else one_round
-    # multi-reference shapes (self-linkage symmetrize, agg narrowing,
-    # residual rounds) re-scan the pair table several times; without a
-    # materialization boundary Catalyst re-runs the upstream blocked-join
-    # lineage once per reference and the logical plan grows
+    # multi-reference shapes (self-linkage symmetrize, residual rounds)
+    # re-scan the pair table several times; without a materialization
+    # boundary Catalyst re-runs the upstream blocked-join lineage once
+    # per reference and the logical plan grows
     # multiplicatively per round. The single-round two-party window path
     # references the table exactly once, so it skips the boundary.
     # Callers that already materialized (memoized checkpoints, stage
     # tables) pass materialize="none".
-    multi_ref = self_linkage or rounds > 1 or strategy == "agg"
-    if multi_ref:
+    if self_linkage or rounds > 1:
         candidates = _materialize(candidates, materialize)
     matched = select_round(candidates)
     remaining = candidates

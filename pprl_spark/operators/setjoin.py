@@ -28,7 +28,11 @@ must share a token in their (small) rarest-token prefixes:
   Prefixes select the LOW-df tokens by construction, so join blocks
   are naturally small (the skew story: hub tokens like stopwords fall
   out of prefixes for all but the shortest docs).
-- length filter: min(n1,n2) >= t * max(n1,n2), else Jaccard < t.
+- length filter: one-sided ``n_i >= t * n_p`` (index size vs probe
+  size), else Jaccard < t.  It equals the symmetric
+  ``min(n1,n2) >= t * max(n1,n2)`` only because the (n, id) role
+  condition above makes the index side the smaller record; an edit to
+  the role condition must revisit this filter.
 - positional filter (PPJoin): a candidate generated at prefix
   positions (p1, p2) can overlap at most min(n1-p1, n2-p2) + 1; if
   that is below the required overlap ceil(t/(1+t) * (n1+n2)) the

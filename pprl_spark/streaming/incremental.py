@@ -55,7 +55,11 @@ def delta_candidates(
     Output pairs are normalized to ``id1 < id2`` (the self-linkage
     orientation), so the union with the stored pair table is directly
     re-rankable. Document ids must be disjoint between corpus and delta
-    (append-only ingest).
+    (append-only ingest). Nothing checks this: with an id in both
+    frames, one pair can come out of the cross join, the delta self-join
+    and the stored corpus pairs alike, so it gets several rows. Duplicate
+    rows corrupt mutual-best ranking: each copy can take rank 1 in a
+    different window, so a true match is lost.
 
     ``cap=True`` thins celebrity blocks per input frame; because block
     sizes differ between (corpus, delta) and their union, capping makes
@@ -106,6 +110,12 @@ def delta_match(
     tests/test_streaming_delta.py pins this). Mutual-best ranking is the
     one step that cannot be incremental: a new document can steal an old
     document's best partner, so old matches may legitimately change.
+
+    The equivalence needs one row per pair, which holds only while
+    corpus and delta ids are disjoint (see :func:`delta_candidates`).
+    Overlapping ids emit duplicate pair rows, and those corrupt the
+    ranking here: a pair's copies can win rank 1 in different windows
+    and a true match is dropped.
     """
     cols = ["id1", "id2", "block_key_hash", "sim"]
     all_pairs = prior_pairs.select(*cols).unionByName(new_pairs.select(*cols))

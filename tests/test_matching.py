@@ -226,43 +226,55 @@ def test_mutual_best_self_linkage_one_to_one(spark):
     assert len(tp_used) != len(set(tp_used))
 
 
-def test_mutual_best_strategies_identical(spark):
-    """The r6 "agg" strategy (lexicographic-max narrowing, no pair-table
-    exchange) must return exactly the window strategy's result — on ties,
-    on multi-column orderings, and in self-linkage mode."""
-    import random
+def _py_mutual_best(rows, self_linkage, order_cols):
+    """Reference mutual-best on plain tuples (id1, id2, score, sim): rank 1
+    per side under (order_cols desc, partner id asc); in self-linkage mode
+    one namespace, each doc's best partner taken over both orientations."""
+    col = {"score": 2, "sim": 3}
 
+    def best_of(edges):
+        best = {}
+        for doc, partner, r in edges:
+            key = tuple(-r[col[c]] for c in order_cols) + (partner,)
+            if doc not in best or key < best[doc][0]:
+                best[doc] = (key, partner)
+        return {d: p for d, (_, p) in best.items()}
+
+    if self_linkage:
+        best = best_of(
+            [(r[0], r[1], r) for r in rows] + [(r[1], r[0], r) for r in rows]
+        )
+        return {r for r in rows if best[r[0]] == r[1] and best[r[1]] == r[0]}
+    b1 = best_of([(r[0], r[1], r) for r in rows])
+    b2 = best_of([(r[1], r[0], r) for r in rows])
+    return {r for r in rows if b1[r[0]] == r[1] and b2[r[1]] == r[0]}
+
+
+def test_mutual_best_matches_python_reference(spark):
+    """mutual_best_match equals a pure-Python mutual-best on seeded
+    tie-heavy rows — ties on the coarse score, multi-column orderings,
+    and self-linkage's shared namespace (ids overlap across columns)."""
     rng = random.Random(7)
-    rows = []
-    seen = set()
+    rows, seen = [], set()
     for _ in range(400):
-        i, j = rng.randrange(40), rng.randrange(40, 80)
-        if (i, j) in seen:
+        i, j = rng.randrange(60), rng.randrange(60)
+        if i == j or (min(i, j), max(i, j)) in seen:
             continue
-        seen.add((i, j))
-        # coarse score (forces ties) + fine score
-        rows.append((f"a{i}", f"b{j}", float(rng.randrange(4)), rng.random()))
+        seen.add((min(i, j), max(i, j)))
+        # coarse score (forces ties) + a fine sim with its own ties
+        rows.append(
+            (f"d{min(i, j):02d}", f"d{max(i, j):02d}",
+             float(rng.randrange(4)), rng.randrange(20) / 20)
+        )
     cand = spark.createDataFrame(
         rows, "id1 string, id2 string, score double, sim double"
     )
     for self_linkage in (False, True):
         for order_cols in (("sim",), ("score", "sim")):
-            w = {
-                tuple(r)
-                for r in mutual_best_match(
-                    cand,
-                    self_linkage=self_linkage,
-                    order_cols=order_cols,
-                    strategy="window",
-                ).collect()
-            }
-            a = {
-                tuple(r)
-                for r in mutual_best_match(
-                    cand,
-                    self_linkage=self_linkage,
-                    order_cols=order_cols,
-                    strategy="agg",
-                ).collect()
-            }
-            assert w == a, (self_linkage, order_cols)
+            got = mutual_best_match(
+                cand, self_linkage=self_linkage, order_cols=order_cols
+            ).collect()
+            assert len(got) == len({(r[0], r[1]) for r in got})
+            want = _py_mutual_best(rows, self_linkage, order_cols)
+            assert {tuple(r) for r in got} == want, (self_linkage, order_cols)
+            assert want, (self_linkage, order_cols)

@@ -56,6 +56,9 @@ def test_delta_candidates_union_equivalence(split_blocks):
     assert _pairs_set(batch) == _pairs_set(prior) | _pairs_set(new)
     # the delta really contributes pairs (the split is not degenerate)
     assert _pairs_set(new)
+    # one row per pair: the sets above cannot see duplicate rows, and a
+    # duplicate would corrupt the mutual-best ranking delta_match runs
+    assert new.count() == new.select("id1", "id2").distinct().count()
 
 
 def test_delta_match_equals_batch_match(split_blocks):

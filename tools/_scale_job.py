@@ -81,9 +81,7 @@ def main() -> None:
     # per-pair xxhash64 as decimal so it cannot overflow), so plain and
     # bucketed runs can assert IDENTICAL match sets, not just equal counts
     agg = (
-        mutual_best_match(
-            cand, strategy=os.environ.get("PPRL_MATCH_STRATEGY", "window")
-        )
+        mutual_best_match(cand)
         .agg(
             F.count("*").alias("n"),
             F.sum(F.xxhash64("id1", "id2").cast("decimal(38,0)")).alias("h"),

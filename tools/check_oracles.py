@@ -40,63 +40,68 @@ def norm_cell(v):
     return v
 
 
-def run(sf_dir: str, only: list[str]) -> int:
-    spark = get_spark(app_name="oracle_check", master="local[8]", shuffle_partitions=8)
+def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per parquet table of ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
 
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
-    failures = 0
+
+def check_query(spark, con, sf_dir: str, name: str) -> str:
+    """Run query ``name`` on ``spark`` and its oracle on ``con``.
+
+    Returns one report line starting with PASS, FAIL, SKIP or "OK?" (no
+    oracle: rows-only check).
+    """
     sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        if name in FIXTURE_SCOPED and sf_tag != "sf0.01":
-            print(f"SKIP {name}: golden fixture is sf0.01-scoped")
-            continue
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sorted(sdf.columns)
-            srows = sorted(
-                tuple(norm_cell(r[c]) for c in scols) for r in sdf.collect()
-            )
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
-            failures += 1
-            continue
-        if name not in oracles:
-            print(f"OK?  {name}: rows={len(srows)} (no oracle — rows-only check)")
-            continue
-        try:
-            ddf = con.sql(oracles[name]).fetchdf()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {e}")
-            failures += 1
-            continue
-        dcols = sorted(ddf.columns)
-        drows = sorted(
-            tuple(norm_cell(v) for v in row)
-            for row in ddf[dcols].itertuples(index=False, name=None)
+    if name in FIXTURE_SCOPED and sf_tag != "sf0.01":
+        return f"SKIP {name}: golden fixture is sf0.01-scoped"
+    try:
+        sdf = entry.queries()[name](spark, sf_dir)
+        scols = sorted(sdf.columns)
+        srows = sorted(tuple(norm_cell(r[c]) for c in scols) for r in sdf.collect())
+    except Exception as e:
+        return f"FAIL {name}: spark error: {e}"
+    oracles = entry.oracle_sql()
+    if name not in oracles:
+        return f"OK?  {name}: rows={len(srows)} (no oracle — rows-only check)"
+    try:
+        ddf = con.sql(oracles[name]).fetchdf()
+    except Exception as e:
+        return f"FAIL {name}: duckdb error: {e}"
+    dcols = sorted(ddf.columns)
+    drows = sorted(
+        tuple(norm_cell(v) for v in row)
+        for row in ddf[dcols].itertuples(index=False, name=None)
+    )
+    if scols != dcols:
+        return f"FAIL {name}: columns {scols} vs {dcols}"
+    if len(srows) != len(drows):
+        return (
+            f"FAIL {name}: rowcount {len(srows)} vs {len(drows)}\n"
+            f"  spark head: {srows[:3]}\n  duck  head: {drows[:3]}"
         )
-        if scols != dcols:
-            print(f"FAIL {name}: columns {scols} vs {dcols}")
-            failures += 1
-            continue
-        if len(srows) != len(drows):
-            print(f"FAIL {name}: rowcount {len(srows)} vs {len(drows)}")
-            print("  spark head:", srows[:3])
-            print("  duck  head:", drows[:3])
-            failures += 1
-            continue
-        bad = [(a, b) for a, b in zip(srows, drows) if a != b]
-        if bad:
-            print(f"FAIL {name}: {len(bad)} mismatched rows; first: {bad[0]}")
-            failures += 1
-            continue
-        print(f"PASS {name}: rows={len(srows)}")
-    spark.stop()
+    bad = [(a, b) for a, b in zip(srows, drows) if a != b]
+    if bad:
+        return f"FAIL {name}: {len(bad)} mismatched rows; first: {bad[0]}"
+    return f"PASS {name}: rows={len(srows)}"
+
+
+def run(sf_dir: str, only: list[str]) -> int:
+    spark = get_spark(app_name="oracle_check", master="local[8]", shuffle_partitions=8)
+    con = duckdb_views(sf_dir)
+    failures = 0
+    try:
+        for name in entry.queries():
+            if only and name not in only:
+                continue
+            line = check_query(spark, con, sf_dir, name)
+            print(line)
+            failures += line.startswith("FAIL")
+    finally:
+        con.close()
+        spark.stop()
     return failures
 
 
