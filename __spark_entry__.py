@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pprl_spark.functions.features import bigram_col
 from pprl_spark.functions import text as TXT
 from pprl_spark.operators import ann as ANN
-from pprl_spark.operators.blocking import MINHASH_PRIME, minhash_coeffs
+from pprl_spark.operators.blocking import MINHASH_PRIME, band_keys, minhash_coeffs
 from pprl_spark.operators.cluster import connected_components
 
 BF_SIZE = 1024
@@ -165,20 +165,11 @@ def _blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embedded(spark, sf_dir)
 
     def build():
-        sig = F.col("mh_sig")
-        keys = [
-            F.concat_ws(
-                "-",
-                F.lit(f"mh{band}"),
-                *[sig.getItem(band * MH_ROWS + r).cast("string") for r in range(MH_ROWS)],
-            )
-            for band in range(MH_BANDS)
-        ]
         return emb.select(
             "doc_id",
             "bf_indices",
             "bf_bitmap",
-            F.explode(F.array(*keys)).alias("block_key"),
+            F.explode(band_keys(F.col("mh_sig"), MH_BANDS, MH_ROWS, "mh{}")).alias("block_key"),
         )
 
     return _memoized((_skey(spark), sf_dir, "blocked"), build)
@@ -911,9 +902,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def dedup_ngram_jaccard(spark, sf_dir):
-        from pprl_spark.operators.dedup import ngram_jaccard_pairs
+        # n-gram Jaccard is the exact verify of the MinHash path (default
+        # 8x2 banding)
+        from pprl_spark.operators.dedup import minhash_near_duplicates
 
-        out = ngram_jaccard_pairs(_docs(spark, sf_dir), k=2, threshold=0.2)
+        out = minhash_near_duplicates(_docs(spark, sf_dir), k=2, threshold=0.2)
         return out.select(
             F.col("id1").cast("long"),
             F.col("id2").cast("long"),
@@ -3332,8 +3325,8 @@ SELECT id1, id2, round(cos, 6) AS cos FROM s WHERE cos >= 0.4
     )
 
 
-    # ngram-Jaccard now defaults to MinHash band candidates (8 bands, r=2 —
-    # the operator's scale-safe default); exact Jaccard is the verifier
+    # ngram-Jaccard = MinHash band candidates (8 bands, r=2 — the
+    # operator's default) verified by exact Jaccard
     dedup_ngram_sql = (
         sh_cte
         + ", blocks AS (SELECT doc_id, sh, unnest(["

@@ -3,17 +3,13 @@
 The north star scores candidate pairs with Dice/cosine over Bloom sets
 (native, ``operators.candidates``) plus Jaro-Winkler on name fields for
 tie-breaking. Spark has no built-in Jaro-Winkler, so this is a pure-Python
-kernel (standard Winkler variant: prefix scaling p=0.1, max prefix 4,
-applied unconditionally — matching DuckDB's ``jaro_winkler_similarity``,
-which the oracle uses) wrapped in a vectorized pandas UDF.
+kernel (classic Winkler variant: prefix scaling p=0.1, max prefix 4,
+boost above jaro 0.7 — matching DuckDB's ``jaro_winkler_similarity``,
+which the oracle uses), run batched per partition by
+``operators.matching.jaro_winkler_rescore`` (mapInPandas).
 """
 
 from __future__ import annotations
-
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def jaro(s1: str, s2: str) -> float:
@@ -84,18 +80,3 @@ def jaro_winkler(
         prefix += 1
     return j + prefix * scaling * (1.0 - j)
 
-
-@F.pandas_udf(T.DoubleType())
-def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            jaro_winkler(a, b) if a is not None and b is not None else None
-            for a, b in zip(s1, s2)
-        ]
-    )
-
-
-def jaro_winkler_col(c1: Column | str, c2: Column | str) -> Column:
-    a = F.col(c1) if isinstance(c1, str) else c1
-    b = F.col(c2) if isinstance(c2, str) else c2
-    return jaro_winkler_udf(a, b)

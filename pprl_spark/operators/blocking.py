@@ -101,8 +101,10 @@ def minhash_col(indices_col: Column | str, num_perm: int) -> Column:
     )
 
 
-def band_keys_from_signature(sig: Column, config: EmbedderConfig) -> Column:
-    """array<string> of LSH band keys from a *materialized* signature column.
+def band_keys(sig: Column, bands: int, rows_per_band: int, tag: str) -> Column:
+    """array<string> of LSH band keys from a *materialized* signature
+    column: band ``b`` is ``tag.format(b)`` and its ``rows_per_band``
+    values, ``-``-joined. Callers keep their key strings through ``tag``.
 
     The signature must be a plain column reference (not the minhash
     expression itself): Catalyst expressions are trees, so feeding the
@@ -110,11 +112,10 @@ def band_keys_from_signature(sig: Column, config: EmbedderConfig) -> Column:
     array transforms once per ``getItem`` — O(perms²) array scans per row
     (measured 10x slow-down of the whole blocking stage).
     """
-    r = config.rows_per_band
     keys = []
-    for band in range(config.minhash_bands):
-        parts = [sig.getItem(band * r + i).cast("string") for i in range(r)]
-        keys.append(F.concat_ws("-", F.lit(f"mh{band}:"), *parts))
+    for band in range(bands):
+        parts = [sig.getItem(band * rows_per_band + i).cast("string") for i in range(rows_per_band)]
+        keys.append(F.concat_ws("-", F.lit(tag.format(band)), *parts))
     return F.array(*keys)
 
 
@@ -144,36 +145,24 @@ def sorted_neighborhood_keys(df_cols: dict[str, Column]) -> list[Column]:
     return keys
 
 
-def add_block_keys(
-    df: DataFrame,
-    config: EmbedderConfig,
-    use_lsh: bool = True,
-    use_sorted_neighborhood: bool = True,
-) -> DataFrame:
-    """Add ``block_keys array<string>`` to an embedded documents frame."""
-    keys: list[Column] = []
-    if use_lsh:
-        if "mh_sig" in df.columns:
-            # the embed kernel precomputed the signature (vectorized
-            # numpy, bit-identical to minhash_col — see embedding.py):
-            # the JVM fold below is an interpreted higher-order function
-            # costing ~0.9s per 20k-doc blocking stage when computed here
-            keys.append(band_keys_from_signature(F.col("mh_sig"), config))
-        else:
-            # materialize the signature once, then slice it (see
-            # band_keys_from_signature for why this two-step shape matters)
-            df = df.withColumn("_sig", minhash_col("bf_indices", config.minhash_perms))
-            keys.append(band_keys_from_signature(F.col("_sig"), config))
-    if use_sorted_neighborhood:
-        cols = {f: F.col(f) for f in config.colspec if f in df.columns}
-        sn = sorted_neighborhood_keys(cols)
-        if sn:
-            keys.append(F.array(*sn))
-    if not keys:
-        raise ValueError("at least one blocking scheme required")
-    merged = keys[0]
-    for k in keys[1:]:
-        merged = F.concat(merged, k)
+def add_block_keys(df: DataFrame, config: EmbedderConfig) -> DataFrame:
+    """Add ``block_keys array<string>``: the MinHash band keys plus the
+    sorted-neighborhood keys, to an embedded documents frame."""
+    if "mh_sig" in df.columns:
+        # the embed kernel precomputed the signature (vectorized
+        # numpy, bit-identical to minhash_col — see embedding.py):
+        # the JVM fold below is an interpreted higher-order function
+        # costing ~0.9s per 20k-doc blocking stage when computed here
+        sig = F.col("mh_sig")
+    else:
+        # materialize the signature once, then slice it (see
+        # band_keys for why this two-step shape matters)
+        df = df.withColumn("_sig", minhash_col("bf_indices", config.minhash_perms))
+        sig = F.col("_sig")
+    merged = band_keys(sig, config.minhash_bands, config.rows_per_band, "mh{}:")
+    sn = sorted_neighborhood_keys({f: F.col(f) for f in config.colspec if f in df.columns})
+    if sn:
+        merged = F.concat(merged, F.array(*sn))
     # drop the signature columns: _sig is internal, and mh_sig has done
     # its job (keeping it would widen every downstream explode/shuffle)
     return df.withColumn("block_keys", F.array_distinct(merged)).drop("_sig", "mh_sig")
@@ -182,7 +171,6 @@ def add_block_keys(
 def explode_blocks(
     df: DataFrame,
     id_col: str = "doc_id",
-    extra_cols: list[str] | None = None,
     include_indices: bool = True,
 ) -> DataFrame:
     """(id, [bf_indices,] bf_n, [bf_bitmap,] block_key) — one row per
@@ -202,10 +190,10 @@ def explode_blocks(
     The pipeline's block stages use this; keep indices when downstream
     consumers (per-block Hungarian scoring, SCM alignment) read them.
     """
-    cols = [id_col, *(extra_cols or [])]
+    cols = [id_col]
     if include_indices or "bf_bitmap" not in df.columns:
-        cols.insert(1, "bf_indices")
-    if "bf_bitmap" in df.columns and "bf_bitmap" not in cols:
+        cols.append("bf_indices")
+    if "bf_bitmap" in df.columns:
         # precomputed join-side bitmap (embed kernel): 128B/doc vs ~360B
         # of indices — cheaper through the ~10x key explosion, and spares
         # the candidate join its interpreted-HOF bitmap reconstruction

@@ -156,7 +156,6 @@ def connected_components(
     src: str = "id1",
     dst: str = "id2",
     max_iterations: int = 50,
-    checkpoint_each: bool = True,
     small_graph_edges: int | None = None,
 ) -> DataFrame:
     """Return ``(doc_id, entity_id)`` with entity_id = min doc_id of the
@@ -229,14 +228,10 @@ def connected_components(
             .distinct()
         )
 
-    def ckpt(df):
-        return df.localCheckpoint(eager=False) if checkpoint_each else df
-
-    if checkpoint_each:
-        e = e.localCheckpoint()
+    e = e.localCheckpoint()
     reps = rep_of(e)
     labels = reps.select(F.col("u").alias("doc_id"), F.col("rep").alias("entity_id"))
-    E = ckpt(contract(e, reps))
+    E = contract(e, reps).localCheckpoint(eager=False)
     prev_edges = e.count()
     n_edges = E.count()
     # Phases 1 and 2 SHARE max_iterations, but contraction cannot starve
@@ -248,25 +243,25 @@ def connected_components(
     budget = max_iterations
     while 0 < n_edges <= prev_edges // 2 and budget > 0:
         reps = rep_of(E)
-        labels = ckpt(
+        labels = (
             labels.join(
                 reps.select(F.col("u").alias("entity_id"), "rep"),
                 "entity_id",
                 "left",
-            ).select(
-                "doc_id", F.coalesce("rep", F.col("entity_id")).alias("entity_id")
             )
+            .select("doc_id", F.coalesce("rep", F.col("entity_id")).alias("entity_id"))
+            .localCheckpoint(eager=False)
         )
-        E = ckpt(contract(E, reps))
+        E = contract(E, reps).localCheckpoint(eager=False)
         prev_edges, n_edges = n_edges, E.count()
         budget -= 1
     if n_edges == 0:
         return labels
 
     # phase 2 over the contracted remainder (nodes are representatives)
-    sym = E.unionAll(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if checkpoint_each:
-        sym = sym.localCheckpoint()
+    sym = E.unionAll(
+        E.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).localCheckpoint()
     prop = (
         sym.select(F.col("u").alias("doc_id"))
         .distinct()
@@ -286,10 +281,11 @@ def connected_components(
             ),
         )
         jump = updated.select(F.col("doc_id").alias("_e"), F.col("_new").alias("_j"))
-        updated = ckpt(
+        updated = (
             updated.join(jump, updated["_new"] == jump["_e"], "left")
             .withColumn("_final", F.coalesce(F.col("_j"), F.col("_new")))
             .select("doc_id", "entity_id", "_final")
+            .localCheckpoint(eager=False)
         )
         changed = updated.where(F.col("_final") != F.col("entity_id")).count()
         prop = updated.select("doc_id", F.col("_final").alias("entity_id"))
@@ -326,7 +322,6 @@ def incremental_cc(
     delta_edges: DataFrame,
     src: str = "id1",
     dst: str = "id2",
-    **cc_kwargs,
 ) -> DataFrame:
     """Update an existing cluster ``assignment`` with ``delta_edges``
     WITHOUT re-running connected components over the full pair graph.
@@ -360,7 +355,7 @@ def incremental_cc(
         )
         .where(F.col(src) != F.col(dst))
     )
-    relabel = connected_components(contracted, src=src, dst=dst, **cc_kwargs).select(
+    relabel = connected_components(contracted, src=src, dst=dst).select(
         F.col("doc_id").alias("entity_id"), F.col("entity_id").alias("_new")
     )
     updated = assignment.join(relabel, "entity_id", "left").select(

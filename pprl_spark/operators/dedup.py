@@ -2,20 +2,27 @@
 
 First-class training-data-pipeline components alongside the PPRL stages
 (the brief grades these with SURVEY.md §2): exact, MinHash-LSH, SimHash,
-n-gram Jaccard, and embedding-cosine near-dup. All reuse the engine's
-blocking machinery — candidate pairs only ever exist within a block key,
-so every variant scales the same way the linkage pipeline does.
+winnowing and embedding-cosine near-dup. n-gram Jaccard is not a
+separate variant: it is the exact verify of the MinHash path
+(:func:`minhash_near_duplicates`). All reuse the engine's blocking
+machinery — candidate pairs only ever exist within a block key, so every
+variant scales the same way the linkage pipeline does. The LSH variants
+share one shape: :func:`_key_pairs` (distinct pairs sharing a key, only
+``(doc_id, key)`` rows in the exchange) then :func:`_verified` (payload
+joined back onto the pairs, exact score >= threshold).
 
 Everything below is built-in Spark (codegen'd); no Python UDFs.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pprl_spark.functions.text import shingle_hashes
-from pprl_spark.operators.blocking import minhash_col
+from pprl_spark.operators.blocking import band_keys, minhash_col
 
 
 def _materialize(df: DataFrame, mode: str) -> DataFrame:
@@ -77,71 +84,45 @@ def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def _band_keys_from_sig(sig: Column, bands: int, r: int) -> Column:
-    """array<string> band keys from a materialized signature column.
+def _key_pairs(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
+    """Distinct ``(id1, id2)`` with ``id1 < id2``: a ``doc_id`` of ``left``
+    and one of ``right`` sharing ``key``.
 
-    Must be fed a plain column reference (not the minhash expression) so
-    the single-pass aggregate runs once, not once per getItem — same
-    two-step rule as blocking.band_keys_from_signature.
+    Only ``(doc_id, key)`` rows go through the join exchange — a
+    document's payload (shingle array, vector) would otherwise be copied
+    once per key it emits, the dominant shuffle at corpus scale.
+    Payloads join back onto the distinct pairs in :func:`_verified`.
     """
-    keys = []
-    for band in range(bands):
-        parts = [sig.getItem(band * r + i).cast("string") for i in range(r)]
-        keys.append(F.concat_ws("-", F.lit(f"b{band}:"), *parts))
-    return F.array(*keys)
-
-
-def minhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    bands: int = 8,
-    rows_per_band: int = 2,
-    materialize: str = "checkpoint",
-) -> DataFrame:
-    """MinHash-LSH candidate pairs over k-word shingles.
-
-    shingle -> rolling-hash int -> minhash signature (one single-pass
-    aggregate, see blocking.minhash_col) -> band keys -> self-join per
-    band key with id1 < id2. Returns distinct (id1, id2) with their
-    shingle-hash arrays for downstream exact verification.
-
-    Shuffle shape: the band join carries ONLY (doc_id, band_key) — the
-    shingle arrays never ride the ``bands``-way explosion or the band
-    exchange (a doc's array would be duplicated once per band, the
-    dominant shuffle at corpus scale). Arrays are joined back onto the
-    deduped pair table by id afterwards; the base table is checkpointed
-    so the shingle computation runs once, not once per join arm.
-    """
-    # Filter null text BEFORE the shingle projection, not `size(sh) > 0`
-    # after it: predicate pushdown rewrites a filter on a projected alias
-    # into a filter on the underlying EXPRESSION below the project, so the
-    # interpreted shingle fold ran once for the filter and again for the
-    # output column (measured 4.3s -> 1.4s for the sf0.1 base build).
-    # Equivalent: shingle_hashes yields >= 1 element for any non-null
-    # text (n >= k windows, or the single joined-words shingle when
-    # n < k, [hash("")] for empty text) and null only for null text.
-    base = (
-        df.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("doc_id"), shingle_hashes(text_col, k).alias("sh"))
-        .withColumn("_sig", minhash_col(F.col("sh"), bands * rows_per_band))
-    )
-    base = _materialize(base, materialize)
-    exploded = base.select(
-        "doc_id",
-        F.explode(_band_keys_from_sig(F.col("_sig"), bands, rows_per_band)).alias("bk"),
-    )
-    pairs = (
-        exploded.select(F.col("doc_id").alias("id1"), "bk")
-        .join(exploded.select(F.col("doc_id").alias("id2"), "bk"), "bk")
+    return (
+        left.select(F.col("doc_id").alias("id1"), key)
+        .join(right.select(F.col("doc_id").alias("id2"), key), key)
         .where(F.col("id1") < F.col("id2"))
         .select("id1", "id2")
         .dropDuplicates(["id1", "id2"])
     )
-    sh1 = base.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
-    sh2 = base.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
-    return pairs.join(sh1, "id1").join(sh2, "id2").select("id1", "id2", "sh1", "sh2")
+
+
+def _verified(
+    cand: DataFrame,
+    base: DataFrame,
+    col: str,
+    score: Callable[[Column, Column], Column],
+    name: str,
+    threshold: float,
+) -> DataFrame:
+    """Join ``base.col`` (keyed by ``doc_id``) onto both ends of each
+    ``(id1, id2)`` pair and keep pairs scoring ``>= threshold`` ->
+    ``(id1, id2, name)``. ``score`` maps the two payload columns to the
+    exact similarity."""
+    c1 = base.select(F.col("doc_id").alias("id1"), F.col(col).alias("_c1"))
+    c2 = base.select(F.col("doc_id").alias("id2"), F.col(col).alias("_c2"))
+    return (
+        cand.join(c1, "id1")
+        .join(c2, "id2")
+        .withColumn(name, score(F.col("_c1"), F.col("_c2")))
+        .where(F.col(name) >= threshold)
+        .select("id1", "id2", name)
+    )
 
 
 def _jaccard(sh1: Column, sh2: Column) -> Column:
@@ -159,70 +140,14 @@ def minhash_near_duplicates(
     rows_per_band: int = 2,
     materialize: str = "checkpoint",
 ) -> DataFrame:
-    """MinHash-LSH near-dup pairs, exact-Jaccard verified: (id1,id2,jaccard)."""
-    cand = minhash_candidates(df, text_col, id_col, k, bands, rows_per_band, materialize)
-    return (
-        cand.withColumn("jaccard", _jaccard(F.col("sh1"), F.col("sh2")))
-        .where(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
+    """MinHash-LSH near-dup pairs, exact-Jaccard verified: (id1,id2,jaccard).
 
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    threshold: float = 0.5,
-    block_expr: Column | None = None,
-    bands: int = 8,
-    rows_per_band: int = 2,
-    materialize: str = "checkpoint",
-) -> DataFrame:
-    """Exact n-gram-Jaccard pairs over selective candidate blocks.
-
-    By default candidates come from MinHash band keys (the same LSH
-    machinery as :func:`minhash_candidates`) and exact Jaccard is the
-    verifier — the only shape that survives a 100x scale-up. Passing
-    ``block_expr`` overrides the blocking with a user expression; note a
-    low-cardinality key (language, source) makes the scoring quadratic
-    within each block and should only be used on pre-filtered inputs.
+    :func:`minhash_index` (k-word shingles -> signature -> band keys),
+    a self-join on the band key (:func:`_key_pairs`), then exact
+    shingle-set (n-gram) Jaccard >= ``threshold`` (:func:`_verified`).
     """
-    if block_expr is None:
-        cand = minhash_candidates(df, text_col, id_col, k, bands, rows_per_band, materialize)
-        return (
-            cand.withColumn("jaccard", _jaccard(F.col("sh1"), F.col("sh2")))
-            .where(F.col("jaccard") >= threshold)
-            .select("id1", "id2", "jaccard")
-        )
-    # join carries (id, blk) only; shingle arrays join back onto the
-    # distinct pairs for the exact-Jaccard verify (same shuffle shape as
-    # minhash_candidates — arrays never ride the block exchange)
-    # null-text pre-filter for the same pushdown-duplication reason as
-    # minhash_candidates (shingle arrays are never empty for non-null text)
-    base = df.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        block_expr.alias("blk"),
-        shingle_hashes(text_col, k).alias("sh"),
-    )
-    base = _materialize(base, materialize)
-    keys = base.select("doc_id", "blk")
-    cand = (
-        keys.select(F.col("doc_id").alias("id1"), "blk")
-        .join(keys.select(F.col("doc_id").alias("id2"), "blk"), "blk")
-        .where(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
-    sh1 = base.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
-    sh2 = base.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
-    return (
-        cand.join(sh1, "id1")
-        .join(sh2, "id2")
-        .withColumn("jaccard", _jaccard(F.col("sh1"), F.col("sh2")))
-        .where(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
+    base, band = minhash_index(df, text_col, id_col, k, bands, rows_per_band, materialize)
+    return _verified(_key_pairs(band, band, "bk"), base, "sh", _jaccard, "jaccard", threshold)
 
 
 def simhash_col(text_col: str, bits: int = 32, k: int = 2) -> Column:
@@ -282,41 +207,24 @@ def embedding_near_duplicates(
 
     if n_planes is None:
         n_planes = auto_n_planes(vectors.count())
-    # Same shuffle shape as minhash_candidates: the bucket join exchanges
-    # ONLY (id, bucket) — a vector would otherwise ride the
-    # (n_planes+1)-way probe explosion through the join. Vectors are
-    # joined back onto the deduped candidate pairs for the exact-cosine
-    # verify; the base table is checkpointed so the bucket keys compute
-    # once, not once per join arm.
+    # The bucket join exchanges ONLY (id, bucket) (:func:`_key_pairs`):
+    # a vector would otherwise ride the (n_planes+1)-way probe explosion.
+    # The base table is checkpointed so the bucket keys compute once,
+    # not once per join arm.
     base = vectors.select(
-        F.col(id_col).alias("vec_id"),
+        F.col(id_col).alias("doc_id"),
         F.col(vec_col).alias("v"),
         lsh_bucket_key(F.col(vec_col), dim, n_planes).alias("b0"),
     )
     base = _materialize(base, materialize)
     probes = base.select(
-        "vec_id",
+        "doc_id",
         F.explode(
             F.array(F.col("b0"), *[F.col("b0").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)])
         ).alias("bucket"),
     )
-    anchored = base.select("vec_id", F.col("b0").alias("bucket"))
-    cand = (
-        anchored.select(F.col("vec_id").alias("id1"), "bucket")
-        .join(probes.select(F.col("vec_id").alias("id2"), "bucket"), "bucket")
-        .where(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
-    v1 = base.select(F.col("vec_id").alias("id1"), F.col("v").alias("v1"))
-    v2 = base.select(F.col("vec_id").alias("id2"), F.col("v").alias("v2"))
-    return (
-        cand.join(v1, "id1")
-        .join(v2, "id2")
-        .withColumn("cos", cosine(F.col("v1"), F.col("v2")))
-        .where(F.col("cos") >= threshold)
-        .select("id1", "id2", "cos")
-    )
+    anchored = base.select("doc_id", F.col("b0").alias("bucket"))
+    return _verified(_key_pairs(anchored, probes, "bucket"), base, "v", cosine, "cos", threshold)
 
 
 def simhash_near_duplicates(
@@ -431,23 +339,7 @@ def winnow_near_duplicates(
         materialize,
     )
     exf = base.select("doc_id", F.explode("fps").alias("fp"))
-    cand = (
-        exf.select(F.col("doc_id").alias("id1"), "fp")
-        .join(exf.select(F.col("doc_id").alias("id2"), "fp"), "fp")
-        .where(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
-    f1 = base.select(F.col("doc_id").alias("id1"), F.col("fps").alias("fps1"))
-    f2 = base.select(F.col("doc_id").alias("id2"), F.col("fps").alias("fps2"))
-    inter = F.size(F.array_intersect("fps1", "fps2")).cast("double")
-    return (
-        cand.join(f1, "id1")
-        .join(f2, "id2")
-        .withColumn("overlap", inter / (F.size("fps1") + F.size("fps2") - inter))
-        .where(F.col("overlap") >= threshold)
-        .select("id1", "id2", "overlap")
-    )
+    return _verified(_key_pairs(exf, exf, "fp"), base, "fps", _jaccard, "overlap", threshold)
 
 
 def canonical_documents(
@@ -633,18 +525,27 @@ def minhash_index(
     rows_per_band: int = 2,
     materialize: str = "checkpoint",
 ) -> tuple[DataFrame, DataFrame]:
-    """The standing MinHash index for write-once/probe-many dedup:
-    ``(base(doc_id, sh), band(doc_id, bk))``.
+    """The MinHash index ``(base(doc_id, sh), band(doc_id, bk))``: k-word
+    shingle hashes, their signature (one single-pass aggregate, see
+    ``blocking.minhash_col``) and its ``bands`` band keys.
 
-    Pipeline callers materialize these ONCE for the corpus (checkpoint
-    here; a stage table / bucketed write in the pipeline) and probe
-    them with every arriving batch via ``delta_near_duplicates`` — the
-    dedup analog of the linkage delta probe
+    The only builder of the shingle -> signature -> band table:
+    :func:`minhash_near_duplicates` self-joins it, and write-once/
+    probe-many callers materialize it ONCE for the corpus (checkpoint
+    here; a stage table / bucketed write in the pipeline) and probe it
+    with every arriving batch via ``delta_near_duplicates`` — the dedup
+    analog of the linkage delta probe
     (``streaming/incremental.py::delta_candidates``): the corpus is
     never re-shingled and never re-paired against itself.
     """
-    # null-text pre-filter for the same pushdown-duplication reason as
-    # minhash_candidates (shingle arrays are never empty for non-null text)
+    # Filter null text BEFORE the shingle projection, not `size(sh) > 0`
+    # after it: predicate pushdown rewrites a filter on a projected alias
+    # into a filter on the underlying EXPRESSION below the project, so the
+    # interpreted shingle fold ran once for the filter and again for the
+    # output column (measured 4.3s -> 1.4s for the sf0.1 base build).
+    # Equivalent: shingle_hashes yields >= 1 element for any non-null
+    # text (n >= k windows, or the single joined-words shingle when
+    # n < k, [hash("")] for empty text) and null only for null text.
     base = (
         df.where(F.col(text_col).isNotNull())
         .select(
@@ -655,7 +556,7 @@ def minhash_index(
     base = _materialize(base, materialize)
     band = base.select(
         "doc_id",
-        F.explode(_band_keys_from_sig(F.col("_sig"), bands, rows_per_band)).alias("bk"),
+        F.explode(band_keys(F.col("_sig"), bands, rows_per_band, "b{}:")).alias("bk"),
     )
     return base.select("doc_id", "sh"), band
 
@@ -700,16 +601,8 @@ def delta_near_duplicates(
         )
         .dropDuplicates(["id1", "id2"])
     )
-    all_base = corpus_base.unionByName(delta_base.select("doc_id", "sh"))
-    sh1 = all_base.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
-    sh2 = all_base.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
-    return (
-        cand.join(sh1, "id1")
-        .join(sh2, "id2")
-        .withColumn("jaccard", _jaccard(F.col("sh1"), F.col("sh2")))
-        .where(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
+    all_base = corpus_base.unionByName(delta_base)
+    return _verified(cand, all_base, "sh", _jaccard, "jaccard", threshold)
 
 
 def semantic_duplicates(

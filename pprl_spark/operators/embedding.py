@@ -103,7 +103,6 @@ def embed_documents(
     df: DataFrame,
     config: EmbedderConfig,
     keep: list[str] | None = None,
-    normalized: bool = False,
 ) -> DataFrame:
     """Embed a documents DataFrame into Bloom space.
 
@@ -118,8 +117,7 @@ def embed_documents(
     Columns not needed downstream are pruned *before* the Python stage so
     only requested passthrough columns cross the Arrow boundary.
     """
-    if not normalized:
-        df = normalize_documents(df, config)
+    df = normalize_documents(df, config)
     fields = [f for f in config.colspec if f in df.columns]
     if keep is not None:
         passthrough = [c for c in dict.fromkeys(keep + fields) if c in df.columns]

@@ -14,9 +14,11 @@ the driver, where the small-matrix algebra runs in numpy exactly as the
 reference does. Negatives come from a seeded derangement-by-sort instead
 of ``pd.Series.sample`` (`embedder.py:623`).
 
-Scoring with a trained matrix: a broadcast numpy array inside a pandas
-UDF computing ``x1ᵀ A x2 / (n1·n2)`` per pair from sparse indices —
-the trained-path analog of the native ``array_intersect`` cosine.
+Scoring with a trained matrix (:func:`soft_cosine_pairs_native`):
+``x1ᵀ A x2 / (n1·n2)`` per pair from sparse indices — the trained-path
+analog of the native ``array_intersect`` cosine. Python (a mapInPandas
+kernel) runs once per DOCUMENT to project its indices through ``A``;
+the per-pair gather and sum are JVM expressions.
 """
 
 from __future__ import annotations
@@ -220,59 +222,6 @@ def load_scm(path: str, size: int) -> np.ndarray:
     return A
 
 
-def soft_cosine_pairs_map(
-    pairs: DataFrame, scm: np.ndarray, out_col: str = "sim"
-) -> DataFrame:
-    """mapInPandas variant of :func:`soft_cosine_pairs`.
-
-    A logical operator rather than pandas-UDF columns: Spark 4.1 can skip
-    Python-UDF extraction on re-executed plans that share subtrees, leaving
-    a raw PythonUDF inside a codegen Project — mapInPandas cannot be missed.
-    Keeps all input columns and appends ``out_col``.
-    """
-    A = np.asarray(scm, dtype=np.float64)
-    # copy, don't .add(): StructType.add mutates the DataFrame's cached
-    # schema object, corrupting pairs.columns
-    schema = T.StructType(
-        list(pairs.schema.fields) + [T.StructField(out_col, T.DoubleType())]
-    )
-
-    def kernel(batches):
-        # Per-doc projection cache: each document appears in many pairs,
-        # so memoize P_d = A[ix_d].sum(axis=0) (one 1xB vector per doc).
-        # Then numerator x1ᵀAx2 = P_1[ix_2].sum() (an |ix|-element gather
-        # instead of an |ix|² one — ~80x fewer gathered elements per pair)
-        # and ‖x‖²_A = P_d[ix_d].sum(). Identical float64 ops/order as the
-        # naive form: np.sum over the same cells, so oracle parity holds.
-        proj_cache: dict = {}
-
-        def proj_norm(ix: np.ndarray):
-            key = ix.tobytes()
-            v = proj_cache.get(key)
-            if v is None:
-                p = A[ix].sum(axis=0)
-                v = (p, float(np.sqrt(p[ix].sum())))
-                proj_cache[key] = v
-            return v
-
-        for pdf in batches:
-            out = np.empty(len(pdf))
-            for k, (a, b) in enumerate(zip(pdf["bf_indices_1"], pdf["bf_indices_2"])):
-                ia, ib = np.asarray(a), np.asarray(b)
-                p1, n1 = proj_norm(ia)
-                _, n2 = proj_norm(ib)
-                denom = n1 * n2
-                out[k] = p1[ib].sum() / denom if denom > 0 else np.nan
-            yield pdf.assign(**{out_col: out})
-
-    out = pairs.mapInPandas(kernel, schema)
-    # degenerate rows (norm 0 under a barely-trained matrix) score NULL,
-    # matching the native path's F.when(denom > 0, ...) semantics
-    return out.withColumn(
-        out_col, F.when(~F.isnan(out_col), F.col(out_col))
-    )
-
-
 def scm_projections(
     docs: DataFrame, scm: np.ndarray, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -335,8 +284,8 @@ def soft_cosine_pairs_native(
 
     ``emb1``/``emb2``: frames with (doc_id, bf_indices). The projection
     tables are doc-sized (broadcastable: B doubles per doc); the pair
-    table never moves through Python. Float64 sums over the same cells as
-    :func:`soft_cosine_pairs_map`, so oracle parity holds to 6 decimals.
+    table never moves through Python. Sums are float64 throughout, so
+    oracle parity holds to 6 decimals.
     """
     # Broadcast of p1 is GATED, never unconditional: it carries a B-length
     # double array (~8KB at B=1024) PER DOCUMENT of emb1 — corpus-sized
@@ -368,15 +317,3 @@ def soft_cosine_pairs_native(
     )
     return out.drop("_p1", "_n1", "_n2", "_ix2")
 
-
-def soft_cosine_pairs(pairs: DataFrame, scm: np.ndarray) -> DataFrame:
-    """Score candidate pairs with a trained SCM (dense-matrix-free).
-
-    Input needs bf_indices_1/bf_indices_2; emits ``sim`` = soft cosine
-    (embedder.py:519 restricted to the candidate pairs). Routed through
-    the projection formulation (:func:`soft_cosine_pairs_map`): Python
-    cost is one B-vector per DISTINCT document in the batch, never a
-    per-pair |ix|² gather — the old ``Series.apply`` per-pair UDFs are
-    deliberately gone so no caller can score 10^12 pairs row-at-a-time.
-    """
-    return soft_cosine_pairs_map(pairs, scm, out_col="sim")

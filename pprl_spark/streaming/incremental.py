@@ -459,15 +459,15 @@ def stream_near_duplicates(
     Returns ``(doc_id, corpus_id, jaccard)``.
     """
     from pprl_spark.functions.text import shingle_hashes
-    from pprl_spark.operators.blocking import minhash_col
-    from pprl_spark.operators.dedup import _band_keys_from_sig, _jaccard
+    from pprl_spark.operators.blocking import band_keys, minhash_col
+    from pprl_spark.operators.dedup import _jaccard
 
     corpus_base, corpus_band = corpus_index
     stream = spark.readStream.schema(schema).parquet(input_dir)
     if watermark is not None:
         stream = stream.withWatermark("ts", watermark)
     # null-text pre-filter instead of size(sh) > 0: pushdown would
-    # re-evaluate the shingle fold for the filter (see dedup operators);
+    # re-evaluate the shingle fold for the filter (dedup.minhash_index);
     # shingle arrays are never empty for non-null text
     d = (
         stream.where(F.col("text").isNotNull())
@@ -478,7 +478,7 @@ def stream_near_duplicates(
         "doc_id",
         "ts",
         "sh",
-        F.explode(_band_keys_from_sig(F.col("_sig"), bands, rows_per_band)).alias("bk"),
+        F.explode(band_keys(F.col("_sig"), bands, rows_per_band, "b{}:")).alias("bk"),
     )
     cand = dband.join(
         corpus_band.select(F.col("doc_id").alias("corpus_id"), "bk"), "bk"

@@ -2,9 +2,11 @@
 
 ``__spark_entry__`` embeds, scores and matches through ``pprl_spark``
 (``embedding.bloom_batch``, ``generate_candidates``,
-``mutual_best_match``); these checks run the scored-pair, Dice and
-mutual-best queries on the sf0.001 tables and compare them value-exactly
-with the closed-form SQL twins, as ``tools/check_oracles.py`` does.
+``mutual_best_match``), and its near-duplicate queries through the
+``operators.dedup`` key-join + verify path; these checks run the
+scored-pair, Dice, mutual-best and dedup queries on the sf0.001 tables
+and compare them value-exactly with the closed-form SQL twins, as
+``tools/check_oracles.py`` does.
 """
 
 import pytest
@@ -21,7 +23,17 @@ def con():
 
 
 @pytest.mark.parametrize(
-    "name", ["pprl_score_pairs", "pprl_dice_pairs", "pprl_mutual_best_match"]
+    "name",
+    [
+        "pprl_score_pairs",
+        "pprl_dice_pairs",
+        "pprl_mutual_best_match",
+        "dedup_minhash",
+        "dedup_ngram_jaccard",
+        "dedup_delta",
+        "dedup_winnow",
+        "dedup_embedding",
+    ],
 )
 def test_entry_query_matches_oracle(spark, con, name):
     line = check_query(spark, con, entry.ENTRY_SF_DIR, name)

@@ -10,12 +10,11 @@ from pprl_spark.operators.ann import brute_force_topk, lsh_topk
 from pprl_spark.operators.dedup import (
     exact_duplicates,
     minhash_near_duplicates,
-    ngram_jaccard_pairs,
     simhash_near_duplicates,
 )
 from pprl_spark.operators.multimodal import media_features, synthesize_media
 from pprl_spark.operators.private_index import add_private_index
-from pprl_spark.operators.scm import soft_cosine_pairs, train_scm
+from pprl_spark.operators.scm import soft_cosine_pairs_native, train_scm
 
 
 @pytest.fixture(scope="module")
@@ -68,12 +67,10 @@ def test_minhash_near_duplicates(spark, corpus):
     }
     assert (1, 2) in pairs  # identical docs always collide at J=1.0
     assert all(p[0] < p[1] for p in pairs)
-
-
-def test_ngram_jaccard_pairs(spark, corpus):
+    # n-gram Jaccard is the exact verify: the scores are shingle-set Jaccard
     pairs = {
         (r["id1"], r["id2"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(corpus, k=2, threshold=0.3).collect()
+        for r in minhash_near_duplicates(corpus, k=2, threshold=0.3).collect()
     }
     assert pairs[(1, 2)] == pytest.approx(1.0)
     assert (1, 3) in pairs  # one-word edit keeps most 2-shingles
@@ -233,14 +230,18 @@ def test_scm_training_and_scoring(spark):
     assert eig.min() >= -1e-4
     # trained scoring runs and scores aligned (matched) pairs higher than
     # a mismatched pair
-    pairs = spark.createDataFrame(
-        [([1, 2, 3], [1, 2, 4]), ([1, 2, 3], [5, 6, 8])],
-        "bf_indices_1 array<int>, bf_indices_2 array<int>",
+    emb = spark.createDataFrame(
+        [(1, [1, 2, 3]), (2, [1, 2, 4]), (3, [5, 6, 8])],
+        "doc_id long, bf_indices array<int>",
     )
-    sims = [r["sim"] for r in soft_cosine_pairs(pairs, scm).collect()]
+    pairs = spark.createDataFrame([(1, 2), (1, 3)], "id1 long, id2 long")
+    sims = {
+        r["id2"]: r["sim"]
+        for r in soft_cosine_pairs_native(pairs, emb, emb, scm).collect()
+    }
     # degenerate (norm-0) pairs score NULL under a barely-trained matrix
-    assert sims[0] is not None
-    assert sims[1] is None or sims[0] > sims[1]
+    assert sims[2] is not None
+    assert sims[3] is None or sims[2] > sims[3]
 
 
 def test_stream_windowed_stats_matches_batch(spark, tmp_path):
