@@ -67,7 +67,10 @@ def test_minhash_near_duplicates(spark, corpus):
     }
     assert (1, 2) in pairs  # identical docs always collide at J=1.0
     assert all(p[0] < p[1] for p in pairs)
-    # n-gram Jaccard is the exact verify: the scores are shingle-set Jaccard
+
+
+def test_ngram_jaccard_pairs(spark, corpus):
+    # n-gram Jaccard is the MinHash path's exact verify: scores are shingle-set Jaccard
     pairs = {
         (r["id1"], r["id2"]): r["jaccard"]
         for r in minhash_near_duplicates(corpus, k=2, threshold=0.3).collect()
