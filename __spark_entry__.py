@@ -297,12 +297,12 @@ def _mutual_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build():
         # rank-1-both-ways via mutual_best_match's two ranking windows
-        # (desc sim, asc partner id); the memoized pair checkpoint is the
-        # materialization, so no second boundary is taken here
+        # (desc sim, asc partner id); a two-party single round reads the
+        # memoized pair checkpoint once and takes no boundary of its own
         from pprl_spark.operators.matching import mutual_best_match
 
         pairs = _scored_pairs(spark, sf_dir).select("id1", "id2", "sim")
-        return mutual_best_match(pairs, materialize="none").localCheckpoint()
+        return mutual_best_match(pairs).localCheckpoint()
 
     return _memoized((_skey(spark), sf_dir, "mutual_best"), build)
 
@@ -506,7 +506,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # per score bin, accepted/true counts plus cumulative
         # precision/recall for "accept this bin or higher" — the table
         # behind the reference's hand-picked abs_cutoff. Truth is the
-        # exact-duplicate text partition via the same two-xxhash64 key
+        # exact-duplicate text partition via the same text_key
         # as dedup_eval (identical to text grouping modulo 2^-128);
         # counted C(n,2) aggregates, no pair enumeration; rides the
         # scored-pair memo.
@@ -514,12 +514,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         pairs = _scored_pairs(spark, sf_dir)
         docs = _docs(spark, sf_dir)
-        norm = F.array_join(TXT.words_col("text"), " ")
-        keyed = docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.xxhash64(norm).alias("fp1"),
-            F.xxhash64(F.lit(1), norm).alias("fp2"),
-        )
+        keyed = docs.select(F.col("doc_id").cast("long").alias("doc_id"), *TXT.text_key("text"))
         return threshold_sweep(pairs, keyed).select(
             "bin", "thr", "n_pairs", "n_true", "cum_pairs", "cum_true",
             "precision", "recall",
@@ -547,12 +542,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         pairs = _scored_pairs(spark, sf_dir)
         docs = _docs(spark, sf_dir)
-        norm = F.array_join(TXT.words_col("text"), " ")
-        keyed = docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.xxhash64(norm).alias("fp1"),
-            F.xxhash64(F.lit(1), norm).alias("fp2"),
-        )
+        keyed = docs.select(F.col("doc_id").cast("long").alias("doc_id"), *TXT.text_key("text"))
         return blocking_eval(pairs, keyed)
 
     def pprl_mutual_best_match(spark, sf_dir):
@@ -1321,12 +1311,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pairs = _minhash_dedup_pairs(spark, sf_dir)
         cc = connected_components(pairs.select("id1", "id2"))
         docs = _docs(spark, sf_dir)
-        norm = F.array_join(TXT.words_col("text"), " ")
-        keyed = docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.xxhash64(norm).alias("fp1"),
-            F.xxhash64(F.lit(1), norm).alias("fp2"),
-        )
+        keyed = docs.select(F.col("doc_id").cast("long").alias("doc_id"), *TXT.text_key("text"))
         truth = keyed.groupBy("fp1", "fp2").agg(F.min("doc_id").alias("truth_id"))
         assign = (
             keyed.join(truth, ["fp1", "fp2"])
@@ -1673,21 +1658,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return out.select("doc_id", _floor6(F.col("_q")).alias("quality"))
 
     def dedup_exact(spark, sf_dir):
-        # 128-bit fingerprint (two independent xxhash64s of the normalized
-        # text) as the grouping key: the shuffle carries 16 bytes per doc,
-        # never the document text. The salt goes FIRST in fp2 — Spark's
-        # multi-arg xxhash64 seeds each argument with the running hash, so
-        # xxhash64(norm, 1) would be a function of fp1 (no extra bits);
-        # xxhash64(1, norm) hashes under an independent seed. The oracle
-        # groups by norm_text itself — identical output unless both
-        # independent 64-bit hashes collide (~2^-128)
+        # 128-bit text_key as the grouping key: the shuffle carries 16
+        # bytes per doc, never the document text. The oracle groups by
+        # norm_text itself — identical output unless both independent
+        # 64-bit hashes collide (~2^-128)
         docs = _docs(spark, sf_dir)
-        norm = F.array_join(TXT.words_col("text"), " ")
-        keyed = docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.xxhash64(norm).alias("fp1"),
-            F.xxhash64(F.lit(1), norm).alias("fp2"),
-        )
+        keyed = docs.select(F.col("doc_id").cast("long").alias("doc_id"), *TXT.text_key("text"))
         canon = keyed.groupBy("fp1", "fp2").agg(
             F.min("doc_id").alias("canonical_id"), F.count("*").cast("long").alias("n_copies")
         )
@@ -2122,7 +2098,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = mutual_best_match(
             scored.select("id1", "id2", "score_u", "sim"),
             order_cols=("score_u", "sim"),
-            materialize="none",
         )
         return out.select(
             F.col("id1").cast("long"),

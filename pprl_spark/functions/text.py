@@ -37,6 +37,24 @@ def words_col(text: Column | str) -> Column:
     return F.filter(F.split(F.lower(F.trim(c)), r"\s+"), lambda w: w != F.lit(""))
 
 
+def text_key(text: Column | str) -> list[Column]:
+    """128-bit normalized-text key ``[fp1, fp2]``: two independent
+    xxhash64s of the space-joined :func:`words_col`.
+
+    Grouping or joining on it moves 16 bytes per document through a
+    shuffle, never the text. The salt goes FIRST in ``fp2``: Spark's
+    multi-arg xxhash64 feeds the running hash forward as the seed for
+    the next argument, so ``xxhash64(norm, 1)`` would be a function of
+    ``xxhash64(norm)`` and buy zero extra bits, while ``xxhash64(1,
+    norm)`` hashes the text under a different running seed. At 128
+    independent bits the birthday-collision odds at 10^12 docs are
+    ~3e-14, so the key stands in for the text itself (an oracle grouping
+    by the normalized text agrees unless both hashes collide).
+    """
+    norm = F.array_join(words_col(text), " ")
+    return [F.xxhash64(norm).alias("fp1"), F.xxhash64(F.lit(1), norm).alias("fp2")]
+
+
 def token_count(text: Column | str) -> Column:
     return F.size(words_col(text))
 

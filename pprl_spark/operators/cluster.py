@@ -375,7 +375,6 @@ def triangle_counts(
     edges: DataFrame,
     src: str = "id1",
     dst: str = "id2",
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """Per-node triangle counts over an undirected graph ->
     (doc_id, n_triangles); nodes in no triangle are absent.
@@ -390,11 +389,9 @@ def triangle_counts(
     LOW-degree endpoint — the hub node of a star contributes no wedges
     because every edge points INTO it. The (deg, id) total order rides
     a struct comparison; two self-joins on slim (src, dst, deg)
-    triples; the oriented edge table is materialized once (same
-    checkpoint|persist|none hatch as the dedup operators).
+    triples; the oriented edge table is ``localCheckpoint``-ed once,
+    so all three of its readers scan the same rows.
     """
-    from pprl_spark.operators.dedup import _materialize
-
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -407,15 +404,12 @@ def triangle_counts(
         .join(deg.select(F.col("u").alias("v"), F.col("d").alias("dv")), "v")
     )
     lo_first = F.struct(F.col("du"), F.col("u")) < F.struct(F.col("dv"), F.col("v"))
-    o = _materialize(
-        ed.select(
-            F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-            F.when(lo_first, F.col("du")).otherwise(F.col("dv")).alias("ds"),
-            F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-            F.when(lo_first, F.col("dv")).otherwise(F.col("du")).alias("dt"),
-        ),
-        materialize,
-    )
+    o = ed.select(
+        F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("s"),
+        F.when(lo_first, F.col("du")).otherwise(F.col("dv")).alias("ds"),
+        F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("t"),
+        F.when(lo_first, F.col("dv")).otherwise(F.col("du")).alias("dt"),
+    ).localCheckpoint()
     w1 = o.select(F.col("s"), F.col("t").alias("b"), F.col("dt").alias("db"))
     w2 = o.select(F.col("s"), F.col("t").alias("c"), F.col("dt").alias("dc"))
     wedges = w1.join(w2, "s").where(
@@ -490,7 +484,6 @@ def pagerank(
     iterations: int = 5,
     damping_pct: int = 85,
     scale: int = 10**12,
-    materialize: str = "checkpoint",
     small_graph_edges: int | None = None,
 ) -> DataFrame:
     """Fixed-point PageRank over an undirected graph ->
@@ -518,15 +511,13 @@ def pagerank(
     near-dup graphs converges in a handful of rounds; node count inside
     one entity is tiny), each iteration is one slim (node, contrib)
     shuffle — map-side-combined integer sums, text never moves — and
-    the per-iteration frame is materialized through the same
-    checkpoint|persist|none hatch as the dedup operators, keeping
-    lineage constant-depth. Undirected degree >= 1 by construction
-    (every node arrives on an edge), so there are no dangling nodes.
+    the undirected edge table and each iteration's rank frame are
+    ``localCheckpoint``-ed, keeping lineage constant-depth. Undirected
+    degree >= 1 by construction (every node arrives on an edge), so
+    there are no dangling nodes.
     Overflow headroom: ``v <= scale`` (mass is conserved minus
     truncation), so ``v * damping_pct <= 8.5e13`` ≪ 2^63.
     """
-    from pprl_spark.operators.dedup import _materialize
-
     if iterations < 1:
         raise ValueError(f"iterations must be positive, got {iterations}")
     if not (0 < damping_pct < 100):
@@ -548,10 +539,9 @@ def pagerank(
         )
     if small_graph_edges and e.count() <= small_graph_edges:
         return _pagerank_driver(e, iterations, damping_pct, scale)
-    und = _materialize(
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
-        materialize,
-    )
+    und = e.unionByName(
+        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).localCheckpoint()
     deg = und.groupBy("u").agg(F.count("*").cast("long").alias("d"))
     nodes = und.select("u").distinct()
     nn = nodes.agg(F.count("*").cast("long").alias("_n"))
@@ -578,7 +568,7 @@ def pagerank(
         summed = contrib.groupBy("node").agg(
             F.sum("_c").cast("long").alias("_s")
         )
-        pr = _materialize(
+        pr = (
             nodes.join(summed, nodes["u"] == summed["node"], "left")
             .join(F.broadcast(nn))
             .select(
@@ -587,8 +577,8 @@ def pagerank(
                     F.expr(f"CAST({base_num} DIV (100 * _n) AS BIGINT)")
                     + F.coalesce(F.col("_s"), F.lit(0))
                 ).cast("long").alias("v"),
-            ),
-            materialize,
+            )
+            .localCheckpoint()
         )
     return (
         pr.join(deg, "u")

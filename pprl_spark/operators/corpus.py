@@ -149,29 +149,24 @@ def tfidf_top_terms(
     w = words_col(text_col)
     # per-row distinct terms with in-place counts: O(distinct * tokens)
     # per document (documents are bounded), zero shuffle for TF
-    from pprl_spark.operators.dedup import _materialize
-
-    # materialized once: both the DF aggregation and the scoring join read
+    # checkpointed once: both the DF aggregation and the scoring join read
     # it, and the per-row O(distinct * tokens) term-count expansion would
     # otherwise run twice (measured ~2x the stage cost at sf0.1)
-    per_doc = _materialize(
-        docs.select(
-            "doc_id",
-            F.size(w).alias("n_tokens"),
-            F.explode(
-                F.transform(
-                    F.array_distinct(w),
-                    lambda d: F.struct(
-                        d.alias("word"),
-                        F.size(F.filter(w, lambda x: x == d)).alias("tf"),
-                    ),
-                )
-            ).alias("t"),
-        ).select(
-            "doc_id", "n_tokens", F.col("t.word").alias("word"), F.col("t.tf").alias("tf")
-        ),
-        "checkpoint",
-    )
+    per_doc = docs.select(
+        "doc_id",
+        F.size(w).alias("n_tokens"),
+        F.explode(
+            F.transform(
+                F.array_distinct(w),
+                lambda d: F.struct(
+                    d.alias("word"),
+                    F.size(F.filter(w, lambda x: x == d)).alias("tf"),
+                ),
+            )
+        ).alias("t"),
+    ).select(
+        "doc_id", "n_tokens", F.col("t.word").alias("word"), F.col("t.tf").alias("tf")
+    ).localCheckpoint()
     df_table = per_doc.groupBy("word").agg(F.count("*").alias("df"))
     if broadcast_idf:
         df_table = F.broadcast(df_table)
@@ -247,16 +242,14 @@ def unigram_surprisals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     carries ≤ |vocab| rows per map partition); the total is a 1-row
     aggregate broadcast back. Lazy — no driver action at construction.
     """
-    from pprl_spark.operators.dedup import _materialize
-
     # two consumers (the grand total and the surprisal projection) read
-    # the word-count table; materialize it or the corpus explode+groupBy
+    # the word-count table; checkpoint it or the corpus explode+groupBy
     # runs twice
-    counts = _materialize(
+    counts = (
         docs.select(F.explode(words_col(text_col)).alias("word"))
         .groupBy("word")
-        .agg(F.count("*").alias("cnt")),
-        "checkpoint",
+        .agg(F.count("*").alias("cnt"))
+        .localCheckpoint()
     )
     total = counts.agg(F.sum("cnt").cast("double").alias("_total"))
     return counts.join(F.broadcast(total)).select(
@@ -571,20 +564,18 @@ def pmi_collocations(
         raise ValueError(f"k must be positive, got {k}")
     from pyspark.sql import Window
 
-    from pprl_spark.operators.dedup import _materialize
-
-    # materialized once: the grand total and the scored projection both
+    # checkpointed once: the grand total and the scored projection both
     # read the bigram-count table, and the total does NOT need the two
     # marginal windows — computing it from the base table keeps the
     # windows to one evaluation (previously the corpus explode+groupBy
     # and both windows ran twice)
-    base_counts = _materialize(
+    base_counts = (
         docs.select(F.explode(bigrams_col(text_col)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("cnt"))
         .withColumn("_w1", F.split(F.col("bigram"), " ").getItem(0))
-        .withColumn("_w2", F.split(F.col("bigram"), " ").getItem(1)),
-        "checkpoint",
+        .withColumn("_w2", F.split(F.col("bigram"), " ").getItem(1))
+        .localCheckpoint()
     )
     counts = base_counts.withColumn(
         "c_left", F.sum("cnt").over(Window.partitionBy("_w1"))
@@ -655,7 +646,6 @@ def duplicated_spans(
     text_col: str = "text",
     n: int = 5,
     min_count: int = 2,
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """Exact substring-duplication spans (granular dedup) ->
     (doc_id, n_tokens, n_dup_tokens, n_spans, dup_fraction).
@@ -695,24 +685,18 @@ def duplicated_spans(
         raise ValueError(f"n must be positive, got {n}")
     if min_count < 2:
         raise ValueError(f"min_count must be >= 2, got {min_count}")
-    from pprl_spark.operators.dedup import _materialize
-
     w = words_col(text_col)
     # the per-gram rolling-hash fold is the expensive kernel and this
     # frame feeds three consumers (the frequency agg, the position
-    # semi-join, and the doc dim) — materialize once or the fold runs
-    # three times (measured ~2x the whole operator at sf0.1); same
-    # checkpoint|persist|none hatch as the dedup operators
-    base = _materialize(
-        docs.select(
-            "doc_id",
-            F.size(w).alias("n_tokens"),
-            F.transform(
-                word_shingles(text_col, n), lambda s: rolling_hash_col(s)
-            ).alias("_hs"),
-        ).where(F.col("n_tokens") > 0),
-        materialize,
-    )
+    # semi-join, and the doc dim) — localCheckpoint it once or the fold
+    # runs three times (measured ~2x the whole operator at sf0.1)
+    base = docs.select(
+        "doc_id",
+        F.size(w).alias("n_tokens"),
+        F.transform(
+            word_shingles(text_col, n), lambda s: rolling_hash_col(s)
+        ).alias("_hs"),
+    ).where(F.col("n_tokens") > 0).localCheckpoint()
 
     occ = base.select(
         "doc_id", "n_tokens", F.posexplode("_hs").alias("pos", "gram")
@@ -776,7 +760,6 @@ def source_divergence(
     docs: DataFrame,
     group_col: str = "source",
     text_col: str = "text",
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """Per-group unigram KL divergence from the corpus distribution ->
     (source, n_tokens, vocab_size, kl_u, kl).
@@ -799,17 +782,15 @@ def source_divergence(
     1-row/`|groups|`-row totals, and a final integer sum per group —
     nothing corpus-sized shuffles twice.
     """
-    from pprl_spark.operators.dedup import _materialize
-
     # four consumers (group totals, word marginals, grand total, the KL
-    # join) read the (group, word) count table — materialize it once or
+    # join) read the (group, word) count table — checkpoint it once or
     # Catalyst re-runs the explode+aggregate per consumer (measured 4x
     # the stage cost at sf0.1)
-    per = _materialize(
+    per = (
         docs.select(F.col(group_col).alias("g"), F.explode(words_col(text_col)).alias("w"))
         .groupBy("g", "w")
-        .agg(F.count("*").cast("long").alias("n_gw")),
-        materialize,
+        .agg(F.count("*").cast("long").alias("n_gw"))
+        .localCheckpoint()
     )
     tot_g = per.groupBy("g").agg(F.sum("n_gw").cast("long").alias("n_g"))
     corpus_w = per.groupBy("w").agg(F.sum("n_gw").cast("long").alias("n_w"))

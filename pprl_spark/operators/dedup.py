@@ -21,30 +21,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pprl_spark.functions.text import shingle_hashes
+from pprl_spark.functions.text import shingle_hashes, text_key
 from pprl_spark.operators.blocking import band_keys, minhash_col
-
-
-def _materialize(df: DataFrame, mode: str) -> DataFrame:
-    """Materialization boundary for a base table consumed by several join
-    arms (signatures/shingles must compute once, not once per consumer).
-
-    ``"checkpoint"`` (default): eager ``localCheckpoint`` — fastest in a
-    single-session run, but it DISCARDS lineage and pins non-replicated
-    RDD blocks, so on a real cluster an executor loss permanently kills
-    downstream actions. ``"persist"``: recoverable cache — recompute on
-    block loss, the right mode for long cluster jobs (callers that want
-    reliable storage should instead write the operator's input as a stage
-    table, ``plans.pipeline``). ``"none"``: no boundary — only safe when
-    the caller has already materialized the input.
-    """
-    if mode == "checkpoint":
-        return df.localCheckpoint()
-    if mode == "persist":
-        return df.persist()
-    if mode == "none":
-        return df
-    raise ValueError(f"materialize must be checkpoint|persist|none, got {mode!r}")
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -53,28 +31,11 @@ def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     Returns (doc_id, canonical_id, n_copies) for documents whose
     normalized text appears more than once; canonical = min id. The
     groupBy is a hash aggregation with map-side partial combine, and the
-    shuffle key is two independent xxhash64s of the normalized text —
-    16 bytes per doc, so the document text itself NEVER moves through a
-    shuffle. Independence matters: Spark's multi-arg xxhash64 feeds the
-    running hash forward as the seed for the next argument, so a salt
-    placed AFTER the text (``xxhash64(norm, 1)``) is a deterministic
-    function of ``xxhash64(norm)`` and buys zero extra bits. Salting
-    FIRST (``xxhash64(1, norm)``) hashes the text under a different
-    running seed, giving a genuinely independent second 64-bit value.
-    At 128 independent bits the birthday-collision odds at 10^12 docs
-    are ~3e-14; a 64-bit key would have to collide at corpus scale,
-    which is why the old shape had to drag ``norm_text`` along as a
-    confirm column.
+    shuffle key is :func:`~pprl_spark.functions.text.text_key` — 16
+    bytes per doc, so the document text itself NEVER moves through a
+    shuffle.
     """
-    norm = F.array_join(
-        F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda w: w != F.lit("")),
-        " ",
-    )
-    keyed = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.xxhash64(norm).alias("fp1"),
-        F.xxhash64(F.lit(1), norm).alias("fp2"),
-    )
+    keyed = df.select(F.col(id_col).alias("doc_id"), *text_key(text_col))
     groups = keyed.groupBy("fp1", "fp2").agg(
         F.min("doc_id").alias("canonical_id"), F.count("*").alias("n_copies")
     )
@@ -138,7 +99,6 @@ def minhash_near_duplicates(
     threshold: float = 0.7,
     bands: int = 8,
     rows_per_band: int = 2,
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs, exact-Jaccard verified: (id1,id2,jaccard).
 
@@ -146,7 +106,7 @@ def minhash_near_duplicates(
     a self-join on the band key (:func:`_key_pairs`), then exact
     shingle-set (n-gram) Jaccard >= ``threshold`` (:func:`_verified`).
     """
-    base, band = minhash_index(df, text_col, id_col, k, bands, rows_per_band, materialize)
+    base, band = minhash_index(df, text_col, id_col, k, bands, rows_per_band)
     return _verified(_key_pairs(band, band, "bk"), base, "sh", _jaccard, "jaccard", threshold)
 
 
@@ -191,7 +151,6 @@ def embedding_near_duplicates(
     n_planes: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via hyperplane-LSH buckets.
 
@@ -215,8 +174,7 @@ def embedding_near_duplicates(
         F.col(id_col).alias("doc_id"),
         F.col(vec_col).alias("v"),
         lsh_bucket_key(F.col(vec_col), dim, n_planes).alias("b0"),
-    )
-    base = _materialize(base, materialize)
+    ).localCheckpoint()
     probes = base.select(
         "doc_id",
         F.explode(
@@ -275,7 +233,6 @@ def winnow_near_duplicates(
     w: int = 4,
     threshold: float = 0.5,
     max_df: int | None = 100,
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """Winnowing-fingerprint near-dup pairs: (id1, id2, overlap).
 
@@ -297,29 +254,24 @@ def winnow_near_duplicates(
     """
     from pprl_spark.functions.text import ordered_shingle_hashes, winnow_select
 
-    # MATERIALIZE (localCheckpoint) the ordered hash array before the
-    # window selection. A select boundary alone is NOT enough: Catalyst's
+    # localCheckpoint the ordered hash array before the window
+    # selection. A select boundary alone is NOT enough: Catalyst's
     # CollapseProject re-inlines the `_h` alias through chained
     # projections (references inside higher-order-function lambdas are
     # not protected), and the inlined interpreted HOF hash transform
     # then re-evaluates once per WINDOW position — O(n²·len) per doc,
-    # measured as a >500s hang at sf0.1 vs ~6s materialized. Same
+    # measured as a >500s hang at sf0.1 vs ~6s checkpointed. Same
     # lesson as the r3 bloom-bitmap stall (BENCH/BASELINE.md).
-    hashed = _materialize(
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            ordered_shingle_hashes(text_col, k).alias("_h"),
-        ),
-        materialize,
-    )
+    hashed = df.select(
+        F.col(id_col).alias("doc_id"),
+        ordered_shingle_hashes(text_col, k).alias("_h"),
+    ).localCheckpoint()
     raw = hashed.select("doc_id", winnow_select(F.col("_h"), w).alias("fps"))
-    # materialize the exploded (doc, fp) table: it feeds BOTH the
+    # checkpoint the exploded (doc, fp) table: it feeds BOTH the
     # document-frequency aggregation (drop set) and the anti-join below,
     # and without a boundary Catalyst re-runs the winnowing selection
     # (an interpreted higher-order transform) once per consumer
-    ex = _materialize(
-        raw.select("doc_id", F.explode("fps").alias("fp")), materialize
-    )
+    ex = raw.select("doc_id", F.explode("fps").alias("fp")).localCheckpoint()
     if max_df is not None:
         # anti-join against the DROP set: hub fingerprints number at most
         # total_occurrences/max_df (each needs >max_df carriers), so the
@@ -334,10 +286,9 @@ def winnow_near_duplicates(
         ex = ex.join(F.broadcast(drop), "fp", "left_anti")
     # re-aggregate the (possibly filtered) per-doc fingerprint sets so
     # the overlap denominator matches the candidate universe exactly
-    base = _materialize(
-        ex.groupBy("doc_id").agg(F.array_sort(F.collect_set("fp")).alias("fps")),
-        materialize,
-    )
+    base = ex.groupBy("doc_id").agg(
+        F.array_sort(F.collect_set("fp")).alias("fps")
+    ).localCheckpoint()
     exf = base.select("doc_id", F.explode("fps").alias("fp"))
     return _verified(_key_pairs(exf, exf, "fp"), base, "fps", _jaccard, "overlap", threshold)
 
@@ -523,7 +474,6 @@ def minhash_index(
     k: int = 3,
     bands: int = 8,
     rows_per_band: int = 2,
-    materialize: str = "checkpoint",
 ) -> tuple[DataFrame, DataFrame]:
     """The MinHash index ``(base(doc_id, sh), band(doc_id, bk))``: k-word
     shingle hashes, their signature (one single-pass aggregate, see
@@ -531,12 +481,12 @@ def minhash_index(
 
     The only builder of the shingle -> signature -> band table:
     :func:`minhash_near_duplicates` self-joins it, and write-once/
-    probe-many callers materialize it ONCE for the corpus (checkpoint
-    here; a stage table / bucketed write in the pipeline) and probe it
-    with every arriving batch via ``delta_near_duplicates`` — the dedup
-    analog of the linkage delta probe
-    (``streaming/incremental.py::delta_candidates``): the corpus is
-    never re-shingled and never re-paired against itself.
+    probe-many callers build it ONCE for the corpus (its base is
+    ``localCheckpoint``-ed here; a stage table / bucketed write in the
+    pipeline) and probe it with every arriving batch via
+    ``delta_near_duplicates`` — the dedup analog of the linkage delta
+    probe (``streaming/incremental.py::delta_candidates``): the corpus
+    is never re-shingled and never re-paired against itself.
     """
     # Filter null text BEFORE the shingle projection, not `size(sh) > 0`
     # after it: predicate pushdown rewrites a filter on a projected alias
@@ -552,8 +502,8 @@ def minhash_index(
             F.col(id_col).alias("doc_id"), shingle_hashes(text_col, k).alias("sh")
         )
         .withColumn("_sig", minhash_col(F.col("sh"), bands * rows_per_band))
+        .localCheckpoint()
     )
-    base = _materialize(base, materialize)
     band = base.select(
         "doc_id",
         F.explode(band_keys(F.col("_sig"), bands, rows_per_band, "b{}:")).alias("bk"),
@@ -570,7 +520,6 @@ def delta_near_duplicates(
     threshold: float = 0.7,
     bands: int = 8,
     rows_per_band: int = 2,
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """Near-dup pairs the ARRIVING batch adds: delta-vs-corpus and
     delta-vs-delta, never corpus-vs-corpus (those are already known).
@@ -588,9 +537,7 @@ def delta_near_duplicates(
     work shrinks from O(corpus bands²) to O(delta-touched bands).
     """
     corpus_base, corpus_band = corpus_index
-    delta_base, delta_band = minhash_index(
-        delta, text_col, id_col, k, bands, rows_per_band, materialize
-    )
+    delta_base, delta_band = minhash_index(delta, text_col, id_col, k, bands, rows_per_band)
     all_band = corpus_band.unionByName(delta_band)
     cand = (
         delta_band.select(F.col("doc_id").alias("ida"), "bk")
@@ -612,7 +559,6 @@ def semantic_duplicates(
     kmeans_iters: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """SemDeDup-style semantic dedup -> (vec_id, cent_id, dup_of, is_dup).
 
@@ -632,7 +578,7 @@ def semantic_duplicates(
     assignment of ``ann.ivf_assign`` (one corpus scan, vectors never
     shuffle for assignment); the within-cluster self-join shuffles on
     cent_id — list sizes are the knob (``n_centroids ~ sqrt(n)`` keeps
-    E[list] ~ sqrt(n)); the assigned table is materialized once so the
+    E[list] ~ sqrt(n)); the assigned table is checkpointed once so the
     quantizer does not recompute per join arm. ``kmeans_iters=0`` keeps
     the deterministic lowest-id quantizer (oracle-checkable);
     ``> 0`` runs sampled Lloyd steps for better-balanced lists.
@@ -660,12 +606,9 @@ def semantic_duplicates(
         vectors, cent, nprobe=1, id_col=id_col, vec_col=vec_col,
         cent_id_col="vec_id", cent_vec_col="embedding",
     )
-    base = _materialize(
-        lists.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"), "cent_id"
-        ),
-        materialize,
-    )
+    base = lists.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"), "cent_id"
+    ).localCheckpoint()
     a = base.select("cent_id", F.col("vec_id").alias("id1"), F.col("v").alias("v1"))
     b = base.select("cent_id", F.col("vec_id").alias("id2"), F.col("v").alias("v2"))
     dup = (

@@ -42,7 +42,6 @@ def pairwise_cluster_eval(
     assign: DataFrame,
     pred_col: str = "entity_id",
     truth_col: str = "truth_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """One-row pairwise P/R/F1 report for a predicted vs truth partition.
 
@@ -52,19 +51,17 @@ def pairwise_cluster_eval(
     the caller (e.g. ``coalesce(entity_id, doc_id)``) so both sides
     partition the same universe.
 
-    ``materialize=True`` (default) persists the contingency table so
-    the two marginal aggregates don't re-scan the corpus-sized input;
-    pass False when the caller already materialized ``assign`` (the
-    escape hatch the dedup operators expose for cluster callers).
+    The contingency table is ``localCheckpoint``-ed so the three
+    aggregates over it don't re-scan the corpus-sized input; unlike a
+    ``persist()``, the checkpoint registers nothing in Spark's cache
+    manager, so no cached table outlives the call.
 
     Output columns: n_items, n_pred_clusters, n_truth_clusters,
     tp_pairs, pred_pairs, truth_pairs, precision, recall, f1.
     """
     joint = assign.groupBy(
         F.col(pred_col).alias("_p"), F.col(truth_col).alias("_t")
-    ).agg(F.count("*").cast("long").alias("_n"))
-    if materialize:
-        joint = joint.persist()
+    ).agg(F.count("*").cast("long").alias("_n")).localCheckpoint()
 
     tp = joint.agg(
         F.sum("_n").cast("long").alias("n_items"),

@@ -170,7 +170,6 @@ def mutual_best_match(
     rounds: int = 1,
     self_linkage: bool = False,
     order_cols: tuple[str, ...] = ("sim",),
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """Keep pairs that are each other's best candidate (rank 1 both ways).
 
@@ -201,7 +200,6 @@ def mutual_best_match(
     assignment by descending similarity, converging toward the Hungarian
     solution on chain conflicts (a's best taken by someone better).
     """
-    from pprl_spark.operators.dedup import _materialize
 
     def one_round(cand: DataFrame) -> DataFrame:
         ob = [F.desc(c) for c in order_cols]
@@ -251,15 +249,13 @@ def mutual_best_match(
 
     select_round = one_round_self if self_linkage else one_round
     # multi-reference shapes (self-linkage symmetrize, residual rounds)
-    # re-scan the pair table several times; without a materialization
-    # boundary Catalyst re-runs the upstream blocked-join lineage once
-    # per reference and the logical plan grows
-    # multiplicatively per round. The single-round two-party window path
-    # references the table exactly once, so it skips the boundary.
-    # Callers that already materialized (memoized checkpoints, stage
-    # tables) pass materialize="none".
+    # re-scan the pair table several times; without a localCheckpoint
+    # Catalyst re-runs the upstream blocked-join lineage once per
+    # reference and the logical plan grows multiplicatively per round.
+    # The single-round two-party window path references the table
+    # exactly once, so it skips the checkpoint.
     if self_linkage or rounds > 1:
-        candidates = _materialize(candidates, materialize)
+        candidates = candidates.localCheckpoint()
     matched = select_round(candidates)
     remaining = candidates
     for _ in range(rounds - 1):

@@ -63,7 +63,6 @@ def jaccard_join(
     id_col: str = "doc_id",
     threshold: float | str = 0.5,
     positional: bool = True,
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """All pairs (id1 < id2) with exact token-set Jaccard >= threshold.
 
@@ -71,15 +70,12 @@ def jaccard_join(
     (dupes are removed here).  Returns
     ``(id1, id2, n1, n2, intersection, jaccard)``.
 
-    ``materialize`` cuts the FOUR evaluations a naive plan performs
-    (prefix pipeline on both sides of the self-join, token arrays on
-    both sides of the verify join) to ONE: the tokenized base and the
-    ranked prefix table are materialized and every join probes the
-    materialized frame.  Same checkpoint|persist|none escape hatch as
-    the dedup operators (persist for cluster callers that need
-    recoverable lineage, none when the caller already materialized).
+    The tokenized base and the ranked prefix table are
+    ``localCheckpoint``-ed, which cuts the FOUR evaluations a naive plan
+    performs (prefix pipeline on both sides of the self-join, token
+    arrays on both sides of the verify join) to ONE: every join probes
+    the checkpointed frame.
     """
-    from pprl_spark.operators.dedup import _materialize
     frac = Fraction(str(threshold))
     num, den = frac.numerator, frac.denominator
     if not 0 < frac <= 1:
@@ -89,12 +85,9 @@ def jaccard_join(
     # pushes the predicate below the projection, re-evaluating the (often
     # expensive — shingle folds) token expression once for the filter and
     # once for the column. Post-checkpoint, size() reads a stored array.
-    base = _materialize(
-        df.select(
-            F.col(id_col).alias("_id"), F.array_distinct(F.col(tokens_col)).alias("_tk")
-        ),
-        materialize,
-    )
+    base = df.select(
+        F.col(id_col).alias("_id"), F.array_distinct(F.col(tokens_col)).alias("_tk")
+    ).localCheckpoint()
     base = base.withColumn("_n", F.size("_tk").cast("long")).filter(F.col("_n") > 0)
 
     ex = base.select("_id", "_n", F.explode("_tk").alias("_t"))
@@ -116,9 +109,10 @@ def jaccard_join(
     # probing prefix n - ceil(t*n) + 1 in exact integers:
     # ceil(num*n/den) = (num*n + den - 1) DIV den
     prefix_len = F.expr(f"_n - ((_n * {num} + {den - 1}) DIV {den}) + 1")
-    pref = _materialize(
-        ranked.filter(F.col("_pos") <= prefix_len).select("_id", "_t", "_n", "_pos"),
-        materialize,
+    pref = (
+        ranked.filter(F.col("_pos") <= prefix_len)
+        .select("_id", "_t", "_n", "_pos")
+        .localCheckpoint()
     )
     # indexing prefix n - ceil(2t/(1+t)*n) + 1 (always <= probing
     # prefix, so it filters the materialized probe-prefix table):
@@ -210,7 +204,6 @@ def containment_join(
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
     threshold: float | str = 0.5,
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """Exact ASYMMETRIC containment join: every (probe, target) pair
     with |P∩T| / |P| >= threshold — "probe is mostly inside target".
@@ -240,18 +233,14 @@ def containment_join(
     num, den = frac.numerator, frac.denominator
     if not 0 < frac <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold!r}")
-    from pprl_spark.operators.dedup import _materialize
 
     def _base(df: DataFrame) -> DataFrame:
-        # materialize before the n > 0 filter — same pushdown-duplication
+        # checkpoint before the n > 0 filter — same pushdown-duplication
         # avoidance as jaccard_join's base
-        mat = _materialize(
-            df.select(
-                F.col(id_col).alias("_id"),
-                F.array_distinct(F.col(tokens_col)).alias("_tk"),
-            ),
-            materialize,
-        )
+        mat = df.select(
+            F.col(id_col).alias("_id"),
+            F.array_distinct(F.col(tokens_col)).alias("_tk"),
+        ).localCheckpoint()
         return mat.withColumn("_n", F.size("_tk").cast("long")).filter(
             F.col("_n") > 0
         )

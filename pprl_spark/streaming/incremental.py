@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from pprl_spark.config import EmbedderConfig
+from pprl_spark.functions.text import text_key
 from pprl_spark.operators.blocking import add_block_keys
 from pprl_spark.operators.candidates import generate_candidates
 from pprl_spark.operators.embedding import embed_documents
@@ -256,8 +257,7 @@ def stream_exact_dedup(
     normalized-text fingerprint across micro-batches.
 
     The streaming twin of ``operators.dedup.exact_duplicates``' keying:
-    the same two independent xxhash64 fingerprints (salt-FIRST second
-    hash — see exact_duplicates for why salt-last buys zero bits) feed
+    the same 128-bit ``functions.text.text_key`` fingerprint feeds
     ``dropDuplicatesWithinWatermark``, so re-crawled/re-ingested copies
     of a document arriving within the watermark are dropped exactly
     once per key while state stays BOUNDED: a fingerprint's state row is
@@ -270,15 +270,10 @@ def stream_exact_dedup(
     one watermark window the surviving doc set equals batch
     first-occurrence dedup over the same input.
     """
-    norm = F.array_join(
-        F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda w: w != F.lit("")),
-        " ",
-    )
     stream = (
         spark.readStream.schema(schema)
         .parquet(input_dir)
-        .withColumn("fp1", F.xxhash64(norm))
-        .withColumn("fp2", F.xxhash64(F.lit(1), norm))
+        .select("*", *text_key("text"))
         .withWatermark("ts", watermark)
     )
     return stream.dropDuplicatesWithinWatermark(["fp1", "fp2"])

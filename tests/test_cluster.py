@@ -194,7 +194,7 @@ def test_pagerank_fixed_point_golden(spark):
     # dominates); integer fixed-point values are exact by construction
     rows = [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13)]
     df = spark.createDataFrame(rows, "id1 long, id2 long")
-    got = {r.doc_id: r for r in pagerank(df, iterations=5, materialize="none").collect()}
+    got = {r.doc_id: r for r in pagerank(df, iterations=5).collect()}
     assert got[2].pr_u > got[1].pr_u == got[3].pr_u
     assert got[10].pr_u > got[11].pr_u == got[12].pr_u == got[13].pr_u
     # exact integer goldens (any drift = a semantics change, not noise)
@@ -216,13 +216,39 @@ def test_pagerank_partitioning_independent(spark):
     df = spark.createDataFrame(rows, "id1 long, id2 long")
     one = sorted(
         (r.doc_id, r.deg, r.pr_u)
-        for r in pagerank(df.repartition(1), iterations=4, materialize="none").collect()
+        for r in pagerank(df.repartition(1), iterations=4).collect()
     )
     many = sorted(
         (r.doc_id, r.deg, r.pr_u)
-        for r in pagerank(df.repartition(13), iterations=4, materialize="none").collect()
+        for r in pagerank(df.repartition(13), iterations=4).collect()
     )
     assert one == many
+
+
+def test_pagerank_driver_equals_distributed(spark):
+    import random
+
+    from pprl_spark.operators.cluster import pagerank
+
+    # small_graph_edges=0 forces the distributed power iteration (the
+    # per-iteration localCheckpoint loop) on graphs the driver fast path
+    # would otherwise take; integer fixed point makes them bit-identical
+    rng = random.Random(3)
+    graphs = [
+        [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13)],
+        list({(rng.randrange(40), rng.randrange(40)) for _ in range(120)}),
+    ]
+    for rows in graphs:
+        df = spark.createDataFrame(rows, "id1 long, id2 long")
+        for iterations in (4, 5):
+            fast, dist = (
+                sorted(
+                    (r.doc_id, r.deg, r.pr_u, r.pr)
+                    for r in pagerank(df, iterations=iterations, **kw).collect()
+                )
+                for kw in ({}, {"small_graph_edges": 0})
+            )
+            assert fast == dist
 
 
 def test_pagerank_validation(spark):
@@ -249,7 +275,7 @@ def test_pagerank_canonical_composition(spark):
         [(1, 2), (2, 3), (10, 11), (10, 12), (10, 13)], "id1 long, id2 long"
     )
     cc = connected_components(edges)
-    pr = pagerank(edges, iterations=5, materialize="none")
+    pr = pagerank(edges, iterations=5)
     w = Window.partitionBy("entity_id").orderBy(F.desc("pr_u"), F.asc("doc_id"))
     top = (
         cc.join(pr.select("doc_id", "pr_u"), "doc_id")

@@ -4,9 +4,9 @@
 (``embedding.bloom_batch``, ``generate_candidates``,
 ``mutual_best_match``), and its near-duplicate queries through the
 ``operators.dedup`` key-join + verify path; these checks run the
-scored-pair, Dice, mutual-best and dedup queries on the sf0.001 tables
-and compare them value-exactly with the closed-form SQL twins, as
-``tools/check_oracles.py`` does.
+scored-pair, Dice, mutual-best, dedup, set-join, graph and corpus
+queries on the sf0.001 tables and compare them value-exactly with the
+closed-form SQL twins, as ``tools/check_oracles.py`` does.
 """
 
 import pytest
@@ -33,6 +33,15 @@ def con():
         "dedup_delta",
         "dedup_winnow",
         "dedup_embedding",
+        "dedup_setjoin",
+        "dedup_containment",
+        "dedup_semantic",
+        "dedup_exact",
+        "dedup_eval",
+        "graph_pagerank",
+        "graph_triangles",
+        "corpus_divergence",
+        "text_dup_spans",
     ],
 )
 def test_entry_query_matches_oracle(spark, con, name):

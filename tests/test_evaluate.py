@@ -46,6 +46,15 @@ def test_big_cluster_no_double_overflow(spark):
     assert r.f1 == 1.0
 
 
+def test_pairwise_cluster_eval_leaves_no_cached_table(spark):
+    # the contingency table is reused by three aggregates; that boundary
+    # must not stay registered in the session's CacheManager
+    spark.catalog.clearCache()
+    df = spark.createDataFrame([(1, 1), (1, 1), (2, 2)], "entity_id long, truth_id long")
+    pairwise_cluster_eval(df).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_threshold_sweep_golden(spark):
     from pprl_spark.operators.evaluate import threshold_sweep
 

@@ -730,9 +730,7 @@ def test_semantic_duplicates_golden(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {
         r.vec_id: r
-        for r in semantic_duplicates(
-            df, threshold=0.99, n_centroids=2, materialize="none"
-        ).collect()
+        for r in semantic_duplicates(df, threshold=0.99, n_centroids=2).collect()
     }
     assert not got[1].is_dup and not got[2].is_dup
     assert got[3].is_dup and got[3].dup_of == 1
@@ -759,9 +757,7 @@ def test_semantic_duplicates_cluster_bounded(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {
         r.vec_id: r
-        for r in semantic_duplicates(
-            df, threshold=0.999, n_centroids=2, materialize="none"
-        ).collect()
+        for r in semantic_duplicates(df, threshold=0.999, n_centroids=2).collect()
     }
     assert got[3].cent_id == 2 and got[4].cent_id == 1
     # the 0.99985-cosine pair (3,4) is invisible across the boundary,

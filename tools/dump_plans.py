@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,6 +32,23 @@ def main() -> None:
     def docs():
         return entry._docs(spark, SF_DIR)
 
+    # patch the CONCRETE DataFrame class (Spark 4's classic implementation
+    # overrides localCheckpoint, so patching the pyspark.sql.DataFrame
+    # parent is a silent no-op)
+    _DF = type(spark.range(0))
+
+    @contextmanager
+    def live_lineage():
+        """localCheckpoint is the identity inside, so an operator called
+        here dumps its live lineage instead of checkpoint scans. Build the
+        inputs outside: memoized stages keep their real checkpoints."""
+        real = _DF.localCheckpoint
+        _DF.localCheckpoint = lambda self, *a, **k: self
+        try:
+            yield
+        finally:
+            _DF.localCheckpoint = real
+
     def build_setjoin():
         from pprl_spark.functions.text import shingle_hashes
         from pprl_spark.operators.setjoin import jaccard_join
@@ -39,7 +57,8 @@ def main() -> None:
             F.col("doc_id").cast("long").alias("doc_id"),
             shingle_hashes("text", k=2).alias("tokens"),
         )
-        return jaccard_join(toks, threshold="0.4", materialize="none")
+        with live_lineage():
+            return jaccard_join(toks, threshold="0.4")
 
     def build_containment():
         from pprl_spark.functions.text import shingle_hashes
@@ -49,17 +68,17 @@ def main() -> None:
             F.col("doc_id").cast("long").alias("doc_id"),
             shingle_hashes("text", k=2).alias("tokens"),
         )
-        return containment_join(
-            toks.where("doc_id % 20 = 0"),
-            toks.where("doc_id % 20 != 0"),
-            threshold="0.6",
-            materialize="none",
-        )
+        with live_lineage():
+            return containment_join(
+                toks.where("doc_id % 20 = 0"), toks.where("doc_id % 20 != 0"), threshold="0.6"
+            )
 
     def build_minhash():
         from pprl_spark.operators.dedup import minhash_near_duplicates
 
-        return minhash_near_duplicates(docs(), k=3, threshold=0.5, materialize="none")
+        d = docs()
+        with live_lineage():
+            return minhash_near_duplicates(d, k=3, threshold=0.5)
 
     def build_block_score():
         return entry._score_block_pairs(entry._blocked(spark, SF_DIR))
@@ -68,33 +87,22 @@ def main() -> None:
         from pprl_spark.operators.matching import mutual_best_match
 
         pairs = entry._scored_pairs(spark, SF_DIR).select("id1", "id2", "sim")
-        try:
-            return mutual_best_match(pairs, materialize="none")
-        except TypeError:  # round-start signature
-            return mutual_best_match(pairs)
+        return mutual_best_match(pairs)
 
     def build_fs_scored():
         # The fs_scored query memoizes itself behind a localCheckpoint,
-        # which would reduce the dumped plan to a checkpoint scan. Patch
-        # localCheckpoint to identity (and bypass the memo) for this one
-        # build so the dump shows the live scoring lineage; the
-        # scored-pairs memo underneath keeps its real checkpoints, which
-        # is the shape the optimization notes discuss (scoring projection
-        # over the memoized pair table).
-        # patch the CONCRETE DataFrame class (Spark 4's classic
-        # implementation overrides localCheckpoint, so patching the
-        # pyspark.sql.DataFrame parent is a silent no-op)
-        _DF = type(docs())
-
-        real_memo, real_ckpt = entry._memoized, _DF.localCheckpoint
+        # which would reduce the dumped plan to a checkpoint scan. Bypass
+        # the memo and build this one stage under live_lineage so the
+        # dump shows the live scoring lineage; the scored-pairs memo
+        # underneath keeps its real checkpoints, which is the shape the
+        # optimization notes discuss (scoring projection over the
+        # memoized pair table).
+        real_memo = entry._memoized
 
         def memo_no_fs(key, build):
             if len(key) >= 3 and key[2] == "fs_scored":
-                _DF.localCheckpoint = lambda self, *a, **k: self
-                try:
+                with live_lineage():
                     return build()
-                finally:
-                    _DF.localCheckpoint = real_ckpt
             return real_memo(key, build)
 
         entry._memoized = memo_no_fs
@@ -102,7 +110,6 @@ def main() -> None:
             return entry.queries()["pprl_fs_scored"](spark, SF_DIR)
         finally:
             entry._memoized = real_memo
-            _DF.localCheckpoint = real_ckpt
 
     def build_fs_match():
         return entry.queries()["pprl_fs_match"](spark, SF_DIR)
@@ -110,10 +117,9 @@ def main() -> None:
     def build_divergence():
         from pprl_spark.operators.corpus import source_divergence
 
-        try:
-            return source_divergence(docs(), materialize="none")
-        except TypeError:  # round-start signature
-            return source_divergence(docs())
+        d = docs()
+        with live_lineage():
+            return source_divergence(d)
 
     def build_tfidf():
         return entry.queries()["text_tfidf"](spark, SF_DIR)
@@ -124,9 +130,9 @@ def main() -> None:
     def build_winnow():
         from pprl_spark.operators.dedup import winnow_near_duplicates
 
-        return winnow_near_duplicates(
-            docs(), k=2, w=4, threshold=0.4, max_df=100, materialize="none"
-        )
+        d = docs()
+        with live_lineage():
+            return winnow_near_duplicates(d, k=2, w=4, threshold=0.4, max_df=100)
 
     def build_scm_scored():
         return entry.queries()["pprl_scm_scored"](spark, SF_DIR)
