@@ -42,6 +42,34 @@ def _heap_bytes(spark, key: str, default: str = "1g") -> int:
         return 2**30
 
 
+def broadcast_fits(
+    spark, nbytes: int, driver_heap: int | None = None, exec_heap: int | None = None
+) -> bool:
+    """The one broadcast budget: a relation of ``nbytes`` in memory may be
+    broadcast iff it fits in 10% of the smaller of driver/executor heap.
+
+    ``driver_heap``/``exec_heap`` (bytes) override the conf reads — for
+    tests (``spark.driver.memory`` is immutable at runtime) and callers
+    that know the real executor sizing better than the conf.
+    """
+    if driver_heap is None:
+        driver_heap = _heap_bytes(spark, "spark.driver.memory")
+    if exec_heap is None:
+        exec_heap = _heap_bytes(spark, "spark.executor.memory", default="0")
+    if exec_heap == 0:
+        # spark.executor.memory is unset. Only in local mode does the
+        # driver JVM double as the executor; on a cluster an unset conf
+        # means Spark's 1g per-executor default, and substituting a large
+        # driver heap here would authorize a broadcast the 1g executors
+        # cannot hold (the exact OOM this bound exists to prevent).
+        master = str(spark.conf.get("spark.master", "") or "")
+        if master.startswith("local"):
+            exec_heap = driver_heap
+        else:
+            exec_heap = 2**30  # Spark's executor-memory default: 1g
+    return nbytes < 0.10 * min(driver_heap, exec_heap)
+
+
 def choose_pair_join_hint(
     spark,
     build_rows: int,
@@ -57,8 +85,8 @@ def choose_pair_join_hint(
     at 400k docs — driver OOM). ``auto`` replaces that guess with a
     counted build side and the *configured* memory:
 
-    - **broadcast** when the estimated in-memory relation fits in 10%
-      of the smaller of driver/executor heap. Bytes/row scales with the
+    - **broadcast** when the estimated in-memory relation fits the
+      :func:`broadcast_fits` budget. Bytes/row scales with the
       Bloom width: the bitmap is ``8*n_words`` B plus a measured ~572 B
       of fixed per-row overhead (key, id, n, hash-relation slots) — the
       calibration point is 700 B/row at bf_size=1024 (n_words=16), the
@@ -81,33 +109,12 @@ def choose_pair_join_hint(
     pool). A strategy whose best case is a tie and whose worst case is a
     wedged stage has no business being chosen automatically; sort-merge
     degrades gracefully (spills) at every scale and parallelism measured.
-
-    ``driver_heap``/``exec_heap`` (bytes) override the conf reads — for
-    tests (``spark.driver.memory`` is immutable at runtime) and callers
-    that know the real executor sizing better than the conf.
     """
-    if driver_heap is None:
-        driver_heap = _heap_bytes(spark, "spark.driver.memory")
-    if exec_heap is None:
-        exec_heap = _heap_bytes(spark, "spark.executor.memory", default="0")
-    if exec_heap == 0:
-        # spark.executor.memory is unset. Only in local mode does the
-        # driver JVM double as the executor; on a cluster an unset conf
-        # means Spark's 1g per-executor default, and substituting a large
-        # driver heap here would authorize a broadcast the 1g executors
-        # cannot hold (the exact OOM this bound exists to prevent).
-        master = str(spark.conf.get("spark.master", "") or "")
-        if master.startswith("local"):
-            exec_heap = driver_heap
-        else:
-            exec_heap = 2**30  # Spark's executor-memory default: 1g
     # bytes/row = bitmap (8*n_words) + measured fixed overhead (~572B of
     # key/id/n plus hash-relation slots); 700B/row at the n_words=16
     # calibration point
     inmem_bytes = build_rows * (8 * n_words + 572)
-    if inmem_bytes < 0.10 * min(driver_heap, exec_heap):
-        return "broadcast"
-    return "merge"
+    return "broadcast" if broadcast_fits(spark, inmem_bytes, driver_heap, exec_heap) else "merge"
 
 
 def _similarity_expr(sim: str):

@@ -291,15 +291,14 @@ def soft_cosine_pairs_native(
     # double array (~8KB at B=1024) PER DOCUMENT of emb1 — corpus-sized
     # (~800MB at 100k docs), exactly the driver-OOM shape candidates.py
     # guards against. One count action on the (materialized) emb1 bounds
-    # the relation; under 10% of the driver heap the broadcast join wins
-    # (measured 5x on the sf0.1 driver suite), above it the join falls to
-    # AQE's shuffle strategy and the projections flow executor-to-executor.
-    from pprl_spark.operators.candidates import _heap_bytes
+    # the relation; inside the shared broadcast budget
+    # (``candidates.broadcast_fits``) the broadcast join wins (measured 5x
+    # on the sf0.1 driver suite), above it the join falls to AQE's shuffle
+    # strategy and the projections flow executor-to-executor.
+    from pprl_spark.operators.candidates import broadcast_fits
 
-    spark = pairs.sparkSession
-    n_docs1 = emb1.count()
-    est_bytes = n_docs1 * (8 * scm.shape[0] + 64)
-    fits = est_bytes < 0.10 * _heap_bytes(spark, "spark.driver.memory")
+    est_bytes = emb1.count() * (8 * scm.shape[0] + 64)
+    fits = broadcast_fits(pairs.sparkSession, est_bytes)
     p1 = scm_projections(emb1, scm).select(
         F.col("doc_id").alias(id1), F.col("scm_proj").alias("_p1"), F.col("scm_norm").alias("_n1")
     )

@@ -11,8 +11,10 @@ killed run resumes after its last finished stage:
     dedup_pairs/clusters/canonical   MinHash near-dup -> CC -> survivor
     kept_docs  deterministic stratified sample of the canonical survivors
 
-Stage economics mirror ``run_dedup``: run-level parameters + the input
-fingerprint gate the whole DAG; stage-LOCAL knobs (trim fraction, drop
+The dedup tail is ``plans.dedup_pipeline.dedup_stages`` — the same
+four stages ``run_dedup`` runs — over ``filtered``, and the run-level
+parameters + the input fingerprint gate the whole DAG
+(``dedup_pipeline.dedup_pipeline``); stage-LOCAL knobs (trim fraction, drop
 set, sampling rates) fold into per-stage salts, so changing the trim
 fraction re-runs only filtered→kept, never the scrub or the vocab.
 
@@ -31,18 +33,15 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pprl_spark.config import EmbedderConfig
 from pprl_spark.functions.text import pii_counts, quality_score, scrub_pii
-from pprl_spark.operators.cluster import clusters_from_matches
 from pprl_spark.operators.corpus import (
     perplexity_buckets,
     quality_trim,
     surprisal_scores,
     unigram_surprisals,
 )
-from pprl_spark.operators.dedup import canonical_documents, minhash_near_duplicates
-from pprl_spark.operators.sampling import stratified_sample
-from pprl_spark.plans.pipeline import ParquetStageIO, Pipeline, _input_fingerprint
+from pprl_spark.plans.dedup_pipeline import dedup_pipeline, dedup_stages
+from pprl_spark.plans.pipeline import Pipeline
 
 
 def run_curation(
@@ -60,7 +59,6 @@ def run_curation(
     sample_default: float = 1.0,
     sample_salt: int = 0,
     strata_col: str = "lang",
-    config: EmbedderConfig | None = None,
 ) -> Pipeline:
     """scrubbed -> vocab -> scored -> filtered -> dedup -> kept_docs.
 
@@ -71,24 +69,9 @@ def run_curation(
     corpus-calibrated cutoff. Both are stage-local (salted): retuning
     them never re-runs the scrub/vocab stages.
     """
-    cfg = config or EmbedderConfig()
-    io = ParquetStageIO(base_dir)
-    params = (
-        f"k={k};thr={threshold};b={bands}x{rows_per_band};"
-        f"in={_input_fingerprint(docs)}"
-    )
-    pipe = Pipeline(
-        spark, cfg, io, run_id,
-        run_params_hash=hashlib.md5(params.encode()).hexdigest()[:16],
-    )
+    pipe = dedup_pipeline(spark, docs, base_dir, run_id, k, threshold, bands, rows_per_band)
     filter_tag = hashlib.md5(
         f"{trim_frac}:{json.dumps(sorted(drop_buckets))}".encode()
-    ).hexdigest()[:12]
-    sample_tag = hashlib.md5(
-        (
-            f"{json.dumps(sample_fractions, sort_keys=True)}:"
-            f"{sample_default}:{sample_salt}:{strata_col}"
-        ).encode()
     ).hexdigest()[:12]
 
     passthrough = [c for c in docs.columns if c not in ("doc_id", "text")]
@@ -132,44 +115,9 @@ def run_curation(
         "filtered", build_filtered, deps=["scored"], salt=filter_tag
     )
 
-    pairs = pipe.stage(
-        "dedup_pairs",
-        lambda: minhash_near_duplicates(
-            filtered, k=k, threshold=threshold, bands=bands, rows_per_band=rows_per_band
-        ),
-        deps=["filtered"],
-        salt=filter_tag,
-    )
-    clusters = pipe.stage(
-        "dedup_clusters",
-        lambda: clusters_from_matches(pairs),
-        deps=["dedup_pairs"],
-        salt=filter_tag,
-    )
-    canonical = pipe.stage(
-        "canonical",
-        lambda: canonical_documents(filtered, clusters),
-        deps=["dedup_clusters"],
-        salt=filter_tag,
-    )
-
-    def build_kept() -> DataFrame:
-        kept = filtered.join(
-            canonical.select(F.col("canonical_id").alias("doc_id")),
-            "doc_id",
-            "left_semi",
-        )
-        if sample_fractions is not None:
-            kept = stratified_sample(
-                kept,
-                strata_col,
-                sample_fractions,
-                default_fraction=sample_default,
-                salt=sample_salt,
-            )
-        return kept
-
-    pipe.stage(
-        "kept_docs", build_kept, deps=["canonical"], salt=f"{filter_tag}:{sample_tag}"
+    dedup_stages(
+        pipe, filtered, k, threshold, bands, rows_per_band,
+        sample_fractions, sample_default, sample_salt, strata_col,
+        deps=["filtered"], salt=filter_tag,
     )
     return pipe

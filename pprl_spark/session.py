@@ -1,16 +1,20 @@
 """SparkSession construction tuned for this engine.
 
-Local-mode settings for tests/bench; on a real cluster the same builder is
-used minus the master/driver-memory overrides (spark-submit supplies them).
-AQE is always on: skewed celebrity blocks at 10^12-document scale are
-re-planned at runtime (skew-join splitting + partition coalescing), which
-complements the explicit key-salting in ``operators.blocking``.
+Plain ``python`` runs (tests, perfbench, tools) get a ``local[N]`` master,
+a sized driver heap and the tuning confs below. Under ``spark-submit``
+(``PYSPARK_GATEWAY_PORT`` set) the launcher's ``--master``,
+``--driver-memory`` and ``--conf`` values win, and the already-running
+driver JVM's heap and flags are left alone. AQE is always on: skewed
+celebrity blocks at 10^12-document scale are re-planned at runtime
+(skew-join splitting + partition coalescing), which complements the
+explicit key-salting in ``operators.blocking``.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -20,9 +24,17 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
+    launcher: dict[str, str | None] = {}
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # spark-submit started the driver JVM: its heap and JVM flags are
+        # fixed (so never set here, which would only misreport them to the
+        # heap-sized broadcast budget) and every key it set wins
+        SparkContext._ensure_initialized()
+        launcher = {"spark.driver.memory": None, "spark.driver.extraJavaOptions": None}
+        launcher.update(SparkConf().getAll())
+    master = launcher.get("spark.master") or master or f"local[{cpus}]"
     n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
-    n_threads = cpus if n in ("*", "") else int(n)
+    n_threads = int(n) if n.isdigit() else cpus
     if shuffle_partitions is None:
         # Partition count must follow DATA VOLUME, not a universal
         # multiplier: at 100k docs/source, 4x partitions-per-thread wins
@@ -36,42 +48,44 @@ def get_spark(
         # (tools/_scale_job.py) — on a real cluster, size to
         # data-bytes/partition (~128MB), not to core count.
         shuffle_partitions = n_threads
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    defaults = {
+        "spark.master": master,
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         # Keep the heap LEAN: in this container a larger heap is strictly
         # slower when headroom exists (30k-doc linkage, local[32]: 2g ->
         # 35s, 8g -> 86s, 16g -> 104s — fresh-page faults + GC dwarf the
         # work), while 16+ threads allocating Arrow batches on 2g hit
         # GCLocker starvation. Empirical table from the 100k-doc sweep:
         # <=8 threads -> 2g, >8 -> 5g. Override via PPRL_DRIVER_MEMORY.
-        .config(
-            "spark.driver.memory",
-            os.environ.get("PPRL_DRIVER_MEMORY", "2g" if n_threads <= 8 else "5g"),
-        )
+        "spark.driver.memory": os.environ.get(
+            "PPRL_DRIVER_MEMORY", "2g" if n_threads <= 8 else "5g"
+        ),
         # Long-lived local sessions accumulate broadcast/checkpoint blocks
         # whose cleanup waits on driver GC (ContextCleaner is weak-ref
         # driven); the default 30min periodic GC lets a multi-query bench
         # session build memory pressure that intermittently doubles a
         # query's wall time. 2min bounds the drift.
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
+        "spark.cleaner.periodicGC.interval": "2min",
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
         # Arrow's JNI critical sections starve G1 allocations under load
         # ("Retried waiting for GCLocker too often"); raising the retry
         # budget is the standard mitigation (JDK-8192647 era guidance)
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100",
-        )
-    )
+        "spark.driver.extraJavaOptions": (
+            "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100"
+        ),
+    }
+    builder = SparkSession.builder
+    for key, value in defaults.items():
+        if key not in launcher:
+            builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -94,12 +94,7 @@ def delta_candidates(
     return cross_norm.unionByName(within.select("id1", "id2", "block_key_hash", "sim"))
 
 
-def delta_match(
-    prior_pairs: DataFrame,
-    new_pairs: DataFrame,
-    rounds: int = 1,
-    self_linkage: bool = True,
-) -> DataFrame:
+def delta_match(prior_pairs: DataFrame, new_pairs: DataFrame) -> DataFrame:
     """Re-rank the stored pair table plus the delta's pairs.
 
     ``prior_pairs``: the scored self-candidate table of the corpus (a
@@ -120,7 +115,7 @@ def delta_match(
     """
     cols = ["id1", "id2", "block_key_hash", "sim"]
     all_pairs = prior_pairs.select(*cols).unionByName(new_pairs.select(*cols))
-    return mutual_best_match(all_pairs, rounds=rounds, self_linkage=self_linkage)
+    return mutual_best_match(all_pairs, self_linkage=True)
 
 
 def stream_embed(

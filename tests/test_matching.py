@@ -172,6 +172,22 @@ def test_choose_pair_join_hint_scales_with_bloom_width(spark):
     ) == "merge"
 
 
+def _fake_cluster_conf(spark, monkeypatch):
+    """A cluster master with a 32g driver and spark.executor.memory unset."""
+    real_get = spark.conf.get
+
+    def fake_get(key, *default):
+        if key == "spark.master":
+            return "spark://cluster-master:7077"
+        if key == "spark.driver.memory":
+            return "32g"
+        if key == "spark.executor.memory":
+            return default[0] if default else None  # unset on the cluster
+        return real_get(key, *default)
+
+    monkeypatch.setattr(spark.conf, "get", fake_get)
+
+
 def test_choose_pair_join_hint_cluster_unset_executor_memory(spark, monkeypatch):
     """On a cluster with spark.executor.memory unset, the bound must use
     Spark's 1g executor default — NOT the (possibly huge) driver heap,
@@ -179,21 +195,36 @@ def test_choose_pair_join_hint_cluster_unset_executor_memory(spark, monkeypatch)
     from pprl_spark.operators import candidates as C
 
     G = 2**30
-    real_get = spark.conf.get
-
-    def fake_get(key, default=None):
-        if key == "spark.master":
-            return "spark://cluster-master:7077"
-        if key == "spark.executor.memory":
-            return default  # unset on the cluster
-        return real_get(key, default)
-
-    monkeypatch.setattr(spark.conf, "get", fake_get)
+    _fake_cluster_conf(spark, monkeypatch)
     # 3M rows * 700B = 2.1GB: fits 10% of a 32g driver heap (3.2g) but
     # must be demoted to merge against the 1g executor default (0.1g)
     assert C.choose_pair_join_hint(spark, 3_000_000, driver_heap=32 * G) == "merge"
     # tiny build still broadcasts under the 1g executor bound
     assert C.choose_pair_join_hint(spark, 100_000, driver_heap=32 * G) == "broadcast"
+
+
+def test_scm_broadcast_uses_executor_budget(spark, monkeypatch):
+    """The trained-SCM projection join shares the pair join's broadcast
+    budget: a table inside 10% of a 32g driver heap but past 10% of the
+    cluster's 1g default executor heap must not be broadcast."""
+    import numpy as np
+
+    from pprl_spark.operators.scm import soft_cosine_pairs_native
+
+    # 250k docs * (8*64 + 64) B = 144MB: under 10% of the local 2g test
+    # heap and of a 32g driver, over 10% of a 1g executor
+    emb = spark.range(250_000).select(
+        F.col("id").cast("string").alias("doc_id"), F.array(F.lit(0)).alias("bf_indices")
+    )
+    pairs = spark.createDataFrame([("0", "1")], "id1 string, id2 string")
+
+    def broadcasts() -> bool:
+        out = soft_cosine_pairs_native(pairs, emb, emb, np.eye(64))
+        return "strategy=broadcast" in out._jdf.queryExecution().analyzed().toString()
+
+    assert broadcasts()  # local mode: the driver JVM is the executor
+    _fake_cluster_conf(spark, monkeypatch)
+    assert not broadcasts()
 
 
 def test_mutual_best_self_linkage_one_to_one(spark):
