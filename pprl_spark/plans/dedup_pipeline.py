@@ -70,14 +70,12 @@ def dedup_stages(
             f"{sample_default}:{sample_salt}:{strata_col}"
         ).encode()
     ).hexdigest()[:12]
-    pairs = pipe.stage(
-        "dedup_pairs",
-        lambda: minhash_near_duplicates(
+    def build_pairs() -> DataFrame:
+        return minhash_near_duplicates(
             docs, k=k, threshold=threshold, bands=bands, rows_per_band=rows_per_band
-        ),
-        deps=deps,
-        salt=salt,
-    )
+        )
+
+    pairs = pipe.stage("dedup_pairs", build_pairs, deps=deps, salt=salt)
     clusters = pipe.stage(
         "dedup_clusters",
         lambda: clusters_from_matches(pairs),
