@@ -67,27 +67,20 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best ``cos`` rows, ranked 1..k (ties: lower vec_id)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k: (query_id, vec_id, cos, rank)."""
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cvec"))
+    q = queries.select("query_id", F.col("embedding").alias("qvec"))
+    c = corpus.select("vec_id", F.col("embedding").alias("cvec"))
     scored = c.crossJoin(F.broadcast(q)).select(
         "query_id", "vec_id", cosine(F.col("qvec"), F.col("cvec")).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def _hyperplane(dim: int, j: int) -> list[float]:
@@ -114,23 +107,18 @@ def ivf_assign(
     centroids: DataFrame,
     nprobe: int = 1,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cent_id_col: str | None = None,
-    cent_vec_col: str | None = None,
 ) -> DataFrame:
     """Assign each vector to its ``nprobe`` nearest centroids by cosine.
 
     The IVF coarse-quantization step: centroids are a small broadcast dim
-    table, the assignment is a broadcast join + per-vector ranking window
-    over n_centroids rows — one corpus scan, no shuffle of the vectors
-    themselves. Returns (id, vec, cent_id, cent_rank).
+    table of (cent_id, cent_vec), the assignment is a broadcast join +
+    per-vector ranking window over n_centroids rows — one corpus scan, no
+    shuffle of the vectors themselves. Returns (id, embedding, cent_id,
+    cent_rank).
     """
-    c = centroids.select(
-        F.col(cent_id_col or id_col).alias("cent_id"),
-        F.col(cent_vec_col or vec_col).alias("cent_vec"),
-    )
+    c = centroids.select("cent_id", "cent_vec")
     scored = vectors.select(
-        F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v")
+        F.col(id_col).alias("_vid"), F.col("embedding").alias("_v")
     ).crossJoin(F.broadcast(c)).withColumn(
         "_cs", cosine(F.col("_v"), F.col("cent_vec"))
     )
@@ -140,20 +128,14 @@ def ivf_assign(
         .where(F.col("cent_rank") <= nprobe)
         .select(
             F.col("_vid").alias(id_col),
-            F.col("_v").alias(vec_col),
+            F.col("_v").alias("embedding"),
             "cent_id",
             "cent_rank",
         )
     )
 
 
-def _lloyd_centroids(
-    corpus: DataFrame,
-    n_centroids: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
+def _lloyd_centroids(corpus: DataFrame, n_centroids: int, iters: int) -> DataFrame:
     """Deterministic sampled k-means refinement of the coarse quantizer.
 
     Collects a bounded, deterministic sample (the ``min(100·k, 100k)``
@@ -167,13 +149,8 @@ def _lloyd_centroids(
     import numpy as np
 
     sample_n = min(100 * n_centroids, 100_000)
-    rows = (
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy("_id")
-        .limit(sample_n)
-        .collect()
-    )
-    X = np.asarray([r["_v"] for r in rows], dtype=np.float64)
+    rows = corpus.select("vec_id", "embedding").orderBy("vec_id").limit(sample_n).collect()
+    X = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
     Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     # a small corpus (or the sample cap) can yield fewer sample vectors
     # than requested centroids; clamp so the seed slice and the Lloyd /
@@ -190,7 +167,31 @@ def _lloyd_centroids(
     spark = corpus.sparkSession
     return spark.createDataFrame(
         [(int(j), [float(x) for x in C[j]]) for j in range(n_centroids)],
-        "vec_id long, embedding array<double>",
+        "cent_id long, cent_vec array<double>",
+    )
+
+
+def _quantizer(
+    corpus: DataFrame, n_centroids: int | None, kmeans_iters: int
+) -> DataFrame:
+    """The IVF coarse quantizer as (cent_id, cent_vec).
+
+    ``n_centroids=None`` derives ~sqrt(corpus count) via
+    :func:`auto_n_centroids` (one count action — cheap on a materialized
+    corpus table). ``kmeans_iters=0`` keeps the deterministic seed-sample
+    quantizer — the ``n_centroids`` lowest-id corpus vectors (TakeOrdered,
+    no full sort), which keeps the IVF paths oracle-checkable; ``> 0``
+    runs that many sampled Lloyd steps (:func:`_lloyd_centroids`, still
+    fully deterministic) for better-balanced lists and higher recall.
+    """
+    if n_centroids is None:
+        n_centroids = auto_n_centroids(corpus.count())
+    if kmeans_iters > 0:
+        return _lloyd_centroids(corpus, n_centroids, kmeans_iters)
+    return (
+        corpus.select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec"))
+        .orderBy("cent_id")
+        .limit(n_centroids)
     )
 
 
@@ -201,9 +202,6 @@ def ivf_topk(
     n_centroids: int | None = None,
     nprobe: int = 4,
     kmeans_iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """IVF approximate top-k: inverted-list search via a coarse quantizer.
 
@@ -213,45 +211,22 @@ def ivf_topk(
     with ~nprobe/n_centroids of it, and the lists are the natural
     partitioning key for the corpus table (write bucketed by cent_id).
 
-    ``n_centroids=None`` derives ~sqrt(corpus count) via
-    :func:`auto_n_centroids` (one count action — cheap on a materialized
-    corpus table). ``kmeans_iters=0`` keeps the deterministic seed-sample
-    quantizer — the ``n_centroids`` lowest-id corpus vectors (TakeOrdered,
-    no full sort), which keeps this path oracle-checkable; ``> 0`` runs
-    that many sampled Lloyd steps (:func:`_lloyd_centroids`, still fully
-    deterministic) for better-balanced lists and higher recall. The
-    quantizer's *quality* affects recall only; the inverted-list
-    mechanics — the part that must scale — are identical either way.
+    ``n_centroids`` and ``kmeans_iters`` pick the quantizer
+    (:func:`_quantizer`). The quantizer's *quality* affects recall only;
+    the inverted-list mechanics — the part that must scale — are
+    identical either way.
     """
-    if n_centroids is None:
-        n_centroids = auto_n_centroids(corpus.count())
-    if kmeans_iters > 0:
-        cent = _lloyd_centroids(corpus, n_centroids, kmeans_iters, id_col, vec_col)
-    else:
-        cent = (
-            corpus.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-            )
-            .orderBy("vec_id")
-            .limit(n_centroids)
-        )
-    lists = ivf_assign(
-        corpus, cent, nprobe=1, id_col=id_col, vec_col=vec_col,
-        cent_id_col="vec_id", cent_vec_col="embedding",
-    ).select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cvec"), "cent_id")
-    probes = ivf_assign(
-        queries, cent, nprobe=nprobe, id_col=query_id_col, vec_col=vec_col,
-        cent_id_col="vec_id", cent_vec_col="embedding",
-    ).select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qvec"), "cent_id")
-
+    cent = _quantizer(corpus, n_centroids, kmeans_iters)
+    lists = ivf_assign(corpus, cent, nprobe=1).select(
+        "vec_id", F.col("embedding").alias("cvec"), "cent_id"
+    )
+    probes = ivf_assign(queries, cent, nprobe=nprobe, id_col="query_id").select(
+        "query_id", F.col("embedding").alias("qvec"), "cent_id"
+    )
     scored = lists.join(F.broadcast(probes), "cent_id").select(
         "query_id", "vec_id", cosine(F.col("qvec"), F.col("cvec")).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def write_ivf_index(
@@ -259,8 +234,6 @@ def write_ivf_index(
     base_path: str,
     n_centroids: int | None = None,
     kmeans_iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Persist an IVF index: train the quantizer ONCE, write the lists.
 
@@ -286,31 +259,10 @@ def write_ivf_index(
     (``kmeans_iters=0`` = lowest-id seed sample, oracle-checkable;
     ``>0`` = sampled Lloyd refinement).
     """
-    if n_centroids is None:
-        n_centroids = auto_n_centroids(corpus.count())
-    if kmeans_iters > 0:
-        cent = _lloyd_centroids(corpus, n_centroids, kmeans_iters, id_col, vec_col)
-    else:
-        cent = (
-            corpus.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-            )
-            .orderBy("vec_id")
-            .limit(n_centroids)
-        )
-    cent = cent.select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
-    ).localCheckpoint()  # train once: the assignment below broadcasts it twice
+    # train once: the assignment below broadcasts it twice
+    cent = _quantizer(corpus, n_centroids, kmeans_iters).localCheckpoint()
     cent.write.mode("overwrite").parquet(f"{base_path}/centroids")
-    lists = ivf_assign(
-        corpus,
-        cent,
-        nprobe=1,
-        id_col=id_col,
-        vec_col=vec_col,
-        cent_id_col="cent_id",
-        cent_vec_col="cent_vec",
-    ).select("cent_id", F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+    lists = ivf_assign(corpus, cent, nprobe=1).select("cent_id", "vec_id", "embedding")
     # repartition by the partition column first: partitionBy writes one
     # file per (task, value) pair — without it, every task holding rows
     # of every list writes n_centroids tiny files
@@ -322,12 +274,7 @@ def write_ivf_index(
     )
 
 
-def append_ivf_index(
-    new_vectors: DataFrame,
-    base_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
+def append_ivf_index(new_vectors: DataFrame, base_path: str) -> None:
     """Fold newly-landed vectors into a persisted IVF index — the ANN
     analog of the delta-match pattern: assign the DELTA against the
     existing (frozen) centroids and append its list rows; the base
@@ -340,15 +287,7 @@ def append_ivf_index(
     """
     spark = new_vectors.sparkSession
     cent = spark.read.parquet(f"{base_path}/centroids")
-    lists = ivf_assign(
-        new_vectors,
-        cent,
-        nprobe=1,
-        id_col=id_col,
-        vec_col=vec_col,
-        cent_id_col="cent_id",
-        cent_vec_col="cent_vec",
-    ).select("cent_id", F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+    lists = ivf_assign(new_vectors, cent, nprobe=1).select("cent_id", "vec_id", "embedding")
     (
         lists.repartition("cent_id")
         .write.mode("append")
@@ -371,8 +310,6 @@ def ivf_probe(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 4,
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Top-k search against a persisted IVF index — corpus never touched.
 
@@ -385,26 +322,16 @@ def ivf_probe(
     joined. Identical results to :func:`ivf_topk` at the same quantizer
     (equality pinned in tests/test_ann_recall.py).
     """
-    probes = ivf_assign(
-        queries,
-        centroids,
-        nprobe=nprobe,
-        id_col=query_id_col,
-        vec_col=vec_col,
-        cent_id_col="cent_id",
-        cent_vec_col="cent_vec",
-    ).select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qvec"), "cent_id")
+    probes = ivf_assign(queries, centroids, nprobe=nprobe, id_col="query_id").select(
+        "query_id", F.col("embedding").alias("qvec"), "cent_id"
+    )
     probes = probes.localCheckpoint()  # assignment runs once: collect + join
     probed_ids = [r["cent_id"] for r in probes.select("cent_id").distinct().collect()]
     pruned = lists.where(F.col("cent_id").isin(probed_ids))
     scored = pruned.join(F.broadcast(probes), "cent_id").select(
         "query_id", "vec_id", cosine(F.col("qvec"), F.col("embedding")).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def lsh_topk(
@@ -414,9 +341,6 @@ def lsh_topk(
     k: int = 10,
     n_planes: int | None = None,
     multiprobe: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """LSH-bucketed approximate top-k.
 
@@ -429,26 +353,18 @@ def lsh_topk(
     """
     if n_planes is None:
         n_planes = auto_n_planes(corpus.count())
+    vec = F.col("embedding")
     c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("cvec"),
-        lsh_bucket_key(F.col(vec_col), dim, n_planes).alias("bucket"),
+        "vec_id", vec.alias("cvec"), lsh_bucket_key(vec, dim, n_planes).alias("bucket")
     )
-    qkey = lsh_bucket_key(F.col(vec_col), dim, n_planes)
+    qkey = lsh_bucket_key(vec, dim, n_planes)
     probes = [qkey] + (
         [qkey.bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)] if multiprobe else []
     )
     q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.explode(F.array(*probes)).alias("bucket"),
+        "query_id", vec.alias("qvec"), F.explode(F.array(*probes)).alias("bucket")
     )
     scored = c.join(F.broadcast(q), "bucket").select(
         "query_id", "vec_id", cosine(F.col("qvec"), F.col("cvec")).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.dropDuplicates(["query_id", "vec_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored.dropDuplicates(["query_id", "vec_id"]), k)

@@ -168,12 +168,8 @@ def add_block_keys(df: DataFrame, config: EmbedderConfig) -> DataFrame:
     return df.withColumn("block_keys", F.array_distinct(merged)).drop("_sig", "mh_sig")
 
 
-def explode_blocks(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    include_indices: bool = True,
-) -> DataFrame:
-    """(id, [bf_indices,] bf_n, [bf_bitmap,] block_key) — one row per
+def explode_blocks(df: DataFrame, include_indices: bool = True) -> DataFrame:
+    """(doc_id, [bf_indices,] bf_n, [bf_bitmap,] block_key) — one row per
     (document, key).
 
     Projects down to the columns the candidate join actually needs BEFORE
@@ -190,7 +186,7 @@ def explode_blocks(
     The pipeline's block stages use this; keep indices when downstream
     consumers (per-block Hungarian scoring, SCM alignment) read them.
     """
-    cols = [id_col]
+    cols = ["doc_id"]
     if include_indices or "bf_bitmap" not in df.columns:
         cols.append("bf_indices")
     if "bf_bitmap" in df.columns:
@@ -205,9 +201,7 @@ def explode_blocks(
     )
 
 
-def blocking_stats(
-    blocks: DataFrame, key_col: str = "block_key", k: int = 20
-) -> DataFrame:
+def blocking_stats(blocks: DataFrame, k: int = 20) -> DataFrame:
     """Pre-flight skew/quality report for a blocked pair join ->
     top-``k`` blocks by size (rank 1..k) plus one ``'<all>'`` summary
     row (rank 0) carrying the global counts.
@@ -228,9 +222,7 @@ def blocking_stats(
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    sizes = blocks.groupBy(F.col(key_col).alias("block_key")).agg(
-        F.count("*").alias("size")
-    )
+    sizes = blocks.groupBy("block_key").agg(F.count("*").alias("size"))
     pairs = (F.col("size") * (F.col("size") - 1) / 2).cast("long")
     top = (
         sizes.orderBy(F.desc("size"), F.asc("block_key"))
@@ -261,12 +253,7 @@ def blocking_stats(
     )
 
 
-def snm_window_pairs(
-    df: DataFrame,
-    key_col: str,
-    w: int = 4,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def snm_window_pairs(df: DataFrame, key_col: str, w: int = 4) -> DataFrame:
     """Classic sorted-neighborhood pairs -> (id1, id2), id1 < id2.
 
     The Hernandez-Stolfo merge/purge blocking: sort the corpus by
@@ -298,11 +285,11 @@ def snm_window_pairs(
     if w < 2:
         raise ValueError(f"w must be >= 2, got {w}")
     slim = df.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.concat(
             F.col(key_col).cast("string"),
             F.lit("|"),
-            F.lpad(F.col(id_col).cast("string"), 20, "0"),
+            F.lpad(F.col("doc_id").cast("string"), 20, "0"),
         ).alias("_ok"),
     )
     numbered, n = _numbered(slim, "_ok", offset=0, range_by=True)
@@ -327,8 +314,6 @@ def snm_window_pairs(
 def k_anonymity_report(
     blocks: DataFrame,
     ks: tuple[int, ...] = (2, 5, 10),
-    id_col: str = "doc_id",
-    key_col: str = "block_key",
 ) -> DataFrame:
     """Blocking-key k-anonymity audit -> one row per k:
     (k, n_blocks_below, n_entries_below, n_docs_exposed, n_blocks_total,
@@ -351,11 +336,11 @@ def k_anonymity_report(
     if not ks or any(k < 2 for k in ks):
         raise ValueError(f"ks must be >= 2, got {ks}")
     ks = tuple(sorted(set(ks)))
-    sizes = blocks.groupBy(key_col).agg(F.count("*").cast("long").alias("_n"))
+    sizes = blocks.groupBy("block_key").agg(F.count("*").cast("long").alias("_n"))
     docmin = (
-        blocks.select(id_col, key_col)
-        .join(sizes, key_col)
-        .groupBy(id_col)
+        blocks.select("doc_id", "block_key")
+        .join(sizes, "block_key")
+        .groupBy("doc_id")
         .agg(F.min("_n").alias("_minn"))
     )
     sb = sizes.agg(

@@ -29,16 +29,16 @@ from pprl_spark.config import EmbedderConfig
 
 
 def _heap_bytes(spark, key: str, default: str = "1g") -> int:
-    """Parse a Spark memory conf ('5g', '512m', '2048') to bytes."""
-    raw = str(spark.conf.get(key, default) or default).strip().lower()
-    mult = 1
-    for suffix, m in (("k", 2**10), ("m", 2**20), ("g", 2**30), ("t", 2**40)):
-        if raw.endswith(suffix):
-            mult, raw = m, raw[:-1]
-            break
+    """A Spark memory conf in bytes, parsed by Spark's own rule for
+    ``spark.driver.memory``/``spark.executor.memory`` (``JavaUtils.byteStringAsMb``:
+    a bare number is MiB, ``4gb`` = ``4g``); 1 GiB if Spark rejects it."""
+    from py4j.protocol import Py4JJavaError
+
+    raw = str(spark.conf.get(key, default) or default).strip()
+    java_utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
     try:
-        return int(float(raw) * mult)
-    except ValueError:
+        return int(java_utils.byteStringAsMb(raw)) * 2**20
+    except Py4JJavaError:
         return 2**30
 
 
@@ -184,11 +184,7 @@ def bitmap_intersect_count(bm1, bm2, n_words: int | None = None):
     )
 
 
-def cap_blocks(
-    blocks: DataFrame,
-    config: EmbedderConfig,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def cap_blocks(blocks: DataFrame, config: EmbedderConfig) -> DataFrame:
     """Deterministically thin oversized blocks to ~max_block_size docs.
 
     Celebrity keys (a shared surname+postcode at web scale) produce
@@ -225,7 +221,7 @@ def cap_blocks(
         keyed.join(F.broadcast(hot), "_capk", "left")
         .where(
             F.col("_factor").isNull()
-            | (F.pmod(F.xxhash64("_capk", id_col), F.col("_factor")) == 0)
+            | (F.pmod(F.xxhash64("_capk", "doc_id"), F.col("_factor")) == 0)
         )
         .drop("_factor")
     )
@@ -236,7 +232,6 @@ def generate_candidates(
     blocks1: DataFrame,
     blocks2: DataFrame | None,
     config: EmbedderConfig,
-    id_col: str = "doc_id",
     cap: bool = True,
     min_sim: float | None = None,
     allow_uncapped: bool = False,
@@ -260,9 +255,9 @@ def generate_candidates(
     stays, so unwitting callers still hear about the unguarded shape.
     """
     if cap:
-        blocks1 = cap_blocks(blocks1, config, id_col)
+        blocks1 = cap_blocks(blocks1, config)
         if blocks2 is not None:
-            blocks2 = cap_blocks(blocks2, config, id_col)
+            blocks2 = cap_blocks(blocks2, config)
 
     # Join-side representation: hash the block key to a long (8B sort keys
     # instead of string compares) and pack the Bloom vector into a bitmap.
@@ -300,14 +295,14 @@ def generate_candidates(
         return F.xxhash64("block_key")
 
     left = blocks1.select(
-        F.col(id_col).alias("id1"),
+        F.col("doc_id").alias("id1"),
         bk_of(blocks1).alias("_bk"),
         bitmap_of(blocks1).alias("_bm1"),
         n_of(blocks1).alias("_n1"),
     )
     right_src = blocks2 if blocks2 is not None else blocks1
     right = right_src.select(
-        F.col(id_col).alias("id2"),
+        F.col("doc_id").alias("id2"),
         bk_of(right_src).alias("_bk"),
         bitmap_of(right_src).alias("_bm2"),
         n_of(right_src).alias("_n2"),

@@ -4,10 +4,12 @@ Absent from the reference (its Hungarian output is one-to-one,
 `/root/reference/src/pprl/embedder/embedder.py:280-284`); required by the
 north rule to emit entity clusters. Two paths behind one API:
 
-- **counted small-graph fast path** (< ``SMALL_GRAPH_EDGES``): driver
-  union-find with union-by-min — match graphs are usually tiny relative
-  to the corpus, and per-job scheduling dominates distributed iteration
-  at that size;
+- **counted small-graph fast path** (<= ``SMALL_GRAPH_EDGES`` = 8M edges
+  for numeric ids, ``SMALL_GRAPH_EDGES_STR`` = 1M for string ids): numpy
+  min-label relaxation with pointer jumping on the driver, over a dense
+  boolean adjacency when the graph has <= ``DENSE_CC_NODES`` (8,192)
+  nodes — match graphs are usually tiny relative to the corpus, and
+  per-job scheduling dominates distributed iteration at that size;
 - **distributed contraction** (min-star) above it: every round maps each
   node to min(self, neighbors), rewrites edges through the mapping,
   drops self-loops/duplicates and recurses on the CONTRACTED graph.
@@ -153,26 +155,25 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    src: str = "id1",
-    dst: str = "id2",
     max_iterations: int = 50,
     small_graph_edges: int | None = None,
 ) -> DataFrame:
-    """Return ``(doc_id, entity_id)`` with entity_id = min doc_id of the
-    component (lexicographic min for string ids — deterministic).
+    """Edges ``(id1, id2)`` -> ``(doc_id, entity_id)`` with entity_id =
+    min doc_id of the component (lexicographic min for string ids —
+    deterministic).
 
-    ``small_graph_edges``: below this counted edge total the labels come
-    from a driver-side union-find (see :func:`_cc_driver`); ``0``
-    disables the fast path. ``None`` (default) picks by id dtype —
-    ``SMALL_GRAPH_EDGES`` for numeric ids, the 4x lower
-    ``SMALL_GRAPH_EDGES_STR`` for strings, whose driver-dict footprint
-    per entry is ~4x a long's (budget in :func:`_cc_driver`). The count
-    action is cheap — match/pair tables arrive materialized from the
-    upstream stage.
+    ``small_graph_edges``: at or below this counted edge total the
+    labels come from the driver's numpy min-label pointer jumping (see
+    :func:`_cc_driver`); ``0`` disables the fast path. ``None`` (default)
+    picks by id dtype — ``SMALL_GRAPH_EDGES`` (8M) for numeric ids, the
+    lower ``SMALL_GRAPH_EDGES_STR`` (1M) for strings, which sort and
+    searchsorted as object arrays at several times a long's cost
+    (budget in :func:`_cc_driver`). The count action is cheap —
+    match/pair tables arrive materialized from the upstream stage.
     """
     from pyspark.sql.types import StringType
 
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e = edges.select(F.col("id1").alias("u"), F.col("id2").alias("v"))
     if small_graph_edges is None:
         small_graph_edges = (
             SMALL_GRAPH_EDGES_STR
@@ -317,12 +318,7 @@ def clusters_from_matches(matches: DataFrame) -> DataFrame:
     return connected_components(matches.select("id1", "id2"))
 
 
-def incremental_cc(
-    assignment: DataFrame,
-    delta_edges: DataFrame,
-    src: str = "id1",
-    dst: str = "id2",
-) -> DataFrame:
+def incremental_cc(assignment: DataFrame, delta_edges: DataFrame) -> DataFrame:
     """Update an existing cluster ``assignment`` with ``delta_edges``
     WITHOUT re-running connected components over the full pair graph.
 
@@ -343,19 +339,19 @@ def incremental_cc(
 
     Self-loops from intra-cluster delta edges are dropped before CC.
     """
-    a1 = assignment.select(F.col("doc_id").alias(src), F.col("entity_id").alias("_e1"))
-    a2 = assignment.select(F.col("doc_id").alias(dst), F.col("entity_id").alias("_e2"))
+    a1 = assignment.select(F.col("doc_id").alias("id1"), F.col("entity_id").alias("_e1"))
+    a2 = assignment.select(F.col("doc_id").alias("id2"), F.col("entity_id").alias("_e2"))
     contracted = (
-        delta_edges.select(src, dst)
-        .join(a1, src, "left")
-        .join(a2, dst, "left")
+        delta_edges.select("id1", "id2")
+        .join(a1, "id1", "left")
+        .join(a2, "id2", "left")
         .select(
-            F.coalesce("_e1", F.col(src)).alias(src),
-            F.coalesce("_e2", F.col(dst)).alias(dst),
+            F.coalesce("_e1", F.col("id1")).alias("id1"),
+            F.coalesce("_e2", F.col("id2")).alias("id2"),
         )
-        .where(F.col(src) != F.col(dst))
+        .where(F.col("id1") != F.col("id2"))
     )
-    relabel = connected_components(contracted, src=src, dst=dst).select(
+    relabel = connected_components(contracted).select(
         F.col("doc_id").alias("entity_id"), F.col("entity_id").alias("_new")
     )
     updated = assignment.join(relabel, "entity_id", "left").select(
@@ -371,12 +367,8 @@ def incremental_cc(
     return updated.unionByName(fresh)
 
 
-def triangle_counts(
-    edges: DataFrame,
-    src: str = "id1",
-    dst: str = "id2",
-) -> DataFrame:
-    """Per-node triangle counts over an undirected graph ->
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """Per-node triangle counts over an undirected ``(id1, id2)`` graph ->
     (doc_id, n_triangles); nodes in no triangle are absent.
 
     Triangle density separates tight duplicate cliques from chains of
@@ -393,7 +385,7 @@ def triangle_counts(
     so all three of its readers scan the same rows.
     """
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("id1").alias("u"), F.col("id2").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
     )

@@ -57,7 +57,7 @@ def vocab_topk(docs: DataFrame, text_col: str = "text", k: int = 100) -> DataFra
     return counts.orderBy(F.desc("cnt"), F.asc("word")).limit(k)
 
 
-def benchmark_grams(bench: DataFrame, text_col: str = "text", n: int = 5) -> DataFrame:
+def benchmark_grams(bench: DataFrame, n: int = 5) -> DataFrame:
     """Distinct rolling-hash token ``n``-grams of a benchmark set -> (gram).
 
     One row per distinct gram hash. The hash is the SQL-reproducible
@@ -69,9 +69,7 @@ def benchmark_grams(bench: DataFrame, text_col: str = "text", n: int = 5) -> Dat
         bench.select(
             F.explode(
                 F.array_distinct(
-                    F.transform(
-                        word_shingles(text_col, n), lambda s: rolling_hash_col(s)
-                    )
+                    F.transform(word_shingles("text", n), lambda s: rolling_hash_col(s))
                 )
             ).alias("gram")
         )
@@ -82,7 +80,6 @@ def benchmark_grams(bench: DataFrame, text_col: str = "text", n: int = 5) -> Dat
 def decontaminate(
     corpus: DataFrame,
     bench: DataFrame,
-    text_col: str = "text",
     n: int = 5,
     broadcast_benchmark: bool = True,
 ) -> DataFrame:
@@ -101,14 +98,14 @@ def decontaminate(
     ``broadcast_benchmark=False`` to fall back to a shuffle join when the
     benchmark genuinely exceeds executor memory.
     """
-    grams = benchmark_grams(bench, text_col, n)
+    grams = benchmark_grams(bench, n)
     if broadcast_benchmark:
         grams = F.broadcast(grams)
     doc_grams = corpus.select(
         "doc_id",
         F.explode(
             F.array_distinct(
-                F.transform(word_shingles(text_col, n), lambda s: rolling_hash_col(s))
+                F.transform(word_shingles("text", n), lambda s: rolling_hash_col(s))
             )
         ).alias("gram"),
     )
@@ -116,13 +113,7 @@ def decontaminate(
     return hits.groupBy("doc_id").agg(F.count("*").alias("n_shared"))
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_top: int = 3,
-    broadcast_idf: bool = True,
-    n_docs: int | None = None,
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, n_top: int = 3) -> DataFrame:
     """Per-document top-``n_top`` terms by TF-IDF -> (doc_id, word, score, rank).
 
     score = (count(word in doc) / n_tokens(doc)) * (N + 1) / (df(word) + 1)
@@ -136,17 +127,14 @@ def tfidf_top_terms(
     Scale shape: term counts are computed per-row with array expressions
     (no corpus-wide (doc, word) shuffle for TF); the DF table is a
     map-side-combined groupBy over distinct (doc, word) hashes; IDF is
-    broadcast back (vocabulary ≪ corpus; ``broadcast_idf=False`` falls
-    back to a shuffle join for unbounded vocabularies); the final top-n
-    is one window over slim (doc_id, word, score) rows.
+    broadcast back (vocabulary ≪ corpus); the final top-n is one window
+    over slim (doc_id, word, score) rows. N is one count action at
+    construction.
     """
     if n_top <= 0:
         raise ValueError(f"n_top must be positive, got {n_top}")
-    if n_docs is None:
-        # pass n_docs explicitly to keep construction lazy; at 100 TB read
-        # it from table statistics/manifest metadata instead of a scan
-        n_docs = docs.count()
-    w = words_col(text_col)
+    n_docs = docs.count()
+    w = words_col("text")
     # per-row distinct terms with in-place counts: O(distinct * tokens)
     # per document (documents are bounded), zero shuffle for TF
     # checkpointed once: both the DF aggregation and the scoring join read
@@ -168,9 +156,7 @@ def tfidf_top_terms(
         "doc_id", "n_tokens", F.col("t.word").alias("word"), F.col("t.tf").alias("tf")
     ).localCheckpoint()
     df_table = per_doc.groupBy("word").agg(F.count("*").alias("df"))
-    if broadcast_idf:
-        df_table = F.broadcast(df_table)
-    scored = per_doc.join(df_table, "word").select(
+    scored = per_doc.join(F.broadcast(df_table), "word").select(
         "doc_id",
         "word",
         (
@@ -191,7 +177,6 @@ def quality_trim(
     docs: DataFrame,
     quality,
     frac: float = 0.1,
-    exact: bool = True,
 ) -> DataFrame:
     """Drop the bottom ``frac`` quality quantile, threshold calibrated
     FROM the corpus (the way production quality cutoffs are actually
@@ -199,22 +184,15 @@ def quality_trim(
 
     The threshold is a 1-row aggregate broadcast-joined back (lazy — no
     driver action at construction), so the operator is two scans: one to
-    aggregate the cutoff, one codegen'd filter. ``exact=True`` uses
+    aggregate the cutoff, one codegen'd filter. The cutoff is
     ``F.percentile`` (type-7, oracle-reproducible via DuckDB
     ``quantile_cont``) whose single-group agg ships every value to one
     aggregator — the same documented tradeoff as
-    ``events.event_value_percentiles``; flip ``exact=False`` for the
-    ``approx_percentile`` sketch (mergeable, bounded memory) when the
-    corpus is too large to ship, at the cost of oracle exactness.
+    ``events.event_value_percentiles``.
     """
     if not 0.0 <= frac < 1.0:
         raise ValueError(f"frac must be in [0,1), got {frac}")
-    agg = (
-        F.percentile(quality, F.lit(frac))
-        if exact
-        else F.approx_percentile(quality, F.lit(frac), F.lit(10000))
-    )
-    thr = docs.agg(agg.alias("_thr"))
+    thr = docs.agg(F.percentile(quality, F.lit(frac)).alias("_thr"))
     return (
         docs.join(F.broadcast(thr))
         .where(quality >= F.col("_thr"))
@@ -222,7 +200,7 @@ def quality_trim(
     )
 
 
-def unigram_surprisals(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_surprisals(docs: DataFrame) -> DataFrame:
     """Unigram surprisal table -> (word, cnt, surprisal_u).
 
     ``surprisal_u = floor(1e6 * ln(total_tokens / cnt))`` — the
@@ -246,7 +224,7 @@ def unigram_surprisals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # the word-count table; checkpoint it or the corpus explode+groupBy
     # runs twice
     counts = (
-        docs.select(F.explode(words_col(text_col)).alias("word"))
+        docs.select(F.explode(words_col("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
         .localCheckpoint()
@@ -264,8 +242,6 @@ def unigram_surprisals(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def surprisal_scores(
     docs: DataFrame,
     vocab: DataFrame,
-    text_col: str = "text",
-    broadcast_vocab: bool = True,
     oov_surprisal_u: int | None = None,
 ) -> DataFrame:
     """Per-document mean unigram surprisal (CCNet-style LM quality proxy)
@@ -283,9 +259,8 @@ def surprisal_scores(
 
     Scale shape: explode keeps same-document tokens in their partition
     (explode never exchanges), the vocab join is broadcast (vocabulary ≪
-    corpus; ``broadcast_vocab=False`` for unbounded vocabularies), so
-    the per-doc groupBy partially aggregates each document to one slim
-    row map-side before the only shuffle. Documents with zero tokens
+    corpus), so the per-doc groupBy partially aggregates each document to
+    one slim row map-side before the only shuffle. Documents with zero tokens
     have no defined perplexity and are dropped (CCNet drops them too).
 
     ``oov_surprisal_u``: surprisal assigned to tokens absent from
@@ -293,10 +268,8 @@ def surprisal_scores(
     semantics: OOV tokens are skipped entirely and ``n_tokens`` counts
     only scored tokens.
     """
-    v = vocab.select("word", "surprisal_u")
-    if broadcast_vocab:
-        v = F.broadcast(v)
-    ex = docs.select("doc_id", F.explode(words_col(text_col)).alias("word"))
+    v = F.broadcast(vocab.select("word", "surprisal_u"))
+    ex = docs.select("doc_id", F.explode(words_col("text")).alias("word"))
     if oov_surprisal_u is None:
         joined = ex.join(v, "word")
         su = F.col("surprisal_u")
@@ -319,13 +292,12 @@ def surprisal_scores(
 
 def perplexity_buckets(
     scores: DataFrame,
-    score_col: str = "mean_u",
     bounds: tuple[float, float] = (1.0 / 3.0, 2.0 / 3.0),
 ) -> DataFrame:
     """CCNet head/middle/tail split on the corpus' own score quantiles.
 
     Adds ``bucket``: 'head' (lowest surprisal = most fluent), 'middle',
-    'tail'. The cut points are exact type-7 percentiles of ``score_col``
+    'tail'. The cut points are exact type-7 percentiles of ``mean_u``
     (``F.percentile`` ≡ DuckDB ``quantile_cont``, the parity already
     proven by the events_percentiles oracle), computed as a 1-row
     aggregate and broadcast back — two scans, no corpus-sized shuffle.
@@ -334,15 +306,15 @@ def perplexity_buckets(
     interpolation fraction is exactly 0 or the bracketing values are
     equal, and in both cases every engine computes it exactly.
 
-    Same documented tradeoff as :func:`quality_trim` ``exact=True``:
-    the exact percentile ships every score (one slim row per doc) to a
+    Same documented tradeoff as :func:`quality_trim`: the exact
+    percentile ships every score (one slim row per doc) to a
     single aggregator — fine to ~1e9 docs; beyond that switch the cut
     to ``approx_percentile`` and accept a weaker oracle.
     """
     lo, hi = bounds
     if not 0.0 < lo < hi < 1.0:
         raise ValueError(f"bounds must satisfy 0 < lo < hi < 1, got {bounds}")
-    c = F.col(score_col).cast("double")
+    c = F.col("mean_u").cast("double")
     thr = scores.agg(
         F.percentile(c, F.lit(lo)).alias("_lo"),
         F.percentile(c, F.lit(hi)).alias("_hi"),
@@ -359,7 +331,7 @@ def perplexity_buckets(
     )
 
 
-def corpus_rollup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_rollup(docs: DataFrame) -> DataFrame:
     """Corpus composition report: docs / tokens / chars per (lang,
     source) with ROLLUP margins -> per-pair rows, per-lang subtotals,
     and a grand total, disambiguated by ``gid`` (``grouping_id``).
@@ -372,11 +344,11 @@ def corpus_rollup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     sentinel-substituted ('<all>') on the rolled-up levels so the output
     is null-free (margin rows stay distinguishable via ``gid``).
     """
-    n_toks = F.size(words_col(text_col))
+    n_toks = F.size(words_col("text"))
     agg = docs.rollup("lang", "source").agg(
         F.count("*").alias("n_docs"),
         F.sum(n_toks).alias("n_tokens"),
-        F.sum(F.length(text_col)).alias("n_chars"),
+        F.sum(F.length("text")).alias("n_chars"),
         (F.grouping("lang") * 2 + F.grouping("source")).alias("gid"),
     )
     # grouping() is only valid inside the agg; margin sentinels derive
@@ -456,7 +428,7 @@ def bigrams_col(text_col: str | Column) -> Column:
     )
 
 
-def bigram_surprisals(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def bigram_surprisals(docs: DataFrame) -> DataFrame:
     """Bigram conditional-surprisal table -> (bigram, cnt, ctx_cnt,
     surprisal_b).
 
@@ -476,7 +448,7 @@ def bigram_surprisals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from pyspark.sql import Window
 
     counts = (
-        docs.select(F.explode(bigrams_col(text_col)).alias("bigram"))
+        docs.select(F.explode(bigrams_col("text")).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("cnt"))
         .withColumn("_w1", F.split(F.col("bigram"), " ").getItem(0))
@@ -495,12 +467,7 @@ def bigram_surprisals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def bigram_scores(
-    docs: DataFrame,
-    bigram_vocab: DataFrame,
-    text_col: str = "text",
-    broadcast_vocab: bool = True,
-) -> DataFrame:
+def bigram_scores(docs: DataFrame, bigram_vocab: DataFrame) -> DataFrame:
     """Per-document mean bigram conditional surprisal -> (doc_id,
     n_bigrams, sum_b, mean_b).
 
@@ -512,12 +479,11 @@ def bigram_scores(
     the unigram mean, which is blind to word ORDER. Inner-join
     semantics: only in-vocab bigrams are scored and counted; docs with
     no scored bigram are dropped (no defined cross-entropy).
-    ``floor(sum/n)`` exactness argument as in :func:`surprisal_scores`.
+    ``floor(sum/n)`` exactness argument as in :func:`surprisal_scores`;
+    the bigram vocabulary is broadcast the same way.
     """
-    v = bigram_vocab.select("bigram", "surprisal_b")
-    if broadcast_vocab:
-        v = F.broadcast(v)
-    ex = docs.select("doc_id", F.explode(bigrams_col(text_col)).alias("bigram"))
+    v = F.broadcast(bigram_vocab.select("bigram", "surprisal_b"))
+    ex = docs.select("doc_id", F.explode(bigrams_col("text")).alias("bigram"))
     return (
         ex.join(v, "bigram")
         .groupBy("doc_id")
@@ -535,7 +501,6 @@ def bigram_scores(
 
 def pmi_collocations(
     docs: DataFrame,
-    text_col: str = "text",
     min_count: int = 5,
     k: int = 50,
 ) -> DataFrame:
@@ -570,7 +535,7 @@ def pmi_collocations(
     # windows to one evaluation (previously the corpus explode+groupBy
     # and both windows ran twice)
     base_counts = (
-        docs.select(F.explode(bigrams_col(text_col)).alias("bigram"))
+        docs.select(F.explode(bigrams_col("text")).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("cnt"))
         .withColumn("_w1", F.split(F.col("bigram"), " ").getItem(0))
@@ -643,7 +608,6 @@ def equiwidth_histogram(
 
 def duplicated_spans(
     docs: DataFrame,
-    text_col: str = "text",
     n: int = 5,
     min_count: int = 2,
 ) -> DataFrame:
@@ -685,7 +649,7 @@ def duplicated_spans(
         raise ValueError(f"n must be positive, got {n}")
     if min_count < 2:
         raise ValueError(f"min_count must be >= 2, got {min_count}")
-    w = words_col(text_col)
+    w = words_col("text")
     # the per-gram rolling-hash fold is the expensive kernel and this
     # frame feeds three consumers (the frequency agg, the position
     # semi-join, and the doc dim) — localCheckpoint it once or the fold
@@ -693,9 +657,7 @@ def duplicated_spans(
     base = docs.select(
         "doc_id",
         F.size(w).alias("n_tokens"),
-        F.transform(
-            word_shingles(text_col, n), lambda s: rolling_hash_col(s)
-        ).alias("_hs"),
+        F.transform(word_shingles("text", n), lambda s: rolling_hash_col(s)).alias("_hs"),
     ).where(F.col("n_tokens") > 0).localCheckpoint()
 
     occ = base.select(
@@ -759,7 +721,6 @@ def duplicated_spans(
 def source_divergence(
     docs: DataFrame,
     group_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-group unigram KL divergence from the corpus distribution ->
     (source, n_tokens, vocab_size, kl_u, kl).
@@ -787,7 +748,7 @@ def source_divergence(
     # Catalyst re-runs the explode+aggregate per consumer (measured 4x
     # the stage cost at sf0.1)
     per = (
-        docs.select(F.col(group_col).alias("g"), F.explode(words_col(text_col)).alias("w"))
+        docs.select(F.col(group_col).alias("g"), F.explode(words_col("text")).alias("w"))
         .groupBy("g", "w")
         .agg(F.count("*").cast("long").alias("n_gw"))
         .localCheckpoint()

@@ -25,7 +25,7 @@ from pprl_spark.functions.text import shingle_hashes, text_key
 from pprl_spark.operators.blocking import band_keys, minhash_col
 
 
-def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Exact dedup by a 128-bit normalized-text fingerprint.
 
     Returns (doc_id, canonical_id, n_copies) for documents whose
@@ -35,7 +35,7 @@ def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     bytes per doc, so the document text itself NEVER moves through a
     shuffle.
     """
-    keyed = df.select(F.col(id_col).alias("doc_id"), *text_key(text_col))
+    keyed = df.select("doc_id", *text_key("text"))
     groups = keyed.groupBy("fp1", "fp2").agg(
         F.min("doc_id").alias("canonical_id"), F.count("*").alias("n_copies")
     )
@@ -149,8 +149,6 @@ def embedding_near_duplicates(
     dim: int,
     threshold: float = 0.95,
     n_planes: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via hyperplane-LSH buckets.
 
@@ -171,9 +169,9 @@ def embedding_near_duplicates(
     # The base table is checkpointed so the bucket keys compute once,
     # not once per join arm.
     base = vectors.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(vec_col).alias("v"),
-        lsh_bucket_key(F.col(vec_col), dim, n_planes).alias("b0"),
+        F.col("vec_id").alias("doc_id"),
+        F.col("embedding").alias("v"),
+        lsh_bucket_key(F.col("embedding"), dim, n_planes).alias("b0"),
     ).localCheckpoint()
     probes = base.select(
         "doc_id",
@@ -187,8 +185,6 @@ def embedding_near_duplicates(
 
 def simhash_near_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bits: int = 32,
     max_hamming: int = 3,
     band_bits: int = 8,
@@ -200,7 +196,7 @@ def simhash_near_duplicates(
     exactly (pigeonhole) — the banded self-join finds all such pairs
     without a quadratic scan.
     """
-    base = df.select(F.col(id_col).alias("doc_id"), simhash_col(text_col, bits).alias("sig"))
+    base = df.select("doc_id", simhash_col("text", bits).alias("sig"))
     n_bands = bits // band_bits
     mask = (1 << band_bits) - 1
     keys = F.array(
@@ -227,8 +223,6 @@ def simhash_near_duplicates(
 
 def winnow_near_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 3,
     w: int = 4,
     threshold: float = 0.5,
@@ -263,8 +257,7 @@ def winnow_near_duplicates(
     # measured as a >500s hang at sf0.1 vs ~6s checkpointed. Same
     # lesson as the r3 bloom-bitmap stall (BENCH/BASELINE.md).
     hashed = df.select(
-        F.col(id_col).alias("doc_id"),
-        ordered_shingle_hashes(text_col, k).alias("_h"),
+        "doc_id", ordered_shingle_hashes("text", k).alias("_h")
     ).localCheckpoint()
     raw = hashed.select("doc_id", winnow_select(F.col("_h"), w).alias("fps"))
     # checkpoint the exploded (doc, fp) table: it feeds BOTH the
@@ -297,8 +290,6 @@ def canonical_documents(
     docs: DataFrame,
     clusters: DataFrame,
     quality: Column | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Pick ONE representative document per duplicate cluster.
 
@@ -320,9 +311,9 @@ def canonical_documents(
 
     from pprl_spark.functions.text import quality_score
 
-    q = quality if quality is not None else quality_score(text_col)
+    q = quality if quality is not None else quality_score("text")
     members = (
-        docs.select(F.col(id_col).alias("doc_id"), q.alias("_q"))
+        docs.select("doc_id", q.alias("_q"))
         .join(
             clusters.select("doc_id", "entity_id"), "doc_id", "left"
         )
@@ -377,7 +368,7 @@ def span_serialize_col(spans: Column | str) -> Column:
     return F.array_join(F.transform(ordered, lambda s: s["ser"]), SPAN_SEP)
 
 
-def exact_duplicate_spans(df: DataFrame, spans_col: str = "spans", id_col: str = "doc_id") -> DataFrame:
+def exact_duplicate_spans(df: DataFrame) -> DataFrame:
     """Exact dedup of interleaved text+media documents by span-sequence.
 
     The input_hint-shape twin of :func:`exact_duplicates`: two documents
@@ -387,9 +378,9 @@ def exact_duplicate_spans(df: DataFrame, spans_col: str = "spans", id_col: str =
     shuffle key (16 bytes/doc; serialized spans never move), same
     (doc_id, canonical_id, n_copies) contract, duplicates only.
     """
-    ser = span_serialize_col(spans_col)
+    ser = span_serialize_col("spans")
     keyed = df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.xxhash64(ser).alias("fp1"),
         F.xxhash64(F.lit(1), ser).alias("fp2"),
     )
@@ -427,9 +418,7 @@ def _kind_serialize_col(spans: Column | str, text_kind: bool) -> Column:
     return F.array_join(F.transform(ordered, lambda s: s["ser"]), SPAN_SEP)
 
 
-def cross_media_duplicates(
-    df: DataFrame, spans_col: str = "spans", id_col: str = "doc_id"
-) -> DataFrame:
+def cross_media_duplicates(df: DataFrame) -> DataFrame:
     """Re-hosted-document detector over interleaved docs: groups whose
     TEXT span sequence is identical while the media-ref sequence varies
     -> (doc_id, text_canonical_id, n_text_copies, n_media_variants),
@@ -445,10 +434,10 @@ def cross_media_duplicates(
     refs never move); one map-side-combined groupBy computes copies +
     distinct-variant counts; flagged groups join back on the slim key.
     """
-    t = _kind_serialize_col(spans_col, text_kind=True)
-    m = _kind_serialize_col(spans_col, text_kind=False)
+    t = _kind_serialize_col("spans", text_kind=True)
+    m = _kind_serialize_col("spans", text_kind=False)
     keyed = df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.xxhash64(t).alias("tfp1"),
         F.xxhash64(F.lit(1), t).alias("tfp2"),
         F.xxhash64(m).alias("mfp"),
@@ -557,8 +546,6 @@ def semantic_duplicates(
     threshold: float = 0.9,
     n_centroids: int | None = None,
     kmeans_iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic dedup -> (vec_id, cent_id, dup_of, is_dup).
 
@@ -583,31 +570,11 @@ def semantic_duplicates(
     the deterministic lowest-id quantizer (oracle-checkable);
     ``> 0`` runs sampled Lloyd steps for better-balanced lists.
     """
-    from pprl_spark.operators.ann import (
-        _lloyd_centroids,
-        auto_n_centroids,
-        cosine,
-        ivf_assign,
-    )
+    from pprl_spark.operators.ann import _quantizer, cosine, ivf_assign
 
-    if n_centroids is None:
-        n_centroids = auto_n_centroids(vectors.count())
-    if kmeans_iters > 0:
-        cent = _lloyd_centroids(vectors, n_centroids, kmeans_iters, id_col, vec_col)
-    else:
-        cent = (
-            vectors.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-            )
-            .orderBy("vec_id")
-            .limit(n_centroids)
-        )
-    lists = ivf_assign(
-        vectors, cent, nprobe=1, id_col=id_col, vec_col=vec_col,
-        cent_id_col="vec_id", cent_vec_col="embedding",
-    )
-    base = lists.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"), "cent_id"
+    cent = _quantizer(vectors, n_centroids, kmeans_iters)
+    base = ivf_assign(vectors, cent, nprobe=1).select(
+        "vec_id", F.col("embedding").alias("v"), "cent_id"
     ).localCheckpoint()
     a = base.select("cent_id", F.col("vec_id").alias("id1"), F.col("v").alias("v1"))
     b = base.select("cent_id", F.col("vec_id").alias("id2"), F.col("v").alias("v2"))

@@ -38,18 +38,14 @@ def _c2(n: Column) -> Column:
     return F.shiftright((n * (n - F.lit(1))).cast("long"), 1)
 
 
-def pairwise_cluster_eval(
-    assign: DataFrame,
-    pred_col: str = "entity_id",
-    truth_col: str = "truth_id",
-) -> DataFrame:
+def pairwise_cluster_eval(assign: DataFrame) -> DataFrame:
     """One-row pairwise P/R/F1 report for a predicted vs truth partition.
 
     ``assign`` carries one row per item with its predicted cluster label
-    and its ground-truth label (any orderable types).  Items missing
-    from either partition should be pre-assigned singleton labels by
-    the caller (e.g. ``coalesce(entity_id, doc_id)``) so both sides
-    partition the same universe.
+    ``entity_id`` and its ground-truth label ``truth_id`` (any orderable
+    types).  Items missing from either partition should be pre-assigned
+    singleton labels by the caller (e.g. ``coalesce(entity_id, doc_id)``)
+    so both sides partition the same universe.
 
     The contingency table is ``localCheckpoint``-ed so the three
     aggregates over it don't re-scan the corpus-sized input; unlike a
@@ -60,7 +56,7 @@ def pairwise_cluster_eval(
     tp_pairs, pred_pairs, truth_pairs, precision, recall, f1.
     """
     joint = assign.groupBy(
-        F.col(pred_col).alias("_p"), F.col(truth_col).alias("_t")
+        F.col("entity_id").alias("_p"), F.col("truth_id").alias("_t")
     ).agg(F.count("*").cast("long").alias("_n")).localCheckpoint()
 
     tp = joint.agg(
@@ -106,13 +102,20 @@ def pairwise_cluster_eval(
     )
 
 
-def threshold_sweep(
-    pairs: DataFrame,
-    truth: DataFrame,
-    truth_cols: tuple[str, ...] = ("fp1", "fp2"),
-    sim_col: str = "sim",
-    n_bins: int = 20,
-) -> DataFrame:
+def _truth_joined(pairs: DataFrame, truth: DataFrame) -> tuple[DataFrame, Column]:
+    """``pairs`` joined to both ends' (fp1, fp2) truth keys, and the
+    flag that the two ends' keys agree (a true pair)."""
+    t1 = truth.select(
+        F.col("doc_id").alias("id1"), F.col("fp1").alias("_a_fp1"), F.col("fp2").alias("_a_fp2")
+    )
+    t2 = truth.select(
+        F.col("doc_id").alias("id2"), F.col("fp1").alias("_b_fp1"), F.col("fp2").alias("_b_fp2")
+    )
+    is_true = (F.col("_a_fp1") == F.col("_b_fp1")) & (F.col("_a_fp2") == F.col("_b_fp2"))
+    return pairs.join(t1, "id1").join(t2, "id2"), is_true
+
+
+def threshold_sweep(pairs: DataFrame, truth: DataFrame, n_bins: int = 20) -> DataFrame:
     """Threshold calibration table -> (bin, thr, n_pairs, n_true,
     cum_pairs, cum_true, precision, recall), one row per occupied bin.
 
@@ -121,9 +124,10 @@ def threshold_sweep(
     cutoff over score bins and report, for "accept everything scoring in
     this bin or higher", how many pairs are accepted (``cum_pairs``),
     how many are true (``cum_true``), and the resulting precision /
-    recall. ``truth`` is a (doc_id, *truth_cols) table; two docs are a
-    true pair iff their truth keys agree (the exact-duplicate partition,
-    a labeled id, or any ground-truth key).
+    recall. ``pairs`` carries (id1, id2, sim); ``truth`` is a (doc_id,
+    fp1, fp2) table, and two docs are a true pair iff their (fp1, fp2)
+    keys agree (the exact-duplicate partition of
+    ``functions.text.text_key``).
 
     Scale shape: candidate pairs join two slim truth dims (hashes, not
     text), then collapse to ``n_bins + 1`` counted rows — the cumulative
@@ -137,23 +141,11 @@ def threshold_sweep(
     """
     if n_bins <= 0:
         raise ValueError(f"n_bins must be positive, got {n_bins}")
-    tc = list(truth_cols)
-    t1 = truth.select(
-        F.col("doc_id").alias("id1"), *[F.col(c).alias(f"_a_{c}") for c in tc]
-    )
-    t2 = truth.select(
-        F.col("doc_id").alias("id2"), *[F.col(c).alias(f"_b_{c}") for c in tc]
-    )
-    is_true = None
-    for c in tc:
-        eq = F.col(f"_a_{c}") == F.col(f"_b_{c}")
-        is_true = eq if is_true is None else (is_true & eq)
+    joined, is_true = _truth_joined(pairs, truth)
     binned = (
-        pairs.join(t1, "id1")
-        .join(t2, "id2")
-        .select(
+        joined.select(
             F.least(
-                F.floor(F.col(sim_col) * n_bins).cast("long"), F.lit(n_bins)
+                F.floor(F.col("sim") * n_bins).cast("long"), F.lit(n_bins)
             ).alias("bin"),
             is_true.cast("long").alias("_t"),
         )
@@ -163,7 +155,7 @@ def threshold_sweep(
             F.sum("_t").cast("long").alias("n_true"),
         )
     )
-    total_true = truth.groupBy(*tc).agg(
+    total_true = truth.groupBy("fp1", "fp2").agg(
         F.count("*").cast("long").alias("_n")
     ).agg(F.sum(_c2(F.col("_n"))).cast("long").alias("_tot"))
     w = Window.orderBy(F.desc("bin")).rowsBetween(
@@ -193,11 +185,7 @@ def threshold_sweep(
     )
 
 
-def blocking_eval(
-    pairs: DataFrame,
-    truth: DataFrame,
-    truth_cols: tuple[str, ...] = ("fp1", "fp2"),
-) -> DataFrame:
+def blocking_eval(pairs: DataFrame, truth: DataFrame) -> DataFrame:
     """Blocking-scheme evaluation -> ONE row: (n_docs, n_possible_pairs,
     n_cand_pairs, n_true_cand, n_true_total, reduction_ratio,
     pairs_completeness, pairs_quality).
@@ -216,27 +204,13 @@ def blocking_eval(
     ever enumerated beyond the candidates the blocking already produced;
     every ratio is one exactly-rounded int->double division.
     """
-    tc = list(truth_cols)
-    t1 = truth.select(
-        F.col("doc_id").alias("id1"), *[F.col(c).alias(f"_a_{c}") for c in tc]
-    )
-    t2 = truth.select(
-        F.col("doc_id").alias("id2"), *[F.col(c).alias(f"_b_{c}") for c in tc]
-    )
-    is_true = None
-    for c in tc:
-        eq = F.col(f"_a_{c}") == F.col(f"_b_{c}")
-        is_true = eq if is_true is None else (is_true & eq)
-    cand = (
-        pairs.join(t1, "id1")
-        .join(t2, "id2")
-        .agg(
-            F.count("*").cast("long").alias("n_cand_pairs"),
-            F.sum(is_true.cast("long")).cast("long").alias("n_true_cand"),
-        )
+    joined, is_true = _truth_joined(pairs, truth)
+    cand = joined.agg(
+        F.count("*").cast("long").alias("n_cand_pairs"),
+        F.sum(is_true.cast("long")).cast("long").alias("n_true_cand"),
     )
     docs = truth.agg(F.count("*").cast("long").alias("n_docs"))
-    tot = truth.groupBy(*tc).agg(F.count("*").cast("long").alias("_n")).agg(
+    tot = truth.groupBy("fp1", "fp2").agg(F.count("*").cast("long").alias("_n")).agg(
         F.sum(_c2(F.col("_n"))).cast("long").alias("n_true_total")
     )
     n_possible = _c2(F.col("n_docs")).alias("n_possible_pairs")

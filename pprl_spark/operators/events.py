@@ -128,22 +128,19 @@ def top_users_per_type(events: DataFrame, k: int = 3) -> DataFrame:
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    on: str = "user_id",
-    ts_col: str = "ts",
     payload_cols: tuple[str, ...] = ("event_id", "ts", "value"),
-    order_col: str = "event_id",
     strict: bool = False,
-    prefix: str = "asof_",
 ) -> DataFrame:
     """Point-in-time (as-of) left join: for every left row, the latest
     right row with ``right.ts <= left.ts`` (``<`` when ``strict``) and
-    the same ``on`` key; null payload when no such row exists.
+    the same ``user_id``; null payload when no such row exists. Payload
+    columns come back prefixed ``asof_``.
 
     Spark has no native as-of join (pandas ``merge_asof`` is
     single-node), and the naive range join is quadratic per key. This is
     the scale-correct composition: tag the two sides, union, and run ONE
     carry-forward window — ``last(payload, ignorenulls=True)`` over
-    (key) ordered by (ts, side, order_col) — then keep the left rows.
+    (key) ordered by (ts, side, event_id) — then keep the left rows.
     Exactly one exchange (hash by key) and one sort; cost is that of any
     per-key window regardless of how many right rows precede each left
     row. Skew: a hot key serializes its own sort only — same bound as
@@ -152,25 +149,25 @@ def asof_join(
     Tie semantics are part of the contract: at equal ``ts`` the right
     row is visible iff not ``strict`` (side tag orders right before/after
     left), and among right rows sharing (key, ts) the one with the
-    largest ``order_col`` wins — deterministic, and reproducible in
+    largest ``event_id`` wins — deterministic, and reproducible in
     engines with native ASOF (DuckDB) by pre-deduplicating the right
-    side to max(``order_col``) per (key, ts).
+    side to max(``event_id``) per (key, ts).
     """
     r_side = 0 if not strict else 2
     payload = F.struct(*[F.col(c).alias(c) for c in payload_cols])
     r = right.select(
-        F.col(on).alias("_k"),
-        F.col(ts_col).alias("_ts"),
+        F.col("user_id").alias("_k"),
+        F.col("ts").alias("_ts"),
         F.lit(r_side).alias("_side"),
-        F.col(order_col).cast("long").alias("_ord"),
+        F.col("event_id").cast("long").alias("_ord"),
         payload.alias("_payload"),
         F.lit(None).cast(
             left.select(F.struct(*left.columns).alias("s")).schema["s"].dataType
         ).alias("_lrow"),
     )
     l = left.select(
-        F.col(on).alias("_k"),
-        F.col(ts_col).alias("_ts"),
+        F.col("user_id").alias("_k"),
+        F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"),
         F.lit(0).cast("long").alias("_ord"),
         F.lit(None).cast(r.schema["_payload"].dataType).alias("_payload"),
@@ -187,24 +184,20 @@ def asof_join(
         .where(F.col("_side") == 1)
     )
     out_cols = [F.col(f"_lrow.{c}").alias(c) for c in left.columns]
-    out_cols += [
-        F.col(f"_carry.{c}").alias(f"{prefix}{c}") for c in payload_cols
-    ]
+    out_cols += [F.col(f"_carry.{c}").alias(f"asof_{c}") for c in payload_cols]
     return carried.select(*out_cols)
 
 
 def range_join(
     left: DataFrame,
     right: DataFrame,
-    on: str = "user_id",
-    ts_col: str = "ts",
     lower_us: int = -3_600_000_000,
     upper_us: int = 3_600_000_000,
-    payload_cols: tuple[str, ...] = ("event_id", "ts", "value"),
-    prefix: str = "r_",
 ) -> DataFrame:
-    """Interval join: all right rows with the same key whose timestamp
-    falls in ``[left.ts + lower_us, left.ts + upper_us]`` (microseconds).
+    """Interval join: all right rows with the same ``user_id`` whose
+    timestamp falls in ``[left.ts + lower_us, left.ts + upper_us]``
+    (microseconds) -> the left columns, the right row's ``r_event_id``,
+    ``r_ts``, ``r_value``, and ``delta_us``.
 
     The naive plan — equi-join on key, filter the range — materializes
     the full per-key product before filtering: a hot key with n left ×
@@ -229,21 +222,22 @@ def range_join(
     if upper_us <= lower_us:
         raise ValueError(f"empty window: [{lower_us}, {upper_us}]")
     width = upper_us - lower_us
+    payload = ("event_id", "ts", "value")
     r = right.select(
-        F.col(on).alias("_k"),
-        F.expr(f"unix_micros(cast({ts_col} as timestamp))").alias("_rus"),
-        F.expr(f"unix_micros(cast({ts_col} as timestamp)) div {width}").alias("_bin"),
-        *[F.col(c).alias(f"{prefix}{c}") for c in payload_cols],
+        F.col("user_id").alias("_k"),
+        F.expr("unix_micros(cast(ts as timestamp))").alias("_rus"),
+        F.expr(f"unix_micros(cast(ts as timestamp)) div {width}").alias("_bin"),
+        *[F.col(c).alias(f"r_{c}") for c in payload],
     )
     l_cols = [F.col(c) for c in left.columns]
     l = left.select(
         *l_cols,
-        F.col(on).alias("_k"),
-        F.expr(f"unix_micros(cast({ts_col} as timestamp))").alias("_lus"),
+        F.col("user_id").alias("_k"),
+        F.expr("unix_micros(cast(ts as timestamp))").alias("_lus"),
         F.explode(
             F.sequence(
-                F.expr(f"(unix_micros(cast({ts_col} as timestamp)) + ({lower_us})) div {width}"),
-                F.expr(f"(unix_micros(cast({ts_col} as timestamp)) + ({upper_us})) div {width}"),
+                F.expr(f"(unix_micros(cast(ts as timestamp)) + ({lower_us})) div {width}"),
+                F.expr(f"(unix_micros(cast(ts as timestamp)) + ({upper_us})) div {width}"),
             )
         ).alias("_bin"),
     )
@@ -255,21 +249,17 @@ def range_join(
         )
         .withColumn("delta_us", F.col("_rus") - F.col("_lus"))
     )
-    keep = [c for c in left.columns] + [f"{prefix}{c}" for c in payload_cols] + ["delta_us"]
-    return out.select(*keep)
+    return out.select(*left.columns, *[f"r_{c}" for c in payload], "delta_us")
 
 
 def funnel_steps(
     events: DataFrame,
     steps: list[str],
     within: str = "1 hour",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Ordered-funnel analysis: per user, the earliest completion time of
     each step given the previous one, each transition bounded by
-    ``within`` -> (user, t_1..t_k, stage).
+    ``within`` -> (user_id, t_1..t_k, stage).
 
     The product-analytics staple ("view -> click -> purchase inside an
     hour"). No self-join over event pairs: step 1 is a min-aggregate;
@@ -288,19 +278,15 @@ def funnel_steps(
     """
     if len(steps) < 2:
         raise ValueError("funnel needs at least 2 steps")
-    u, ty, ts = F.col(user_col), F.col(type_col), F.col(ts_col)
-    cur = (
-        events.where(ty == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts).alias("t_1"))
-    )
+    ty = F.col("event_type")
+    cur = events.where(ty == steps[0]).groupBy("user_id").agg(F.min("ts").alias("t_1"))
     for i, step in enumerate(steps[1:], start=2):
         prev = F.col(f"t_{i - 1}")
-        nxt = events.where(ty == step).select(u.alias(user_col), ts.alias("_ts"))
+        nxt = events.where(ty == step).select("user_id", F.col("ts").alias("_ts"))
         carry = [f"t_{j}" for j in range(1, i)]
         cur = (
-            cur.join(nxt, user_col, "left")
-            .groupBy(user_col, *carry)
+            cur.join(nxt, "user_id", "left")
+            .groupBy("user_id", *carry)
             .agg(
                 F.min(
                     F.when(
@@ -315,17 +301,13 @@ def funnel_steps(
     for i in range(2, len(steps) + 1):
         stage = stage + F.col(f"t_{i}").isNotNull().cast("int")
     return cur.select(
-        user_col,
+        "user_id",
         *[f"t_{i}" for i in range(1, len(steps) + 1)],
         stage.cast("long").alias("stage"),
     )
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Weekly cohort-retention matrix -> (cohort_week, week_offset,
     n_users): of the users whose FIRST activity fell in cohort_week,
     how many were active again week_offset weeks later.
@@ -339,17 +321,16 @@ def cohort_retention(
     exact integer day-difference DIV 7, so no timezone or float
     boundary can shift a user between cells.
     """
-    u, ts = F.col(user_col), F.col(ts_col)
-    cohort = events.groupBy(user_col).agg(
-        F.date_trunc("week", F.min(ts)).alias("cohort_week")
+    cohort = events.groupBy("user_id").agg(
+        F.date_trunc("week", F.min("ts")).alias("cohort_week")
     )
-    act = events.select(u.alias(user_col), F.date_trunc("week", ts).alias("_aw")).distinct()
-    joined = act.join(cohort, user_col)
+    act = events.select("user_id", F.date_trunc("week", "ts").alias("_aw")).distinct()
+    joined = act.join(cohort, "user_id")
     off = F.expr("CAST(datediff(to_date(_aw), to_date(cohort_week)) DIV 7 AS BIGINT)")
     return (
-        joined.select(user_col, "cohort_week", off.alias("week_offset"))
+        joined.select("user_id", "cohort_week", off.alias("week_offset"))
         .groupBy("cohort_week", "week_offset")
-        .agg(F.count_distinct(F.col(user_col)).alias("n_users"))
+        .agg(F.count_distinct(F.col("user_id")).alias("n_users"))
     )
 
 
@@ -358,8 +339,6 @@ def windowed_anomaly(
     window: str = "1 hour",
     trailing: int = 6,
     min_windows: int = 3,
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Trailing-window anomaly score per (type, window) ->
     (event_type, window_start, n_events, n_prev, mean_u, z_u).
@@ -393,23 +372,21 @@ def windowed_anomaly(
             f"min_windows must be in [1, trailing], got {min_windows}"
         )
     counts = (
-        events.groupBy(
-            F.window(F.col(ts_col), window).alias("_w"), F.col(type_col)
-        )
+        events.groupBy(F.window(F.col("ts"), window).alias("_w"), F.col("event_type"))
         .agg(F.count("*").cast("long").alias("n_events"))
         .select(
-            type_col,
+            "event_type",
             F.unix_timestamp(F.col("_w.start")).alias("window_start"),
             "n_events",
         )
     )
     frame = (
-        Window.partitionBy(type_col)
+        Window.partitionBy("event_type")
         .orderBy("window_start")
         .rowsBetween(-trailing, -1)
     )
     stats = counts.select(
-        type_col,
+        "event_type",
         "window_start",
         "n_events",
         F.count("n_events").over(frame).cast("long").alias("n_prev"),
@@ -426,7 +403,7 @@ def windowed_anomaly(
     ) / npd
     z = (F.col("n_events").cast("double") - mean) / F.sqrt(var)
     return stats.select(
-        F.col(type_col).alias("event_type"),
+        "event_type",
         "window_start",
         "n_events",
         "n_prev",
@@ -438,13 +415,7 @@ def windowed_anomaly(
     )
 
 
-def type_transitions(
-    events: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def type_transitions(events: DataFrame) -> DataFrame:
     """Per-user event-type transition matrix -> (prev_type, event_type,
     n, p), the first-order Markov behavior model.
 
@@ -461,23 +432,23 @@ def type_transitions(
     shuffle sessionization pays), then a map-side-combined count to
     |types|² rows; the row marginal is a window over that tiny frame.
     """
-    byuser = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    byuser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         events.select(
-            user_col,
-            ts_col,
-            id_col,
-            F.col(type_col),
-            F.lag(type_col).over(byuser).alias("prev_type"),
+            "user_id",
+            "ts",
+            "event_id",
+            F.col("event_type"),
+            F.lag("event_type").over(byuser).alias("prev_type"),
         )
         .where(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", type_col)
+        .groupBy("prev_type", "event_type")
         .agg(F.count("*").cast("long").alias("n"))
     )
     row_total = Window.partitionBy("prev_type")
     return pairs.select(
         "prev_type",
-        type_col,
+        "event_type",
         "n",
         (
             F.col("n").cast("double")

@@ -94,18 +94,14 @@ def jaro_winkler_rescore(
     docs1: DataFrame,
     docs2: DataFrame | None,
     field: str,
-    id_col: str = "doc_id",
-    id1: str = "id1",
-    id2: str = "id2",
-    out_col: str = "jw_sim",
     weight: float | None = None,
-    sim_col: str = "sim",
 ) -> DataFrame:
     """Batched Jaro-Winkler scoring over candidate pairs (north star:
     "batched Dice/Jaro-Winkler similarity scoring over candidate pairs
     within salted-key partitions").
 
-    Joins each side's ``field`` string onto the pair table (two
+    Joins each side's ``field`` string (by ``doc_id``) onto the
+    ``(id1, id2)`` pair table (two
     hash-joins on 8-byte-ish ids; the strings never appear in the blocked
     join itself) and scores with the pure-Python Winkler kernel
     (``functions.similarity.jaro_winkler``, bit-parity with DuckDB's
@@ -114,28 +110,28 @@ def jaro_winkler_rescore(
     Python in the driver. ``docs2=None`` means self-linkage (both sides
     drawn from ``docs1``).
 
-    ``weight`` blends the JW score into ``sim_col`` in place:
+    ``weight`` blends the JW score into ``sim`` in place:
     ``sim = (1-weight)*sim + weight*jw`` — the Bloom-set similarity
     carries the evidence from ALL fields while JW sharpens the named
     field (typically a name), which is how the reference's Dice+name
-    pipelines combine signals. With ``weight=None`` the raw ``out_col``
+    pipelines combine signals. With ``weight=None`` the raw ``jw_sim``
     is appended and the caller combines.
     """
     import pandas as pd
 
     from pprl_spark.functions.similarity import jaro_winkler
 
-    s1 = docs1.select(F.col(id_col).alias(id1), F.col(field).alias("_jw_s1"))
+    s1 = docs1.select(F.col("doc_id").alias("id1"), F.col(field).alias("_jw_s1"))
     s2 = (docs2 if docs2 is not None else docs1).select(
-        F.col(id_col).alias(id2), F.col(field).alias("_jw_s2")
+        F.col("doc_id").alias("id2"), F.col(field).alias("_jw_s2")
     )
-    joined = pairs.join(s1, id1).join(s2, id2)
+    joined = pairs.join(s1, "id1").join(s2, "id2")
 
     from pyspark.sql import types as T
 
     schema = T.StructType(
         [f for f in joined.schema.fields if f.name not in ("_jw_s1", "_jw_s2")]
-        + [T.StructField(out_col, T.DoubleType())]
+        + [T.StructField("jw_sim", T.DoubleType())]
     )
     keep_cols = [f.name for f in schema.fields[:-1]]
 
@@ -153,16 +149,15 @@ def jaro_winkler_rescore(
                     v = jaro_winkler(a, b)
                     memo[key] = v
                 out.append(v)
-            yield pdf[keep_cols].assign(**{out_col: out})
+            yield pdf[keep_cols].assign(jw_sim=out)
 
     scored = joined.mapInPandas(kernel, schema)
     if weight is None:
         return scored
     blended = F.coalesce(
-        (1.0 - weight) * F.col(sim_col) + weight * F.col(out_col),
-        F.col(sim_col),
+        (1.0 - weight) * F.col("sim") + weight * F.col("jw_sim"), F.col("sim")
     )
-    return scored.withColumn(sim_col, blended).drop(out_col)
+    return scored.withColumn("sim", blended).drop("jw_sim")
 
 
 def mutual_best_match(
@@ -331,12 +326,7 @@ def _hungarian_max(sim: "list[list[float]]") -> list[tuple[int, int]]:
     return pairs
 
 
-def assignment_match_in_blocks(
-    candidates: DataFrame,
-    resolve_conflicts: bool = True,
-    resolve_rounds: int = 3,
-    self_linkage: bool = False,
-) -> DataFrame:
+def assignment_match_in_blocks(candidates: DataFrame, self_linkage: bool = False) -> DataFrame:
     """Exact optimal assignment within each block via applyInPandas.
 
     Groups the scored pair table by ``block_key``; inside each (small)
@@ -347,14 +337,13 @@ def assignment_match_in_blocks(
 
     A document's candidate pairs can span several blocks, so per-block
     solves may assign the same document twice — violating the reference's
-    global one-to-one contract (`embedder.py:282`). With
-    ``resolve_conflicts`` (default) the per-block assignments are collapsed
-    (max-sim per pair) and passed through ``resolve_rounds`` of greedy
-    mutual-best selection: each round's output is one-to-one by
-    construction and later rounds only see documents unmatched so far, so
-    the final output is GUARANTEED globally one-to-one — safe to chain
-    into ``add_private_index``. Within a block the solution stays
-    Hungarian-optimal; across blocks it is greedy.
+    global one-to-one contract (`embedder.py:282`). So the per-block
+    assignments are collapsed (max-sim per pair) and passed through
+    three rounds of greedy mutual-best selection: each round's output is
+    one-to-one by construction and later rounds only see documents
+    unmatched so far, so the final output is GUARANTEED globally
+    one-to-one — safe to chain into ``add_private_index``. Within a block
+    the solution stays Hungarian-optimal; across blocks it is greedy.
 
     ``self_linkage`` matters for the guarantee: with pairs drawn from ONE
     table (``id1 < id2``), pass True so the conflict resolution treats the
@@ -401,9 +390,7 @@ def assignment_match_in_blocks(
     solved = candidates.groupBy("block_key").applyInPandas(
         solve, schema="id1 string, id2 string, sim double, block_key string"
     )
-    if not resolve_conflicts:
-        return solved
     deduped = solved.groupBy("id1", "id2").agg(
         F.max("sim").alias("sim"), F.min("block_key").alias("block_key")
     )
-    return mutual_best_match(deduped, rounds=resolve_rounds, self_linkage=self_linkage)
+    return mutual_best_match(deduped, rounds=3, self_linkage=self_linkage)

@@ -128,12 +128,10 @@ def add_private_index(
     df2: DataFrame,
     matches: DataFrame,
     size_assumed: int = 10_000,
-    colname: str = "private_index",
-    id_col: str = "doc_id",
     seed: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    assert colname not in df1.columns and colname not in df2.columns, (
-        "The chosen colname for the private index is already in use."
+    assert "private_index" not in df1.columns and "private_index" not in df2.columns, (
+        "The private_index column is already in use."
     )
     if seed is None:
         seed = secrets.randbits(63)
@@ -152,14 +150,14 @@ def add_private_index(
     # assignment slots: matched pairs first, then left-only, then right-only
     pairs, n_pairs = _numbered(m, "id1", offset=0)
     left_only, n_left = _numbered(
-        df1.select(F.col(id_col).alias("id1")).join(
+        df1.select(F.col("doc_id").alias("id1")).join(
             pairs.select("id1"), "id1", "left_anti"
         ),
         "id1",
         offset=n_pairs,
     )
     right_only, n_right = _numbered(
-        df2.select(F.col(id_col).alias("id2")).join(
+        df2.select(F.col("doc_id").alias("id2")).join(
             pairs.select("id2"), "id2", "left_anti"
         ),
         "id2",
@@ -183,12 +181,12 @@ def add_private_index(
     )
     pool, _ = _numbered(pool_src, "_ord", offset=0, shuffle_col="_ord")
     pool = pool.where(F.col("slot") < total).select(
-        "slot", F.col("id").alias(colname)
+        "slot", F.col("id").alias("private_index")
     )
 
     idx1 = pairs.select("id1", "slot").unionByName(left_only).join(pool, "slot").drop("slot")
     idx2 = pairs.select("id2", "slot").unionByName(right_only).join(pool, "slot").drop("slot")
 
-    out1 = df1.join(idx1.withColumnRenamed("id1", id_col), id_col)
-    out2 = df2.join(idx2.withColumnRenamed("id2", id_col), id_col)
+    out1 = df1.join(idx1.withColumnRenamed("id1", "doc_id"), "doc_id")
+    out2 = df2.join(idx2.withColumnRenamed("id2", "doc_id"), "doc_id")
     return out1, out2

@@ -46,7 +46,6 @@ def bm25_topk(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    text_col: str = "text",
 ) -> DataFrame:
     """BM25 top-``k`` docs per query -> (query_id, doc_id, score_u, rk).
 
@@ -63,7 +62,7 @@ def bm25_topk(
         raise ValueError("queries must be non-empty")
     vocab = _vocab(queries)
 
-    postings, stats, idf = _postings_stats_idf(docs, vocab, text_col)
+    postings, stats, idf = _postings_stats_idf(docs, vocab)
     qterms = F.broadcast(
         postings.sparkSession.createDataFrame(
             [(qid, t) for qid, q in sorted(queries.items()) for t in
@@ -109,13 +108,13 @@ def bm25_topk(
         .where(F.col("rk") <= k)
     )
 
-def _postings_stats_idf(docs, vocab, text_col):
+def _postings_stats_idf(docs, vocab):
     """Shared corpus pass: vocabulary-filtered postings, the 1-row
     (n_docs, total_tokens) stats frame, and the micro-nat IDF table.
     ``bm25_topk`` and ``bm25_index`` MUST score through the identical
     expression tree, so both build it here."""
     base = docs.select(
-        "doc_id", words_col(text_col).alias("_w")
+        "doc_id", words_col("text").alias("_w")
     ).where(F.size("_w") > 0)
     stats = base.agg(
         F.count("*").cast("long").alias("_nd"),
@@ -167,7 +166,7 @@ def _vocab(queries):
     return vocab
 
 
-def bm25_index(docs, queries, text_col: str = "text"):
+def bm25_index(docs, queries):
     """Build the standing retrieval index for a query workload ->
     ``{"idf": {term: idf_u}, "nd": int, "tt": int}``.
 
@@ -181,7 +180,7 @@ def bm25_index(docs, queries, text_col: str = "text"):
     if not queries:
         raise ValueError("queries must be non-empty")
     vocab = _vocab(queries)
-    postings, stats, idf = _postings_stats_idf(docs, vocab, text_col)
+    postings, stats, idf = _postings_stats_idf(docs, vocab)
     s = stats.collect()[0]
     return {
         "idf": {r["term"]: r["idf_u"] for r in idf.collect()},
@@ -196,8 +195,6 @@ def bm25_score_stream(
     queries: dict[str, str],
     k1: float = 1.2,
     b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Score arriving documents against a standing BM25 index ->
     (doc_id, query_id, score_u); rows only for docs matching >= 1 term.
@@ -217,7 +214,7 @@ def bm25_score_stream(
         raise ValueError("queries must be non-empty")
     _vocab(queries)
     idf_map, nd, tt = index["idf"], index["nd"], index["tt"]
-    w = words_col(text_col)
+    w = words_col("text")
     dl = F.size(w).cast("double")
     avgdl = F.lit(float(tt)) / F.lit(float(nd))
     norm = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / avgdl)
@@ -258,8 +255,8 @@ def bm25_score_stream(
     if not per_query:
         raise ValueError("no query term appears in the index")
     return (
-        docs.select(F.col(id_col), F.explode(F.array(*per_query)).alias("_q"))
+        docs.select("doc_id", F.explode(F.array(*per_query)).alias("_q"))
         .where(F.col("_q._m"))
-        .select(id_col, F.col("_q.query_id").alias("query_id"),
+        .select("doc_id", F.col("_q.query_id").alias("query_id"),
                 F.col("_q.score_u").alias("score_u"))
     )

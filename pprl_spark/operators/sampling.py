@@ -36,13 +36,11 @@ def _keep(key: Column, salt: int, rate_ppm: Column) -> Column:
     return F.pmod(sample_hash(key, salt), F.lit(PPM)) < rate_ppm
 
 
-def hash_sample(
-    df: DataFrame, fraction: float, salt: int = 0, key_col: str = "doc_id"
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, deterministically by key hash."""
+def hash_sample(df: DataFrame, fraction: float, salt: int = 0) -> DataFrame:
+    """Keep ~``fraction`` of rows, deterministically by ``doc_id`` hash."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0,1], got {fraction}")
-    return df.where(_keep(F.col(key_col), salt, F.lit(int(round(fraction * PPM)))))
+    return df.where(_keep(F.col("doc_id"), salt, F.lit(int(round(fraction * PPM)))))
 
 
 def stratified_sample(
@@ -51,10 +49,9 @@ def stratified_sample(
     fractions: dict[str, float],
     default_fraction: float = 0.0,
     salt: int = 0,
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Per-stratum deterministic rates (e.g. keep 100% of rare languages,
-    5% of English): rows in stratum s survive iff hash(key) mod 1e6 <
+    5% of English): rows in stratum s survive iff hash(doc_id) mod 1e6 <
     rate(s). The rate map compiles to a chained CASE — a pure projection,
     so the whole operator is one codegen'd filter with NO join and NO
     shuffle; a rate map too large for a CASE chain (thousands of strata)
@@ -72,7 +69,7 @@ def stratified_sample(
         cond = F.col(strata_col) == F.lit(k)
         expr = F.when(cond, ppm) if expr is None else expr.when(cond, ppm)
     rate_col = rate if expr is None else expr.otherwise(rate)
-    return df.where(_keep(F.col(key_col), salt, rate_col))
+    return df.where(_keep(F.col("doc_id"), salt, rate_col))
 
 
 def stratified_sample_table(
@@ -81,9 +78,6 @@ def stratified_sample_table(
     strata_col: str,
     default_fraction: float = 0.0,
     salt: int = 0,
-    key_col: str = "doc_id",
-    stratum_col: str = "stratum",
-    fraction_col: str = "fraction",
 ) -> DataFrame:
     """:func:`stratified_sample` for rate maps too large for a CASE chain
     (thousands of strata — e.g. per-domain rates): the rates arrive as a
@@ -93,14 +87,14 @@ def stratified_sample_table(
     table — rows still never shuffle.
     """
     r = rates.select(
-        F.col(stratum_col).alias(strata_col),
+        F.col("stratum").alias(strata_col),
         # round like the dict variant's int(round(...)) — a truncating
         # cast would disagree by 1 ppm on fractions like 0.123456
-        F.round(F.col(fraction_col) * PPM).cast("long").alias("_rate_ppm"),
+        F.round(F.col("fraction") * PPM).cast("long").alias("_rate_ppm"),
     )
     joined = df.join(F.broadcast(r), strata_col, "left")
     rate = F.coalesce(F.col("_rate_ppm"), F.lit(int(round(default_fraction * PPM))))
-    return joined.where(_keep(F.col(key_col), salt, rate)).drop("_rate_ppm")
+    return joined.where(_keep(F.col("doc_id"), salt, rate)).drop("_rate_ppm")
 
 
 def token_budget_sample(
@@ -110,7 +104,6 @@ def token_budget_sample(
     n_tokens_col: str,
     default_budget: int | None = None,
     salt: int = 0,
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Downsample each stratum to an EXPECTED token budget — the
     training-mixture primitive ("2B tokens of en, 500M of zh, ...").
@@ -140,9 +133,7 @@ def token_budget_sample(
         # integer ppm / PPM round-trips exactly through
         # stratified_sample's int(round(f * PPM))
         fractions[s] = ppm / PPM
-    return stratified_sample(
-        df, strata_col, fractions, default_fraction=0.0, salt=salt, key_col=key_col
-    )
+    return stratified_sample(df, strata_col, fractions, default_fraction=0.0, salt=salt)
 
 
 def pair_review_sample(
@@ -150,9 +141,6 @@ def pair_review_sample(
     k_per_bin: int = 5,
     n_bins: int = 20,
     salt: int = 0,
-    sim_col: str = "sim",
-    id1: str = "id1",
-    id2: str = "id2",
 ) -> DataFrame:
     """Deterministic clerical-review sample -> (bin, id1, id2, sim, rk).
 
@@ -178,19 +166,19 @@ def pair_review_sample(
     from pyspark.sql import Window
 
     h = sample_hash(
-        F.concat(F.col(id1).cast("string"), F.lit(":"), F.col(id2).cast("string")),
+        F.concat(F.col("id1").cast("string"), F.lit(":"), F.col("id2").cast("string")),
         salt,
     )
     binned = pairs.select(
-        F.least(F.floor(F.col(sim_col) * n_bins).cast("long"), F.lit(n_bins)).alias(
+        F.least(F.floor(F.col("sim") * n_bins).cast("long"), F.lit(n_bins)).alias(
             "bin"
         ),
-        F.col(id1),
-        F.col(id2),
-        F.col(sim_col),
+        "id1",
+        "id2",
+        "sim",
         h.alias("_h"),
     )
-    w = Window.partitionBy("bin").orderBy("_h", id1, id2)
+    w = Window.partitionBy("bin").orderBy("_h", "id1", "id2")
     return (
         binned.withColumn("rk", F.row_number().over(w).cast("long"))
         .where(F.col("rk") <= k_per_bin)
@@ -201,7 +189,6 @@ def pair_review_sample(
 def entity_consistent_split(
     df: DataFrame,
     splits: list[tuple[str, float]],
-    entity_col: str = "entity_id",
     salt: int = 0,
 ) -> DataFrame:
     """Assign a leakage-free train/valid/test split -> df + ``split``.
@@ -209,12 +196,12 @@ def entity_consistent_split(
     Splitting by document hash leaks: near-duplicate documents land on
     both sides of the train/eval boundary, and the model is scored on
     its own training data (the contamination the dedup literature keeps
-    measuring). Splitting by the ENTITY key instead — the connected-
-    component canonical id of the near-dup graph — puts every member of
-    a duplicate group in the same split by construction. Membership is
-    the usual content-addressed hash (pure function of entity + salt):
-    reproducible across runs, partitionings and resumes, auditable
-    after the fact.
+    measuring). Splitting by the ENTITY key ``entity_id`` instead — the
+    connected-component canonical id of the near-dup graph — puts every
+    member of a duplicate group in the same split by construction.
+    Membership is the usual content-addressed hash (pure function of
+    entity + salt): reproducible across runs, partitionings and resumes,
+    auditable after the fact.
 
     ``splits`` is an ordered [(name, fraction), ...] list; fractions
     must sum to 1 within 1 ppm (resolution of the hash buckets). The
@@ -228,7 +215,7 @@ def entity_consistent_split(
         raise ValueError(
             f"split fractions must sum to 1 (got {total_ppm / PPM:.6f})"
         )
-    h = F.pmod(sample_hash(F.col(entity_col), salt), F.lit(PPM))
+    h = F.pmod(sample_hash(F.col("entity_id"), salt), F.lit(PPM))
     acc = 0
     expr = None
     for name, frac in splits[:-1]:
@@ -244,14 +231,13 @@ def weighted_sample(
     df: DataFrame,
     prob_col: str | Column,
     salt: int = 0,
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Keep each row with ITS OWN probability, deterministically.
 
     The soft-filtering step of CCNet-style curation: instead of a hard
     quality cutoff, each document survives with probability equal to a
     per-row score in [0, 1] (quality, language weight, freshness decay —
-    any computed column). Membership is ``hash(key, salt) % 1e6 <
+    any computed column). Membership is ``hash(doc_id, salt) % 1e6 <
     floor(p * 1e6)`` — a pure function of (key, salt, p): reproducible
     across partitionings/resumes, auditable after the fact, and exactly
     mirrorable in SQL (unlike ``rand()``-based Bernoulli sampling, which
@@ -263,4 +249,4 @@ def weighted_sample(
     rate = F.floor(
         F.least(F.lit(1.0), F.greatest(F.lit(0.0), p)) * F.lit(float(PPM))
     ).cast("long")
-    return df.where(F.pmod(sample_hash(F.col(key_col), salt), F.lit(PPM)) < rate)
+    return df.where(F.pmod(sample_hash(F.col("doc_id"), salt), F.lit(PPM)) < rate)

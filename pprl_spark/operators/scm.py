@@ -222,10 +222,8 @@ def load_scm(path: str, size: int) -> np.ndarray:
     return A
 
 
-def scm_projections(
-    docs: DataFrame, scm: np.ndarray, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, scm_proj array<double>, scm_norm double): per-DOC trained-SCM
+def scm_projections(docs: DataFrame, scm: np.ndarray) -> DataFrame:
+    """(doc_id, scm_proj array<double>, scm_norm double): per-DOC trained-SCM
     precomputation.
 
     ``scm_proj[j] = sum_{i in ix} A[i, j]`` — the projected row of the
@@ -235,7 +233,7 @@ def scm_projections(
     that survives 10^12 candidate pairs.
     """
     A = np.asarray(scm, dtype=np.float64)
-    id_field = docs.schema[id_col]
+    id_field = docs.schema["doc_id"]
     schema = T.StructType(
         [id_field, T.StructField("scm_proj", T.ArrayType(T.DoubleType())),
          T.StructField("scm_norm", T.DoubleType())]
@@ -249,9 +247,9 @@ def scm_projections(
                 p = A[ia].sum(axis=0)
                 projs.append(p)
                 norms.append(float(np.sqrt(p[ia].sum())))
-            yield pd.DataFrame({id_col: pdf[id_col], "scm_proj": projs, "scm_norm": norms})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "scm_proj": projs, "scm_norm": norms})
 
-    return docs.select(id_col, "bf_indices").mapInPandas(kernel, schema)
+    return docs.select("doc_id", "bf_indices").mapInPandas(kernel, schema)
 
 
 def soft_cosine_score_col(proj1: Column, indices2: Column, norm1: Column, norm2: Column) -> Column:
@@ -276,8 +274,6 @@ def soft_cosine_pairs_native(
     emb1: DataFrame,
     emb2: DataFrame,
     scm: np.ndarray,
-    id1: str = "id1",
-    id2: str = "id2",
     out_col: str = "sim",
 ) -> DataFrame:
     """Score (id1, id2) pairs with a trained SCM, Python-per-doc only.
@@ -300,18 +296,20 @@ def soft_cosine_pairs_native(
     est_bytes = emb1.count() * (8 * scm.shape[0] + 64)
     fits = broadcast_fits(pairs.sparkSession, est_bytes)
     p1 = scm_projections(emb1, scm).select(
-        F.col("doc_id").alias(id1), F.col("scm_proj").alias("_p1"), F.col("scm_norm").alias("_n1")
+        F.col("doc_id").alias("id1"),
+        F.col("scm_proj").alias("_p1"),
+        F.col("scm_norm").alias("_n1"),
     )
     n2 = scm_projections(emb2, scm).select(
-        F.col("doc_id").alias(id2), F.col("scm_norm").alias("_n2")
+        F.col("doc_id").alias("id2"), F.col("scm_norm").alias("_n2")
     )
     if fits:
         p1, n2 = F.broadcast(p1), F.broadcast(n2)
-    ix2 = emb2.select(F.col("doc_id").alias(id2), F.col("bf_indices").alias("_ix2"))
+    ix2 = emb2.select(F.col("doc_id").alias("id2"), F.col("bf_indices").alias("_ix2"))
     out = (
-        pairs.join(ix2, id2)
-        .join(p1, id1)
-        .join(n2, id2)
+        pairs.join(ix2, "id2")
+        .join(p1, "id1")
+        .join(n2, "id2")
         .withColumn(out_col, soft_cosine_score_col(F.col("_p1"), F.col("_ix2"), F.col("_n1"), F.col("_n2")))
     )
     return out.drop("_p1", "_n1", "_n2", "_ix2")

@@ -59,14 +59,12 @@ from pyspark.sql import functions as F
 
 def jaccard_join(
     df: DataFrame,
-    tokens_col: str = "tokens",
-    id_col: str = "doc_id",
     threshold: float | str = 0.5,
     positional: bool = True,
 ) -> DataFrame:
     """All pairs (id1 < id2) with exact token-set Jaccard >= threshold.
 
-    ``df`` carries one row per doc with an array column of tokens
+    ``df`` carries one row per ``doc_id`` with an array column ``tokens``
     (dupes are removed here).  Returns
     ``(id1, id2, n1, n2, intersection, jaccard)``.
 
@@ -86,7 +84,7 @@ def jaccard_join(
     # expensive — shingle folds) token expression once for the filter and
     # once for the column. Post-checkpoint, size() reads a stored array.
     base = df.select(
-        F.col(id_col).alias("_id"), F.array_distinct(F.col(tokens_col)).alias("_tk")
+        F.col("doc_id").alias("_id"), F.array_distinct(F.col("tokens")).alias("_tk")
     ).localCheckpoint()
     base = base.withColumn("_n", F.size("_tk").cast("long")).filter(F.col("_n") > 0)
 
@@ -201,12 +199,11 @@ def jaccard_join(
 def containment_join(
     probe: DataFrame,
     target: DataFrame,
-    tokens_col: str = "tokens",
-    id_col: str = "doc_id",
     threshold: float | str = 0.5,
 ) -> DataFrame:
     """Exact ASYMMETRIC containment join: every (probe, target) pair
     with |P∩T| / |P| >= threshold — "probe is mostly inside target".
+    Both sides carry (doc_id, tokens).
 
     The quote/boilerplate/plagiarism shape Jaccard cannot express: a
     short passage inside a long document has tiny Jaccard but full
@@ -238,8 +235,7 @@ def containment_join(
         # checkpoint before the n > 0 filter — same pushdown-duplication
         # avoidance as jaccard_join's base
         mat = df.select(
-            F.col(id_col).alias("_id"),
-            F.array_distinct(F.col(tokens_col)).alias("_tk"),
+            F.col("doc_id").alias("_id"), F.array_distinct(F.col("tokens")).alias("_tk")
         ).localCheckpoint()
         return mat.withColumn("_n", F.size("_tk").cast("long")).filter(
             F.col("_n") > 0

@@ -64,13 +64,7 @@ def span_cost(span: Column, media_cost: int) -> Column:
     )
 
 
-def chunk_spans(
-    docs: DataFrame,
-    spans_col: str = "spans",
-    budget: int = 1024,
-    media_cost: int = 16,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def chunk_spans(docs: DataFrame, budget: int = 1024, media_cost: int = 16) -> DataFrame:
     """Greedy span-atomic packing -> (doc_id, offset, kind, cost, chunk_id).
 
     Sequence-packing for interleaved documents: spans are consumed in
@@ -98,7 +92,7 @@ def chunk_spans(
         raise ValueError(f"budget must be positive, got {budget}")
     if media_cost < 0:
         raise ValueError(f"media_cost must be >= 0, got {media_cost}")
-    ordered = _offset_sorted(F.col(spans_col))
+    ordered = _offset_sorted(F.col("spans"))
     costed = F.transform(
         ordered,
         lambda s: F.struct(
@@ -126,15 +120,15 @@ def chunk_spans(
         )
 
     packed = docs.select(
-        F.col(id_col),
+        "doc_id",
         costed.alias("_sp"),
         F.aggregate(costed, init, _step)["assign"].alias("_assign"),
     )
     ex = packed.select(
-        id_col, F.posexplode("_sp").alias("_pos", "_s"), F.col("_assign")
+        "doc_id", F.posexplode("_sp").alias("_pos", "_s"), F.col("_assign")
     )
     return ex.select(
-        id_col,
+        "doc_id",
         F.col("_s.offset").alias("offset"),
         F.col("_s.kind").alias("kind"),
         F.col("_s.cost").alias("cost"),
@@ -142,9 +136,7 @@ def chunk_spans(
     )
 
 
-def modality_profile(
-    docs: DataFrame, spans_col: str = "spans", id_col: str = "doc_id"
-) -> DataFrame:
+def modality_profile(docs: DataFrame) -> DataFrame:
     """Per-document modality composition -> (doc_id, n_spans,
     n_text_spans, n_media_spans, n_text_tokens, media_kinds,
     text_span_share).
@@ -157,7 +149,7 @@ def modality_profile(
     is a single exactly-rounded integer division, bit-stable across
     engines. Pure array expressions — no shuffle, no UDF, no explode.
     """
-    sp = F.col(spans_col)
+    sp = F.col("spans")
     n_spans = F.size(sp).cast("long")
     text_spans = F.filter(sp, lambda s: s["kind"] == TEXT_KIND)
     n_text = F.size(text_spans).cast("long")
@@ -178,7 +170,7 @@ def modality_profile(
         ",",
     )
     return docs.select(
-        F.col(id_col),
+        "doc_id",
         n_spans.alias("n_spans"),
         n_text.alias("n_text_spans"),
         (n_spans - n_text).alias("n_media_spans"),
@@ -191,13 +183,10 @@ def modality_profile(
 def media_ref_audit(
     docs: DataFrame,
     media: DataFrame,
-    spans_col: str = "spans",
-    id_col: str = "doc_id",
-    ref_col: str = "media_ref",
-    hash_col: str = "payload_hash",
 ) -> DataFrame:
-    """Media-store referential-integrity audit -> (doc_id, n_media_refs,
-    n_orphan_refs, n_shared_refs).
+    """Media-store referential-integrity audit of (doc_id, spans)
+    documents against a (media_ref, payload_hash) store -> (doc_id,
+    n_media_refs, n_orphan_refs, n_shared_refs).
 
     The two failure modes of an interleaved corpus's media store:
     *orphans* (a span references an asset the store no longer has —
@@ -214,26 +203,22 @@ def media_ref_audit(
     result is one groupBy(doc_id) over the (sparse) media-span rows.
     """
     refs = docs.select(
-        F.col(id_col),
-        F.explode(
-            F.filter(F.col(spans_col), lambda s: s["kind"] != TEXT_KIND)
-        ).alias("_s"),
-    ).select(
-        id_col, F.col(f"_s.{ref_col}").alias("_ref")
-    ).where(F.col("_ref").isNotNull())
-    payload_counts = media.groupBy(hash_col).agg(
-        F.count_distinct(ref_col).cast("long").alias("_n_refs")
+        "doc_id",
+        F.explode(F.filter(F.col("spans"), lambda s: s["kind"] != TEXT_KIND)).alias("_s"),
+    ).select("doc_id", F.col("_s.media_ref").alias("_ref")).where(F.col("_ref").isNotNull())
+    payload_counts = media.groupBy("payload_hash").agg(
+        F.count_distinct("media_ref").cast("long").alias("_n_refs")
     )
     store = media.select(
-        F.col(ref_col).alias("_ref"), F.col(hash_col).alias("_h")
+        F.col("media_ref").alias("_ref"), F.col("payload_hash").alias("_h")
     ).join(
         payload_counts.select(
-            F.col(hash_col).alias("_h"), (F.col("_n_refs") > 1).alias("_shared")
+            F.col("payload_hash").alias("_h"), (F.col("_n_refs") > 1).alias("_shared")
         ),
         "_h",
     ).select("_ref", "_shared", F.lit(1).alias("_present"))
     joined = refs.join(store, "_ref", "left")
-    return joined.groupBy(id_col).agg(
+    return joined.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_media_refs"),
         F.sum(F.when(F.col("_present").isNull(), 1).otherwise(0))
         .cast("long")

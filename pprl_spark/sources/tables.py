@@ -83,7 +83,6 @@ def write_bucketed_blocks(
     table: str,
     path: str,
     n_buckets: int,
-    id_col: str = "doc_id",
 ) -> None:
     """Persist an exploded block table bucketed + sorted by the hashed
     block key, so the candidate pair join reads both sides CO-LOCATED.
@@ -137,9 +136,10 @@ def read_bucketed_blocks(spark: SparkSession, table: str) -> DataFrame:
 
 
 def register_bucketed_table(
-    spark: SparkSession, table: str, path: str, n_buckets: int, bucket_col: str = "_bk"
+    spark: SparkSession, table: str, path: str, n_buckets: int
 ) -> DataFrame:
-    """(Re-)register an existing bucketed parquet directory in the catalog.
+    """(Re-)register a :func:`write_bucketed_blocks` directory (bucketed
+    on ``_bk``) in the catalog.
 
     Bucket metadata lives in the session catalog, not the files — a NEW
     session resuming a pipeline would read the same parquet as a plain
@@ -156,7 +156,7 @@ def register_bucketed_table(
     cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
     spark.sql(
         f"CREATE TABLE {table} ({cols}) USING PARQUET "
-        f"CLUSTERED BY (`{bucket_col}`) SORTED BY (`{bucket_col}`) "
+        "CLUSTERED BY (`_bk`) SORTED BY (`_bk`) "
         f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
     )
     return spark.table(table)

@@ -37,7 +37,6 @@ def delta_candidates(
     corpus_blocks: DataFrame,
     delta_blocks: DataFrame,
     config: EmbedderConfig,
-    id_col: str = "doc_id",
     cap: bool = True,
     min_sim: float | None = None,
     allow_uncapped: bool = False,
@@ -71,11 +70,11 @@ def delta_candidates(
     every run, training callers to ignore it).
     """
     cross = generate_candidates(
-        delta_blocks, corpus_blocks, config, id_col=id_col, cap=cap,
+        delta_blocks, corpus_blocks, config, cap=cap,
         min_sim=min_sim, allow_uncapped=allow_uncapped,
     )
     within = generate_candidates(
-        delta_blocks, None, config, id_col=id_col, cap=cap,
+        delta_blocks, None, config, cap=cap,
         min_sim=min_sim, allow_uncapped=allow_uncapped,
     )
     cross_norm = cross.select(
@@ -153,27 +152,27 @@ def stream_windowed_stats(
     return windowed_event_stats(stream, window=window, exact_users=False)
 
 
-def start_stats_stream(
-    stats: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-    once: bool = True,
-):
-    """Append finalized windows to a stage table (exactly-once).
+def start_parquet_append(
+    stream: DataFrame, output_dir: str, checkpoint_dir: str
+) -> StreamingQuery:
+    """Append a stream to a parquet stage table at ``output_dir`` with
+    exactly-once checkpointing in ``checkpoint_dir`` (the streaming
+    analog of the pipeline's stage commit). The query processes the
+    input available now and stops (``availableNow`` trigger).
 
-    ``append`` output mode emits a window only once its watermark passes —
-    the batch-equivalence test in tests/test_extensions.py proves the
+    For a watermarked aggregation (:func:`stream_windowed_stats`),
+    ``append`` output mode emits a window only once its watermark passes
+    — the batch-equivalence test in tests/test_extensions.py proves the
     emitted rows match the batch aggregation over the same input.
     """
-    writer = (
-        stats.writeStream.outputMode("append")
+    return (
+        stream.writeStream.outputMode("append")
         .format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def sessionize_stream(
@@ -272,26 +271,6 @@ def stream_exact_dedup(
         .withWatermark("ts", watermark)
     )
     return stream.dropDuplicatesWithinWatermark(["fp1", "fp2"])
-
-
-def start_embed_stream(
-    embedded: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-    once: bool = True,
-) -> StreamingQuery:
-    """Append embedded+blocked docs to a stage table with exactly-once
-    checkpointing (the streaming analog of the pipeline's stage commit).
-    """
-    writer = (
-        embedded.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_decontaminate(

@@ -252,13 +252,13 @@ def test_stream_windowed_stats_matches_batch(spark, tmp_path):
     the watermark finalized (append mode withholds windows newer than
     max(ts) - watermark — the late-data contract)."""
     from pprl_spark.operators.events import windowed_event_stats
-    from pprl_spark.streaming.incremental import start_stats_stream, stream_windowed_stats
+    from pprl_spark.streaming.incremental import start_parquet_append, stream_windowed_stats
 
     src, out, ckpt = str(tmp_path / "ev"), str(tmp_path / "out"), str(tmp_path / "ck")
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     ev.write.parquet(src)
 
-    q = start_stats_stream(stream_windowed_stats(spark, src), out, ckpt)
+    q = start_parquet_append(stream_windowed_stats(spark, src), out, ckpt)
     q.awaitTermination(120)
     streamed = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"], r["sum_k"])
@@ -329,21 +329,21 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
 
 def test_stream_embed(spark, tmp_path):
     from pprl_spark.sources.synthetic import synthesize_documents
-    from pprl_spark.streaming.incremental import start_embed_stream, stream_embed
+    from pprl_spark.streaming.incremental import start_parquet_append, stream_embed
 
     cfg = EmbedderConfig()
     src = str(tmp_path / "in")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     synthesize_documents(spark, 25, "A").write.parquet(src)
-    q = start_embed_stream(stream_embed(spark, src, cfg), out, ckpt)
+    q = start_parquet_append(stream_embed(spark, src, cfg), out, ckpt)
     q.awaitTermination(120)
     result = spark.read.parquet(out)
     assert result.count() == 25
     assert "bf_indices" in result.columns and "block_keys" in result.columns
     # incremental: drop more files, rerun with same checkpoint -> only delta
     synthesize_documents(spark, 10, "B").write.mode("append").parquet(src)
-    q2 = start_embed_stream(stream_embed(spark, src, cfg), out, ckpt)
+    q2 = start_parquet_append(stream_embed(spark, src, cfg), out, ckpt)
     q2.awaitTermination(120)
     assert spark.read.parquet(out).count() == 35
 

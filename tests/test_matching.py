@@ -155,6 +155,23 @@ def test_choose_pair_join_hint_boundaries(spark):
     assert raw[-1] in "kmgt0123456789"
 
 
+def test_heap_bytes_parses_like_spark(spark):
+    """Memory strings read as Spark reads spark.driver/executor.memory:
+    a bare number is MiB and the two-letter suffixes are the one-letter
+    ones (a hand parser read "2048" as 2 KiB and "4gb"/"512mb" as 1 GiB)."""
+    from pprl_spark.operators.candidates import _heap_bytes
+
+    key = "spark.pprl.test.heapBytes"
+    M, G = 2**20, 2**30
+    try:
+        for raw, want in (("2048", 2 * G), ("4gb", 4 * G), ("512mb", 512 * M),
+                          ("2g", 2 * G), ("0", 0)):
+            spark.conf.set(key, raw)
+            assert _heap_bytes(spark, key) == want, raw
+    finally:
+        spark.conf.unset(key)
+
+
 def test_choose_pair_join_hint_scales_with_bloom_width(spark):
     """The build-side estimate must track n_words: a bf_size=8192 bitmap
     (128 words = 1KB/row) is ~2.3x the bf_size=1024 row, so a count that

@@ -171,9 +171,7 @@ def test_append_ivf_index_equals_fresh_assignment(spark, tmp_path):
     from pyspark.sql import functions as F
 
     union = base_corpus.unionByName(delta)
-    fresh = ivf_assign(
-        union, cent, nprobe=1, cent_id_col="cent_id", cent_vec_col="cent_vec"
-    ).select("cent_id", "vec_id", "embedding")
+    fresh = ivf_assign(union, cent, nprobe=1).select("cent_id", "vec_id", "embedding")
     want = ivf_probe(cent, fresh, queries, k=5, nprobe=3)
 
     g = {(r["query_id"], r["vec_id"], r["rank"]) for r in got.collect()}
