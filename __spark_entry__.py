@@ -820,9 +820,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # dedup_minhash: every pair with true Jaccard >= 0.4, not the
         # banding-probability sample — the lossless/approximate pair the
         # engine offers side by side. All pruning (prefix length, length
-        # filter, positional bound, final threshold) is integer-exact
-        # rational arithmetic, so the oracle is the naive join with the
-        # identical inter*den >= num*union comparison.
+        # filter, positional and bitmap bounds, final threshold) is
+        # integer-exact rational arithmetic, so the oracle is the naive
+        # join with the identical inter*den >= num*union comparison.
         return _setjoin_pairs(spark, sf_dir).select(
             "id1",
             "id2",
@@ -837,7 +837,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # docs with doc_id % 20 == 0 play short probes against the rest
         # as targets; |P∩T|/|P| >= 0.6 with the rational-integer
         # comparison shared with the naive oracle join. Probe prefixes
-        # rank by TARGET df via one tagged-union window (no df join).
+        # rank by TARGET df (a groupBy df table, hash-joined back).
         from pprl_spark.functions.text import shingle_hashes
         from pprl_spark.operators.setjoin import containment_join
 
@@ -1688,7 +1688,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # cut is partitioning-independent
         from pprl_spark.operators.corpus import vocab_topk as _vtk
 
-        return _vtk(_docs(spark, sf_dir), "text", k=100).select(
+        return _vtk(_docs(spark, sf_dir), k=100).select(
             "word", F.col("cnt").cast("long").alias("cnt")
         )
 

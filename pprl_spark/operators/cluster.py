@@ -471,8 +471,6 @@ def _pagerank_driver(
 
 def pagerank(
     edges: DataFrame,
-    src: str = "id1",
-    dst: str = "id2",
     iterations: int = 5,
     damping_pct: int = 85,
     scale: int = 10**12,
@@ -515,7 +513,7 @@ def pagerank(
     if not (0 < damping_pct < 100):
         raise ValueError(f"damping_pct must be in (0,100), got {damping_pct}")
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("id1").alias("u"), F.col("id2").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
     )

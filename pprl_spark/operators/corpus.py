@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pprl_spark.functions.text import rolling_hash_col, word_shingles, words_col
 
 
-def vocab_topk(docs: DataFrame, text_col: str = "text", k: int = 100) -> DataFrame:
+def vocab_topk(docs: DataFrame, k: int = 100) -> DataFrame:
     """Top-``k`` corpus tokens by frequency -> (word, cnt).
 
     Deterministic total order (cnt desc, word asc) so the cut at rank k
@@ -50,7 +50,7 @@ def vocab_topk(docs: DataFrame, text_col: str = "text", k: int = 100) -> DataFra
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     counts = (
-        docs.select(F.explode(words_col(text_col)).alias("word"))
+        docs.select(F.explode(words_col("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )

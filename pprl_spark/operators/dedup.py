@@ -93,8 +93,6 @@ def _jaccard(sh1: Column, sh2: Column) -> Column:
 
 def minhash_near_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.7,
     bands: int = 8,
@@ -106,7 +104,7 @@ def minhash_near_duplicates(
     a self-join on the band key (:func:`_key_pairs`), then exact
     shingle-set (n-gram) Jaccard >= ``threshold`` (:func:`_verified`).
     """
-    base, band = minhash_index(df, text_col, id_col, k, bands, rows_per_band)
+    base, band = minhash_index(df, k, bands, rows_per_band)
     return _verified(_key_pairs(band, band, "bk"), base, "sh", _jaccard, "jaccard", threshold)
 
 
@@ -458,8 +456,6 @@ def cross_media_duplicates(df: DataFrame) -> DataFrame:
 
 def minhash_index(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 3,
     bands: int = 8,
     rows_per_band: int = 2,
@@ -486,10 +482,8 @@ def minhash_index(
     # text (n >= k windows, or the single joined-words shingle when
     # n < k, [hash("")] for empty text) and null only for null text.
     base = (
-        df.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("doc_id"), shingle_hashes(text_col, k).alias("sh")
-        )
+        df.where(F.col("text").isNotNull())
+        .select("doc_id", shingle_hashes("text", k).alias("sh"))
         .withColumn("_sig", minhash_col(F.col("sh"), bands * rows_per_band))
         .localCheckpoint()
     )
@@ -503,8 +497,6 @@ def minhash_index(
 def delta_near_duplicates(
     corpus_index: tuple[DataFrame, DataFrame],
     delta: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.7,
     bands: int = 8,
@@ -526,7 +518,7 @@ def delta_near_duplicates(
     work shrinks from O(corpus bands²) to O(delta-touched bands).
     """
     corpus_base, corpus_band = corpus_index
-    delta_base, delta_band = minhash_index(delta, text_col, id_col, k, bands, rows_per_band)
+    delta_base, delta_band = minhash_index(delta, k, bands, rows_per_band)
     all_band = corpus_band.unionByName(delta_band)
     cand = (
         delta_band.select(F.col("doc_id").alias("ida"), "bk")

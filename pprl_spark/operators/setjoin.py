@@ -39,6 +39,18 @@ must share a token in their (small) rarest-token prefixes:
   generation is pruned.  Losslessness: for a true match the FIRST
   common token (canonical order) always satisfies the bound, and a
   pair survives if ANY of its generations does.
+- overlap bound: each doc carries a 512-bit token bitmap (bit
+  ``pmod(xxhash64(token), 512)``) and its excess ``e = n - popcount``,
+  one ``array<bigint>`` of 9 on the prefix table.  A generation is
+  dropped, before the pair-dedupe exchange, when ``popcount(A&B) +
+  min(eA, eB)`` is below the required overlap.  Sound: every common
+  token sets the same bit on both sides; a bucket holding c >= 1
+  common tokens adds 1 to the AND-popcount, and its other c - 1 are
+  among that side's c_A - 1 surplus tokens in the bucket, whose sum
+  over all buckets is e.  So ``|A∩B| <= popcount(A&B) + min(eA, eB)``
+  whatever collides; a bare AND-popcount undercounts colliding common
+  tokens and would drop true pairs.  Sets far larger than 512 tokens
+  stay exact; the bound just prunes less.
 - verify: join the distinct token arrays back for the candidate pairs
   only and test ``|A∩B| * den >= num * |A∪B|``.
 
@@ -53,8 +65,51 @@ from __future__ import annotations
 
 from fractions import Fraction
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+_BITMAP_WORDS = 8  # 512 bits, sized for the <= ~100-token docs the callers join
+
+
+def _base(df: DataFrame) -> DataFrame:
+    """``(_id, _tk, _n, _bm)`` over the non-empty docs of ``(doc_id,
+    tokens)``: distinct tokens, their count, and ``_bm`` = the 512-bit
+    token bitmap as 8 longs followed by its excess ``_n - popcount``.
+
+    Materialized BEFORE the n > 0 filter: filtering on a projected alias
+    pushes the predicate below the projection, re-evaluating the (often
+    expensive — shingle folds) token expression once for the filter and
+    once for the column. Post-checkpoint, size() reads a stored array.
+    """
+    mat = df.select(
+        F.col("doc_id").alias("_id"), F.array_distinct(F.col("tokens")).alias("_tk")
+    ).localCheckpoint()
+    # one pass: bucket each token, OR its bit into the 8-word
+    # accumulator, then append the excess n - popcount
+    bitmap = (
+        "aggregate("
+        f"transform(_tk, x -> CAST(pmod(xxhash64(x), {64 * _BITMAP_WORDS}) AS INT)), "
+        f"array_repeat(0L, {_BITMAP_WORDS}), "
+        "(acc, b) -> transform(acc, (w, i) -> "
+        "IF(i = b DIV 64, w | shiftleft(1L, b % 64), w)), "
+        "acc -> concat(acc, "
+        "array(_n - aggregate(acc, 0L, (s, w) -> s + bit_count(w)))))"
+    )
+    return (
+        mat.withColumn("_n", F.size("_tk").cast("long"))
+        .filter(F.col("_n") > 0)
+        .withColumn("_bm", F.expr(bitmap))
+    )
+
+
+def _overlap_bound(bm1: str, bm2: str) -> Column:
+    """Sound upper bound on |A∩B| from two ``_base`` bitmaps:
+    ``popcount(A&B) + min(eA, eB)`` (the module docstring's argument)."""
+    ones = " + ".join(
+        f"bit_count({bm1}[{w}] & {bm2}[{w}])" for w in range(_BITMAP_WORDS)
+    )
+    e = _BITMAP_WORDS
+    return F.expr(f"{ones} + least({bm1}[{e}], {bm2}[{e}])")
 
 
 def jaccard_join(
@@ -79,16 +134,8 @@ def jaccard_join(
     if not 0 < frac <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold!r}")
 
-    # Materialize BEFORE the n > 0 filter: filtering on a projected alias
-    # pushes the predicate below the projection, re-evaluating the (often
-    # expensive — shingle folds) token expression once for the filter and
-    # once for the column. Post-checkpoint, size() reads a stored array.
-    base = df.select(
-        F.col("doc_id").alias("_id"), F.array_distinct(F.col("tokens")).alias("_tk")
-    ).localCheckpoint()
-    base = base.withColumn("_n", F.size("_tk").cast("long")).filter(F.col("_n") > 0)
-
-    ex = base.select("_id", "_n", F.explode("_tk").alias("_t"))
+    base = _base(df)
+    ex = base.select("_id", "_n", "_bm", F.explode("_tk").alias("_t"))
     # Token document frequency via map-side-combined aggregation + hash
     # join, NOT count() over a token-partitioned window: a hub token (a
     # stopword-grade shingle present in half the corpus) would put its
@@ -109,7 +156,7 @@ def jaccard_join(
     prefix_len = F.expr(f"_n - ((_n * {num} + {den - 1}) DIV {den}) + 1")
     pref = (
         ranked.filter(F.col("_pos") <= prefix_len)
-        .select("_id", "_t", "_n", "_pos")
+        .select("_id", "_t", "_n", "_pos", "_bm")
         .localCheckpoint()
     )
     # indexing prefix n - ceil(2t/(1+t)*n) + 1 (always <= probing
@@ -124,12 +171,14 @@ def jaccard_join(
         "_t",
         F.col("_n").alias("_pn"),
         F.col("_pos").alias("_pp"),
+        F.col("_bm").alias("_pbm"),
     )
     b = pref.filter(F.col("_pos") <= index_len).select(
         F.col("_id").alias("_iid"),
         "_t",
         F.col("_n").alias("_in"),
         F.col("_pos").alias("_ip"),
+        F.col("_bm").alias("_ibm"),
     )
     cand = (
         a.join(b, "_t")
@@ -152,24 +201,15 @@ def jaccard_join(
         cand = cand.filter(
             ub * F.lit(num + den) >= (F.col("_pn") + F.col("_in")) * F.lit(num)
         )
-    # Pair dedupe via an explicit hash repartition + clustered dedupe
-    # instead of .distinct(): the join output is partitioned BY TOKEN, so
-    # a pair's duplicate generations live in different partitions and the
-    # map-side partial aggregate of a plain distinct dedupes ~nothing —
-    # a pure-overhead hash build over 9M rows below the exchange.  With
-    # repartition(id1, id2) the exchange carries the same slim rows but
-    # the clustering requirement is already satisfied above it, so BOTH
-    # aggregate passes run on clustered data and the below-exchange
-    # partial disappears (measured at sf0.1: 2.2s -> 1.5s for the dedupe
-    # stage).  Both key columns partition, so a hub document cannot skew
-    # one partition.
+    # bitmap overlap bound: the last filter before the dedupe exchange
+    cand = cand.filter(
+        _overlap_bound("_pbm", "_ibm") * F.lit(num + den)
+        >= (F.col("_pn") + F.col("_in")) * F.lit(num)
+    )
     cand = cand.select(
         F.least("_pid", "_iid").alias("id1"),
         F.greatest("_pid", "_iid").alias("id2"),
-    )
-    cand = cand.repartition(F.col("id1"), F.col("id2")).dropDuplicates(
-        ["id1", "id2"]
-    )
+    ).dropDuplicates(["id1", "id2"])
 
     s1 = base.select(F.col("_id").alias("id1"), F.col("_tk").alias("_tk1"))
     s2 = base.select(F.col("_id").alias("id2"), F.col("_tk").alias("_tk2"))
@@ -220,8 +260,11 @@ def containment_join(
     join probes the target's FULL posting lists — that is inherent to
     containment (the target has no prefix), so hub-token postings are
     the cost driver; rarest-first probe prefixes keep hub tokens out of
-    the join for all but the most common-word-only probes. Verification
-    joins the distinct token arrays back for candidates only; the
+    the join for all but the most common-word-only probes. Each
+    generation must pass the bitmap overlap bound of the module
+    docstring (``bound·den >= num·nP``) before the pair dedupe.
+    Verification joins the distinct token arrays back for candidates
+    only; the
     threshold comparison is integer-rational (``inter·den >= num·nP``),
     exactness-checked against the naive join in tests and the driver
     oracle.
@@ -231,19 +274,9 @@ def containment_join(
     if not 0 < frac <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold!r}")
 
-    def _base(df: DataFrame) -> DataFrame:
-        # checkpoint before the n > 0 filter — same pushdown-duplication
-        # avoidance as jaccard_join's base
-        mat = df.select(
-            F.col("doc_id").alias("_id"), F.array_distinct(F.col("tokens")).alias("_tk")
-        ).localCheckpoint()
-        return mat.withColumn("_n", F.size("_tk").cast("long")).filter(
-            F.col("_n") > 0
-        )
-
     pb, tb = _base(probe), _base(target)
-    t_ex = tb.select("_id", "_n", F.explode("_tk").alias("_t"))
-    p_ex = pb.select("_id", "_n", F.explode("_tk").alias("_t"))
+    t_ex = tb.select("_id", "_n", "_bm", F.explode("_tk").alias("_t"))
+    p_ex = pb.select("_id", "_n", "_bm", F.explode("_tk").alias("_t"))
     # Target-side document frequency via map-side-combined aggregation +
     # LEFT hash join (probe tokens absent from the target coalesce to
     # df 0 -> rank rarest-first and generate zero candidates), replacing
@@ -266,20 +299,29 @@ def containment_join(
     pref = ranked.filter(F.col("_pos") <= prefix_len)
 
     cand = (
-        pref.select(F.col("_id").alias("probe_id"), "_t", F.col("_n").alias("n_probe"))
+        pref.select(
+            F.col("_id").alias("probe_id"),
+            "_t",
+            F.col("_n").alias("n_probe"),
+            F.col("_bm").alias("_pbm"),
+        )
         .join(
             t_ex.select(
-                F.col("_id").alias("target_id"), "_t", F.col("_n").alias("n_target")
+                F.col("_id").alias("target_id"),
+                "_t",
+                F.col("_n").alias("n_target"),
+                F.col("_bm").alias("_tbm"),
             ),
             "_t",
         )
         # the target must be able to hold α common tokens: nT >= t*nP
         .filter(F.col("n_target") * F.lit(den) >= F.col("n_probe") * F.lit(num))
+        # bitmap overlap bound (jaccard_join's), before the dedupe
+        .filter(
+            _overlap_bound("_pbm", "_tbm") * F.lit(den)
+            >= F.col("n_probe") * F.lit(num)
+        )
         .select("probe_id", "target_id")
-        # same dedupe shape as jaccard_join: duplicates are cross-
-        # partition (the join partitions by token), so one explicit
-        # repartition + clustered dedupe beats partial+final distinct
-        .repartition(F.col("probe_id"), F.col("target_id"))
         .dropDuplicates(["probe_id", "target_id"])
     )
     s1 = pb.select(F.col("_id").alias("probe_id"), F.col("_tk").alias("_tk1"))

@@ -222,3 +222,52 @@ def test_containment_finds_quote_jaccard_misses(spark):
         [(1, quote), (2, doc)], "doc_id long, tokens array<long>"
     )
     assert jaccard_join(both, threshold="0.5").count() == 0
+
+
+def _collision_corpus(seed):
+    """Docs of 600-1,500 tokens (more tokens than the 512 bitmap bits)
+    with planted near-copies whose overlap exceeds 512: the bitmap
+    overlap bound holds only through its excess term here."""
+    rng = random.Random(seed)
+    vocab = range(8000)
+    bases = [rng.sample(vocab, rng.randint(600, 1500)) for _ in range(14)]
+    docs = [sorted(b) for b in bases]
+    for i, keep in enumerate([0.97, 0.93, 0.85, 0.75, 0.6, 0.5] * 3):
+        b = bases[i % len(bases)]
+        kept = rng.sample(b, int(keep * len(b)))
+        fresh = rng.sample(vocab, len(b) - len(kept))
+        docs.append(sorted(set(kept) | set(fresh)))
+    return list(enumerate(docs))
+
+
+@pytest.mark.parametrize("t", ["0.4", "0.7", "0.9"])
+def test_jaccard_exact_when_bitmap_collides(spark, t):
+    rows = _collision_corpus(31)
+    got, _ = _spark_pairs(spark, rows, t)
+    want = _naive(rows, t)
+    assert got == want
+    by_id = dict(rows)
+    # non-vacuous: a true pair overlaps in more tokens than there are bits
+    assert any(len(set(by_id[i]) & set(by_id[j])) > 512 for i, j in want)
+
+
+@pytest.mark.parametrize("t", ["0.6", "0.9"])
+def test_containment_exact_when_bitmap_collides(spark, t):
+    from pprl_spark.operators.setjoin import containment_join
+
+    rows = _collision_corpus(47)
+    probes = [(i, tk) for i, tk in rows if i % 3 == 0]
+    targets = [(i, tk) for i, tk in rows if i % 3 != 0]
+    schema = "doc_id long, tokens array<long>"
+    got = {
+        (r.probe_id, r.target_id)
+        for r in containment_join(
+            spark.createDataFrame(probes, schema),
+            spark.createDataFrame(targets, schema),
+            threshold=t,
+        ).collect()
+    }
+    want = _naive_containment(probes, targets, t)
+    assert got == want
+    by_id = dict(rows)
+    assert any(len(set(by_id[p]) & set(by_id[q])) > 512 for p, q in want)
