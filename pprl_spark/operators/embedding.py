@@ -25,6 +25,13 @@ from pprl_spark.config import EmbedderConfig
 from pprl_spark.functions.hashing import bloom_indices_with_collisions, pack_bitmap
 from pprl_spark.operators.blocking import minhash_signatures
 
+# Rows per Python task of the embed stage: a fixed ~0.23 s of worker CPU
+# per task (4-vCPU host) against 0.2-0.25 ms of kernel work per document
+# keeps the fixed cost at <= ~12% of a task. It is also below
+# `spark.sql.execution.arrow.maxRecordsPerBatch` (10000): one Arrow batch,
+# one hash memo per task.
+ROWS_PER_PYTHON_TASK = 8192
+
 SPAN_ORDERED = "array_sort(transform(spans, s -> struct(s.offset as offset, s.kind as kind, s.text as text, s.media_ref as media_ref)))"
 
 
@@ -116,12 +123,28 @@ def embed_documents(
     Spark 4.1's Python-UDF extraction on re-executed shared plans.
     Columns not needed downstream are pruned *before* the Python stage so
     only requested passthrough columns cross the Arrow boundary.
+
+    The Python stage runs on ``ceil(rows / ROWS_PER_PYTHON_TASK)`` tasks,
+    never more than the input has partitions (``coalesce`` never splits).
+    Rows, not upstream partitions, size it because each Python task pays a
+    fixed ~0.23 s of worker CPU (measured on a 4-vCPU host):
+    ``pyspark.worker``'s ``setup_spark_files`` calls
+    ``importlib.invalidate_caches()``, which re-reads the central directory
+    of ``pyspark.zip`` once per cached zipimporter. The kernel costs
+    0.2-0.25 ms per document. A batch input's projection is an eager
+    ``localCheckpoint`` first, so the row ``count`` scans the checkpoint
+    and never re-runs a lazy upstream (a generator, a join).
+    A streaming input (``stream_embed``) cannot be counted or
+    checkpointed and keeps its partitioning.
     """
     df = normalize_documents(df, config)
     fields = [f for f in config.colspec if f in df.columns]
     if keep is not None:
         passthrough = [c for c in dict.fromkeys(keep + fields) if c in df.columns]
         df = df.select(*passthrough)
+    if not df.isStreaming:
+        df = df.localCheckpoint()
+        df = df.coalesce(max(1, -(-df.count() // ROWS_PER_PYTHON_TASK)))
 
     colspec = dict(config.colspec)
     ff_args = {k: dict(v) for k, v in config.ff_args.items()}

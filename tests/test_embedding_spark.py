@@ -6,6 +6,8 @@
   (BASELINE.json input_hint; FIXTURES.md §6).
 - Identity-SCM norm: bf_norms == sqrt(|bf_indices|) (embedder.py:137-139).
 - Golden: "doris smith" + sex column (test_embedder.py:190-216).
+- Python task count follows rows (``ROWS_PER_PYTHON_TASK``), and a lazy
+  input is evaluated once despite the row count.
 """
 
 import math
@@ -16,7 +18,11 @@ from pyspark.sql import functions as F
 from pprl_spark.config import EmbedderConfig
 from pprl_spark.functions import tokens
 from pprl_spark.functions.hashing import bloom_indices_with_collisions
-from pprl_spark.operators.embedding import embed_documents, normalize_documents
+from pprl_spark.operators.embedding import (
+    ROWS_PER_PYTHON_TASK,
+    embed_documents,
+    normalize_documents,
+)
 from pprl_spark.sources.synthetic import synthesize_documents
 
 CFG = EmbedderConfig()
@@ -150,3 +156,41 @@ def test_minhash_sig_kernel_matches_jvm_fold(spark):
     assert bk_old.exceptAll(bk_new).count() == 0
     # the signature column is internal: consumed and dropped
     assert "mh_sig" not in add_block_keys(emb, cfg).columns
+
+
+def _jvm_docs(spark, n: int, partitions: int):
+    """``n`` one-field documents built JVM-side (no Python runs)."""
+    return spark.range(n, numPartitions=partitions).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.expr(
+            "array(named_struct('kind', 'text', 'text', concat('given_name=n', id),"
+            " 'media_ref', cast(null as string), 'offset', 0))"
+        ).alias("spans"),
+    )
+
+
+def test_embed_python_tasks_follow_rows(spark):
+    """ceil(rows / ROWS_PER_PYTHON_TASK) Python tasks, never more than the
+    input's partitions. Plan-only: the checkpoint and the count are JVM jobs."""
+    cases = [(1000, 4, 1), (3 * ROWS_PER_PYTHON_TASK + 1, 16, 4), (3 * ROWS_PER_PYTHON_TASK, 2, 2)]
+    for n, parts, tasks in cases:
+        emb = embed_documents(_jvm_docs(spark, n, parts), CFG, keep=["doc_id"])
+        assert emb.rdd.getNumPartitions() == tasks, (n, parts)
+
+
+def test_embed_evaluates_lazy_input_once(spark):
+    """Sizing the Python stage counts the input; the count must scan the
+    checkpoint, not re-run a lazy Python-generated upstream."""
+    n = 300
+    rows_seen = spark.sparkContext.accumulator(0)
+    seed = synthesize_documents(spark, n, "A", seed=5, partitions=3).localCheckpoint()
+
+    def generator(batches):
+        for pdf in batches:
+            rows_seen.add(len(pdf))
+            yield pdf
+
+    lazy = seed.mapInPandas(generator, seed.schema)
+    got = embed_documents(lazy, CFG, keep=["doc_id"]).select("bf_indices").collect()
+    assert len(got) == n
+    assert rows_seen.value == n
