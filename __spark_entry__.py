@@ -14,6 +14,7 @@ ROUND(x, 6) doubles) because the driver hash-compares values.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -307,7 +308,8 @@ def _mutual_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memoized((_skey(spark), sf_dir, "mutual_best"), build)
 
 
-FIXTURES_DIR = "/root/repo/fixtures"
+# next to this file, so a run from another checkout writes its own copy
+FIXTURES_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 SCM_FIXTURE = f"{FIXTURES_DIR}/scm_sf001.parquet"  # sf0.01 — the committed one
 
 
@@ -326,8 +328,6 @@ def _sync_scm_fixture(A, sf_dir: str) -> None:
     is deterministic (seeded shuffles, eigh on fixed input), so the
     committed fixture normally matches byte-for-byte and no write happens.
     """
-    import os
-
     import numpy as np
 
     from pprl_spark.operators.scm import load_scm, save_scm
@@ -359,8 +359,6 @@ def _sync_fs_fixture(params: dict, sf_dir: str) -> None:
     fixture). EM is deterministic (fixed init/iters, sorted pattern
     table), so the committed fixture normally matches byte-for-byte.
     """
-    import os
-
     import pandas as pd
 
     rows = pd.DataFrame(
@@ -664,21 +662,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         def kernel(batches):
-            from pprl_spark.functions.phonetic import double_metaphone
+            from pprl_spark.functions.tokens import gen_double_metaphone
 
             for pdf in batches:
-                out = []
-                for doc_id, words in zip(pdf["doc_id"], pdf["words"]):
-                    codes = sorted(
-                        {
-                            c
-                            for w in words
-                            for c in double_metaphone(w)
-                            if c != ""
-                        }
-                    )
-                    for c in codes:
-                        out.append((doc_id, c))
+                out = [
+                    (doc_id, c)
+                    for doc_id, words in zip(pdf["doc_id"], pdf["words"])
+                    for c in sorted({c for w in words for c in gen_double_metaphone(w)})
+                ]
                 yield pd.DataFrame(out, columns=["doc_id", "code"])
 
         return docs.mapInPandas(kernel, "doc_id long, code string")
@@ -711,34 +702,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return docs.select("doc_id", F.explode(feats).alias("feat"))
 
     def text_jaro_winkler(spark, sf_dir):
-        # JW similarity between consecutive docs' first 12 words — kernel
-        # parity with DuckDB's jaro_winkler_similarity (fuzz-verified)
-        import pandas as pd
+        # JW similarity between consecutive docs' first 12 words — the
+        # pair scorer (operators.matching.jaro_winkler_rescore) over
+        # (doc_id, doc_id+1); kernel parity with DuckDB's
+        # jaro_winkler_similarity (fuzz-verified)
+        from pprl_spark.operators.matching import jaro_winkler_rescore
 
         docs = _docs(spark, sf_dir).select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.array_join(F.slice(F.split(F.lower("text"), r"\s+"), 1, 12), " ").alias("t"),
         )
-        nxt = docs.select(
-            (F.col("doc_id") - 1).alias("doc_id"), F.col("t").alias("t2")
-        )
-        pairs = docs.join(nxt, "doc_id")
-
-        def kernel(batches):
-            from pprl_spark.functions.similarity import jaro_winkler
-
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "jw": [
-                            __import__('math').floor(jaro_winkler(a, b) * 1e6) / 1e6
-                            for a, b in zip(pdf["t"], pdf["t2"])
-                        ],
-                    }
-                )
-
-        return pairs.mapInPandas(kernel, "doc_id long, jw double")
+        pairs = docs.select(F.col("doc_id").alias("id1"), (F.col("doc_id") + 1).alias("id2"))
+        out = jaro_winkler_rescore(pairs, docs, None, "t")
+        return out.select(F.col("id1").alias("doc_id"), _floor6(F.col("jw_sim")).alias("jw"))
 
     def pprl_jw_pairs(spark, sf_dir):
         # north-star pair scoring: batched Jaro-Winkler over the BLOCKED

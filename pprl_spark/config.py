@@ -75,7 +75,7 @@ class EmbedderConfig:
     # ---- matching parameters ----
     abs_cutoff: float = 0.0           # SimilarityArray.match abs_cutoff analog
     rel_cutoff: float = 0.0           # margin above per-row threshold
-    similarity: str = "cosine"        # cosine | dice | jaccard
+    similarity: str = "cosine"        # cosine | dice
     pair_join_hint: str = "auto"      # blocked pair-join strategy:
                                       # "auto" (default) picks from observable
                                       # state — guarded broadcast when the

@@ -37,14 +37,14 @@ def misc_feature_col(col: Column | str, label: str = "misc") -> Column:
     )
 
 
-def dob_feature_col(col: Column | str, fmt: str = "yyyyMMdd") -> Column:
-    """`[day<dd>, month<mm>, year<YYYY>]` from a fixed-format date string.
+def dob_feature_col(col: Column | str) -> Column:
+    """`[day<dd>, month<mm>, year<YYYY>]` from a ``yyyyMMdd`` date string.
 
     Native path for well-formed dates (features.py:250-290); the embed UDF
     handles lenient parsing parity.
     """
     c = F.col(col) if isinstance(col, str) else col
-    d = F.to_date(c, fmt)
+    d = F.to_date(c, "yyyyMMdd")
     return F.when(d.isNull(), F.array().cast("array<string>")).otherwise(
         F.array(
             F.concat(F.lit("day<"), F.date_format(d, "dd"), F.lit(">")),

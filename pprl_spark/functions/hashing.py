@@ -71,23 +71,12 @@ def bloom_indices_with_collisions(
     return deduped, 1.0 - len(deduped) / len(raw)
 
 
-def bloom_indices(
-    features: Iterable[str],
-    size: int = 1024,
-    num_hashes: int = 2,
-    offset: int = 0,
-    salt: str = "",
-) -> list[int]:
-    """Index list only — analog of bloom_filter_vector (bloom_filters.py:83-106)."""
-    return bloom_indices_with_collisions(features, size, num_hashes, offset, salt)[0]
-
-
 def pack_bitmap(indices: Iterable[int], n_words: int) -> list[int]:
     """Bloom index list -> fixed-width bitmap as signed int64 words.
 
-    Exact Python twin of ``operators.candidates.bloom_bitmap_col`` (the
-    JVM higher-order-function form), including the two's-complement
-    wrap of bit 63 — ``tests/test_hashing.py`` pins the equality. Built
+    Words are signed, with bit 63 in two's complement, as
+    ``operators.candidates.bitmap_intersect_count`` reads them;
+    ``tests/test_hashing.py`` pins this against a JVM aggregate. Built
     here so the embed kernel can emit the join-side bitmap ONCE per
     document: Spark's higher-order functions never enter whole-stage
     codegen, so computing the bitmap as a JVM expression costs ~1ms of

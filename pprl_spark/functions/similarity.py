@@ -60,23 +60,22 @@ def jaro(s1: str, s2: str) -> float:
     return (m / len1 + m / len2 + (m - t) / m) / 3.0
 
 
-def jaro_winkler(
-    s1: str,
-    s2: str,
-    scaling: float = 0.1,
-    max_prefix: int = 4,
-    boost_threshold: float = 0.7,
-) -> float:
+# Classic Winkler constants (match DuckDB's jaro_winkler_similarity).
+JW_SCALING = 0.1
+JW_MAX_PREFIX = 4
+JW_BOOST_THRESHOLD = 0.7
+
+
+def jaro_winkler(s1: str, s2: str) -> float:
     """Classic Winkler variant: prefix boost only when jaro > 0.7
     (fuzz-verified bit-exact against DuckDB's jaro_winkler_similarity).
     """
     j = jaro(s1, s2)
-    if j <= boost_threshold:
+    if j <= JW_BOOST_THRESHOLD:
         return j
     prefix = 0
-    for a, b in zip(s1[:max_prefix], s2[:max_prefix]):
+    for a, b in zip(s1[:JW_MAX_PREFIX], s2[:JW_MAX_PREFIX]):
         if a != b:
             break
         prefix += 1
-    return j + prefix * scaling * (1.0 - j)
-
+    return j + prefix * JW_SCALING * (1.0 - j)

@@ -17,10 +17,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 MOD = 2_147_483_647
+# vectors the expected LSH bucket holds (auto_n_planes)
+TARGET_BUCKET = 64
 
 
-def auto_n_planes(n_vectors: int, target_bucket: int = 64) -> int:
-    """Hyperplane count so the EXPECTED bucket holds ~target_bucket vectors.
+def auto_n_planes(n_vectors: int) -> int:
+    """Hyperplane count so the EXPECTED bucket holds ~TARGET_BUCKET vectors.
 
     A fixed n_planes=8 (256 buckets) is right at 10^4 vectors and
     catastrophically wrong at 10^9 (4M vectors per bucket — the bucket
@@ -31,9 +33,9 @@ def auto_n_planes(n_vectors: int, target_bucket: int = 64) -> int:
     """
     import math
 
-    if n_vectors <= target_bucket:
+    if n_vectors <= TARGET_BUCKET:
         return 4
-    return max(4, min(24, math.ceil(math.log2(n_vectors / target_bucket))))
+    return max(4, min(24, math.ceil(math.log2(n_vectors / TARGET_BUCKET))))
 
 
 def auto_n_centroids(n_vectors: int) -> int:
@@ -230,10 +232,7 @@ def ivf_topk(
 
 
 def write_ivf_index(
-    corpus: DataFrame,
-    base_path: str,
-    n_centroids: int | None = None,
-    kmeans_iters: int = 0,
+    corpus: DataFrame, base_path: str, n_centroids: int | None = None
 ) -> None:
     """Persist an IVF index: train the quantizer ONCE, write the lists.
 
@@ -255,12 +254,11 @@ def write_ivf_index(
       corpus at the auto sizing). On a cluster the same write targets an
       Iceberg table partitioned by cent_id.
 
-    Same deterministic quantizer options as :func:`ivf_topk`
-    (``kmeans_iters=0`` = lowest-id seed sample, oracle-checkable;
-    ``>0`` = sampled Lloyd refinement).
+    The quantizer is :func:`ivf_topk`'s default: the lowest-id seed
+    sample, oracle-checkable.
     """
     # train once: the assignment below broadcasts it twice
-    cent = _quantizer(corpus, n_centroids, kmeans_iters).localCheckpoint()
+    cent = _quantizer(corpus, n_centroids, kmeans_iters=0).localCheckpoint()
     cent.write.mode("overwrite").parquet(f"{base_path}/centroids")
     lists = ivf_assign(corpus, cent, nprobe=1).select("cent_id", "vec_id", "embedding")
     # repartition by the partition column first: partitionBy writes one

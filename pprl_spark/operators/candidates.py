@@ -125,36 +125,7 @@ def _similarity_expr(sim: str):
         return i / (F.sqrt(s1) * F.sqrt(s2))
     if sim == "dice":
         return F.lit(2.0) * i / (s1 + s2)
-    if sim == "jaccard":
-        return i / (s1 + s2 - i)
     raise ValueError(f"unknown similarity {sim!r}")
-
-
-def bloom_bitmap_col(indices, n_words: int):
-    """Sparse index array -> fixed-width bitmap (array of n_words longs).
-
-    Single-pass aggregate (array-of-words accumulator). The bitmap is the
-    join-side representation of the Bloom vector: 8*n_words bytes fixed
-    (128B at bf_size=1024) vs ~360B+ for the int array — smaller shuffle
-    and sort rows — and pair scoring becomes word-AND + bit_count instead
-    of a per-pair hash-set intersect.
-    """
-    pow2 = F.array(
-        *[F.lit(1 << i if i < 63 else -(2**63)).cast("long") for i in range(64)]
-    )
-    wseq = F.array(*[F.lit(w) for w in range(n_words)])
-    return F.aggregate(
-        indices,
-        F.array_repeat(F.lit(0).cast("long"), n_words),
-        lambda acc, x: F.zip_with(
-            acc,
-            wseq,
-            lambda a, w: F.when(
-                F.floor(x.cast("long") / 64).cast("int") == w,
-                a.bitwiseOR(F.element_at(pow2, (x % 64 + 1).cast("int"))),
-            ).otherwise(a),
-        ),
-    )
 
 
 def bitmap_intersect_count(bm1, bm2, n_words: int | None = None):
@@ -238,7 +209,9 @@ def generate_candidates(
 ) -> DataFrame:
     """Join exploded block tables into scored candidate pairs.
 
-    ``blocks2=None`` means self-linkage (dedup): pairs within one table
+    Each block table carries ``doc_id``, ``block_key`` (or its stored
+    hash ``_bk``), the embed kernel's ``bf_bitmap`` and ``bf_n`` (or
+    ``bf_indices``). ``blocks2=None`` means self-linkage (dedup): pairs within one table
     with ``id1 < id2``. Output: (id1, id2, block_key_hash, sim) with one
     row per distinct pair (provenance is the xxhash64 of the block key —
     the join carries hashed keys + bitmaps, never the strings/arrays).
@@ -260,25 +233,13 @@ def generate_candidates(
             blocks2 = cap_blocks(blocks2, config)
 
     # Join-side representation: hash the block key to a long (8B sort keys
-    # instead of string compares) and pack the Bloom vector into a bitmap.
+    # instead of string compares) and score on the Bloom bitmap the embed
+    # kernel precomputed (bf_bitmap; functions.hashing.pack_bitmap).
     # Measured at 100k docs/source, 16 cores: join+score went 37.7s with
     # (string key, int-array vectors, array_intersect) to 9.5s with
     # (hashed key, bitmaps, bit_count AND) — the shuffle/sort rows are
     # ~2.7x smaller and the per-pair intersect is 16 word-ANDs.
     n_words = -(-(config.bf_size + config.offset) // 64)
-
-    def bitmap_of(blocks):
-        # Prefer the bitmap the embed kernel precomputed (bf_bitmap):
-        # the JVM construction below is a higher-order function — always
-        # interpreted eval (HOFs never enter whole-stage codegen) at
-        # ~1ms/row, and the optimizer may re-evaluate the expression once
-        # per consumer (join side, salt-size agg, cap agg), which showed
-        # up as an intermittent 5x stall with every core inside
-        # ArrayAggregate.eval. The fallback keeps old stage tables and
-        # bare (id, bf_indices, block_key) inputs working.
-        if "bf_bitmap" in blocks.columns:
-            return F.col("bf_bitmap")
-        return bloom_bitmap_col(F.col("bf_indices"), n_words)
 
     def n_of(blocks):
         if "bf_n" in blocks.columns:
@@ -297,14 +258,14 @@ def generate_candidates(
     left = blocks1.select(
         F.col("doc_id").alias("id1"),
         bk_of(blocks1).alias("_bk"),
-        bitmap_of(blocks1).alias("_bm1"),
+        F.col("bf_bitmap").alias("_bm1"),
         n_of(blocks1).alias("_n1"),
     )
     right_src = blocks2 if blocks2 is not None else blocks1
     right = right_src.select(
         F.col("doc_id").alias("id2"),
         bk_of(right_src).alias("_bk"),
-        bitmap_of(right_src).alias("_bm2"),
+        F.col("bf_bitmap").alias("_bm2"),
         n_of(right_src).alias("_n2"),
     )
 

@@ -290,17 +290,15 @@ def surprisal_scores(
     )
 
 
-def perplexity_buckets(
-    scores: DataFrame,
-    bounds: tuple[float, float] = (1.0 / 3.0, 2.0 / 3.0),
-) -> DataFrame:
-    """CCNet head/middle/tail split on the corpus' own score quantiles.
+def perplexity_buckets(scores: DataFrame) -> DataFrame:
+    """CCNet head/middle/tail split on the corpus' own score terciles.
 
     Adds ``bucket``: 'head' (lowest surprisal = most fluent), 'middle',
-    'tail'. The cut points are exact type-7 percentiles of ``mean_u``
-    (``F.percentile`` ≡ DuckDB ``quantile_cont``, the parity already
-    proven by the events_percentiles oracle), computed as a 1-row
-    aggregate and broadcast back — two scans, no corpus-sized shuffle.
+    'tail'. The cut points are the exact type-7 1/3 and 2/3 percentiles
+    of ``mean_u`` (``F.percentile`` ≡ DuckDB ``quantile_cont``, the
+    parity already proven by the events_percentiles oracle), computed as
+    a 1-row aggregate and broadcast back — two scans, no corpus-sized
+    shuffle.
     Integer-valued scores make the boundary comparison engine-exact: the
     interpolated threshold lands ON an integer only when the
     interpolation fraction is exactly 0 or the bracketing values are
@@ -311,13 +309,10 @@ def perplexity_buckets(
     single aggregator — fine to ~1e9 docs; beyond that switch the cut
     to ``approx_percentile`` and accept a weaker oracle.
     """
-    lo, hi = bounds
-    if not 0.0 < lo < hi < 1.0:
-        raise ValueError(f"bounds must satisfy 0 < lo < hi < 1, got {bounds}")
     c = F.col("mean_u").cast("double")
     thr = scores.agg(
-        F.percentile(c, F.lit(lo)).alias("_lo"),
-        F.percentile(c, F.lit(hi)).alias("_hi"),
+        F.percentile(c, F.lit(1.0 / 3.0)).alias("_lo"),
+        F.percentile(c, F.lit(2.0 / 3.0)).alias("_hi"),
     )
     return (
         scores.join(F.broadcast(thr))
@@ -606,18 +601,14 @@ def equiwidth_histogram(
     )
 
 
-def duplicated_spans(
-    docs: DataFrame,
-    n: int = 5,
-    min_count: int = 2,
-) -> DataFrame:
+def duplicated_spans(docs: DataFrame, n: int = 5) -> DataFrame:
     """Exact substring-duplication spans (granular dedup) ->
     (doc_id, n_tokens, n_dup_tokens, n_spans, dup_fraction).
 
     The memorization-risk pass of Lee et al. 2022 ("Deduplicating
     Training Data Makes Language Models Better"), re-expressed at token
-    granularity: a token ``n``-gram is *duplicated* when its corpus-wide
-    occurrence count is >= ``min_count`` — counting EVERY occurrence,
+    granularity: a token ``n``-gram is *duplicated* when it occurs at
+    least twice corpus-wide — counting EVERY occurrence,
     including repeats inside a single document, which is exactly the
     definition under which a decoder can memorize the span. Each
     duplicated occurrence marks the token window ``[pos, pos+n-1]``;
@@ -630,7 +621,7 @@ def duplicated_spans(
     Scale shape: grams travel as 8-byte rolling hashes with an int token
     position — text never shuffles. The gram-frequency table is a
     map-side-combined ``groupBy(gram).count()`` (no distinct); marking is
-    a semi-join of occurrences against the ``cnt >= min_count`` grams on
+    a semi-join of occurrences against the ``cnt >= 2`` grams on
     the hash (AQE handles the skewed stop-grams — only matched POSITIONS
     survive, fan-out is 1:1 per occurrence). Span merging is one window
     over (doc_id, pos) on the duplicated positions only, which are rare
@@ -647,8 +638,6 @@ def duplicated_spans(
     """
     if n < 1:
         raise ValueError(f"n must be positive, got {n}")
-    if min_count < 2:
-        raise ValueError(f"min_count must be >= 2, got {min_count}")
     w = words_col("text")
     # the per-gram rolling-hash fold is the expensive kernel and this
     # frame feeds three consumers (the frequency agg, the position
@@ -666,7 +655,7 @@ def duplicated_spans(
     dup_grams = (
         occ.groupBy("gram")
         .agg(F.count("*").alias("_c"))
-        .where(F.col("_c") >= min_count)
+        .where(F.col("_c") >= 2)
         .select("gram")
     )
     hits = occ.join(dup_grams, "gram").select("doc_id", "n_tokens", "pos")

@@ -181,28 +181,29 @@ def embedding_near_duplicates(
     return _verified(_key_pairs(anchored, probes, "bucket"), base, "v", cosine, "cos", threshold)
 
 
-def simhash_near_duplicates(
-    df: DataFrame,
-    bits: int = 32,
-    max_hamming: int = 3,
-    band_bits: int = 8,
-) -> DataFrame:
+# simhash_near_duplicates signature width and band width: 4 bands.
+SIMHASH_BITS = 32
+SIMHASH_BAND_BITS = 8
+
+
+def simhash_near_duplicates(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup: band the signature, join, Hamming-filter.
 
     Signatures within ``max_hamming`` differ in at most that many bits, so
-    with bits/band_bits bands > max_hamming at least one band matches
-    exactly (pigeonhole) — the banded self-join finds all such pairs
-    without a quadratic scan.
+    with SIMHASH_BITS/SIMHASH_BAND_BITS bands > max_hamming at least one
+    band matches exactly (pigeonhole) — the banded self-join finds all
+    such pairs without a quadratic scan.
     """
-    base = df.select("doc_id", simhash_col("text", bits).alias("sig"))
-    n_bands = bits // band_bits
-    mask = (1 << band_bits) - 1
+    base = df.select("doc_id", simhash_col("text", SIMHASH_BITS).alias("sig"))
+    mask = (1 << SIMHASH_BAND_BITS) - 1
     keys = F.array(
         *[
             F.concat_ws(
-                ":", F.lit(str(b)), (F.shiftright("sig", b * band_bits).bitwiseAND(F.lit(mask))).cast("string")
+                ":",
+                F.lit(str(b)),
+                F.shiftright("sig", b * SIMHASH_BAND_BITS).bitwiseAND(F.lit(mask)).cast("string"),
             )
-            for b in range(n_bands)
+            for b in range(SIMHASH_BITS // SIMHASH_BAND_BITS)
         ]
     )
     exploded = base.withColumn("bk", F.explode(keys))
@@ -284,34 +285,29 @@ def winnow_near_duplicates(
     return _verified(_key_pairs(exf, exf, "fp"), base, "fps", _jaccard, "overlap", threshold)
 
 
-def canonical_documents(
-    docs: DataFrame,
-    clusters: DataFrame,
-    quality: Column | None = None,
-) -> DataFrame:
+def canonical_documents(docs: DataFrame, clusters: DataFrame) -> DataFrame:
     """Pick ONE representative document per duplicate cluster.
 
     The end-cap of a dedup pipeline: after near-dup pairs are clustered
     (``clusters_from_matches`` / ``connected_components`` -> (doc_id,
     entity_id)), training wants exactly one surviving document per
-    entity — the highest-``quality`` member, ties broken by min doc_id
+    entity — the highest-quality member, ties broken by min doc_id
     (deterministic). Documents in no cluster are singletons and survive
     as their own canonical.
 
     Returns (entity_id, canonical_id, quality, n_members). Shuffle
     shape: one left join on doc_id (clusters is tiny relative to docs —
     broadcast when it fits) plus one window partitioned by entity_id;
-    quality is computed in the same scan (codegen'd expression by
-    default — ``functions.text.quality_score``), so the corpus is read
+    quality is computed in the same scan (the codegen'd expression
+    ``functions.text.quality_score``), so the corpus is read
     once and only (id, entity, quality) rides the window exchange.
     """
     from pyspark.sql import Window
 
     from pprl_spark.functions.text import quality_score
 
-    q = quality if quality is not None else quality_score("text")
     members = (
-        docs.select("doc_id", q.alias("_q"))
+        docs.select("doc_id", quality_score("text").alias("_q"))
         .join(
             clusters.select("doc_id", "entity_id"), "doc_id", "left"
         )
@@ -534,10 +530,7 @@ def delta_near_duplicates(
 
 
 def semantic_duplicates(
-    vectors: DataFrame,
-    threshold: float = 0.9,
-    n_centroids: int | None = None,
-    kmeans_iters: int = 0,
+    vectors: DataFrame, threshold: float = 0.9, n_centroids: int | None = None
 ) -> DataFrame:
     """SemDeDup-style semantic dedup -> (vec_id, cent_id, dup_of, is_dup).
 
@@ -558,13 +551,12 @@ def semantic_duplicates(
     shuffle for assignment); the within-cluster self-join shuffles on
     cent_id — list sizes are the knob (``n_centroids ~ sqrt(n)`` keeps
     E[list] ~ sqrt(n)); the assigned table is checkpointed once so the
-    quantizer does not recompute per join arm. ``kmeans_iters=0`` keeps
-    the deterministic lowest-id quantizer (oracle-checkable);
-    ``> 0`` runs sampled Lloyd steps for better-balanced lists.
+    quantizer does not recompute per join arm. The quantizer is the
+    deterministic lowest-id seed sample (oracle-checkable).
     """
     from pprl_spark.operators.ann import _quantizer, cosine, ivf_assign
 
-    cent = _quantizer(vectors, n_centroids, kmeans_iters)
+    cent = _quantizer(vectors, n_centroids, kmeans_iters=0)
     base = ivf_assign(vectors, cent, nprobe=1).select(
         "vec_id", F.col("embedding").alias("v"), "cent_id"
     ).localCheckpoint()

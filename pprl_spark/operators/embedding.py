@@ -209,10 +209,3 @@ def embed_documents(
         emb = emb.select(*[c for c in cols if c in emb.columns])
     return emb
 
-
-def anonymise(df: DataFrame, keep: list[str] | None = None) -> DataFrame:
-    """Keep only safe columns — analog of EDF.anonymise (embedder.py:160-181)."""
-    keep = keep or []
-    wanted = keep + ["bf_indices", "bf_norms", "thresholds"]
-    cols = [c for c in df.columns if c in wanted]
-    return df.select(*list(dict.fromkeys(cols)))

@@ -80,11 +80,8 @@ def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     ).drop("sess_id")
 
 
-def event_value_percentiles(
-    events: DataFrame,
-    percentiles: tuple[float, ...] = (0.5, 0.95, 0.99),
-) -> DataFrame:
-    """Exact per-type value percentiles (type-7 linear interpolation).
+def event_value_percentiles(events: DataFrame) -> DataFrame:
+    """Exact per-type p50/p95/p99 of ``value`` (type-7 linear interpolation).
 
     ``F.percentile`` is Spark's EXACT percentile (sort-based aggregate,
     index = p*(n-1) with linear interpolation) — the same definition as
@@ -97,7 +94,7 @@ def event_value_percentiles(
     """
     aggs = [
         F.percentile("value", F.lit(p)).alias(f"p{int(p * 100)}")
-        for p in percentiles
+        for p in (0.5, 0.95, 0.99)
     ]
     return events.groupBy("event_type").agg(
         F.count("*").alias("n_events"), *aggs

@@ -33,7 +33,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -367,9 +366,7 @@ def decode_media(media: DataFrame, strict: bool = True) -> DataFrame:
     return media.mapInPandas(kernel, DECODE_SCHEMA)
 
 
-def media_features(
-    media: DataFrame, dim: int = 16, batch_hint: int | None = None
-) -> DataFrame:
+def media_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     Real Spark plumbing: Arrow-batched iterator, bounded memory per batch
@@ -434,14 +431,14 @@ def media_metadata(media: DataFrame) -> DataFrame:
     return media.mapInPandas(extract, META_SCHEMA)
 
 
-def synthesize_media(spark, n: int, seed: int = 42) -> DataFrame:
+def synthesize_media(spark, n: int) -> DataFrame:
     """Deterministic fake media table exercising the binary plumbing."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for idx in pdf["id"]:
                 idx = int(idx)
-                payload = hashlib.sha256(f"{seed}-{idx}".encode()).digest() * (1 + idx % 4)
+                payload = hashlib.sha256(f"42-{idx}".encode()).digest() * (1 + idx % 4)
                 rows.append(
                     (
                         f"img://{hashlib.sha1(str(idx).encode()).hexdigest()[:16]}",

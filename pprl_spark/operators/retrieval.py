@@ -38,21 +38,18 @@ from pyspark.sql import functions as F
 from pprl_spark.functions.text import words_col
 
 MICRO = 1_000_000
+# Okapi BM25 term-saturation and length-normalisation constants.
+K1 = 1.2
+B = 0.75
 
 
-def bm25_topk(
-    docs: DataFrame,
-    queries: dict[str, str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, queries: dict[str, str], k: int = 10) -> DataFrame:
     """BM25 top-``k`` docs per query -> (query_id, doc_id, score_u, rk).
 
     ``queries`` maps query_id -> query string; query terms are the
     distinct whitespace tokens of each string. ``score_u`` is the
     integer micro-unit BM25 score
-    ``Σ_t floor(idf_u(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)))``
+    ``Σ_t floor(idf_u(t) · tf·(K1+1) / (tf + K1·(1−B+B·dl/avgdl)))``
     with ``idf_u(t) = floor(1e6 · ln(1 + (N−df+0.5)/(df+0.5)))``;
     ties break on doc_id asc for a partitioning-independent cut.
     """
@@ -80,13 +77,13 @@ def bm25_topk(
             F.floor(
                 F.col("idf_u").cast("double")
                 * (
-                    F.col("tf").cast("double") * (k1 + 1.0)
+                    F.col("tf").cast("double") * (K1 + 1.0)
                     / (
                         F.col("tf").cast("double")
-                        + F.lit(k1)
+                        + F.lit(K1)
                         * (
-                            F.lit(1.0 - b)
-                            + F.lit(b)
+                            F.lit(1.0 - B)
+                            + F.lit(B)
                             * F.col("dl").cast("double")
                             / (
                                 F.col("_tt").cast("double")
@@ -193,8 +190,6 @@ def bm25_score_stream(
     docs: DataFrame,
     index: dict,
     queries: dict[str, str],
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Score arriving documents against a standing BM25 index ->
     (doc_id, query_id, score_u); rows only for docs matching >= 1 term.
@@ -217,7 +212,7 @@ def bm25_score_stream(
     w = words_col("text")
     dl = F.size(w).cast("double")
     avgdl = F.lit(float(tt)) / F.lit(float(nd))
-    norm = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / avgdl)
+    norm = F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * dl / avgdl)
     per_query = []
     for qid in sorted(queries):
         terms = sorted({t for t in queries[qid].lower().split() if t})
@@ -235,7 +230,7 @@ def bm25_score_stream(
             contribs.append(
                 F.floor(
                     F.lit(float(idf_map[t]))
-                    * (tf * (k1 + 1.0) / (tf + norm))
+                    * (tf * (K1 + 1.0) / (tf + norm))
                 ).cast("long")
             )
             m = tf > 0

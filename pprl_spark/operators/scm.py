@@ -36,6 +36,9 @@ from pprl_spark.config import EmbedderConfig
 # B x B int64 accumulators (16MB at B=1024). Above it the distributed
 # explode x explode aggregation runs unchanged.
 SCM_DRIVER_ROWS = 20_000
+# Reference training constants (embedder.py:631-639).
+SCM_LEARNING_RATE = 1.0
+SCM_EPS = 0.01
 
 
 def nearest_pos_semi_definite(X: np.ndarray, eps: float = 0.0) -> np.ndarray:
@@ -75,8 +78,6 @@ def _counts_to_matrix(counts: DataFrame, size: int) -> np.ndarray:
 def train_scm(
     aligned: DataFrame,
     config: EmbedderConfig,
-    learning_rate: float = 1.0,
-    eps: float = 0.01,
     seed: int = 42,
     prior_matched: np.ndarray | None = None,
     prior_unmatched: np.ndarray | None = None,
@@ -182,10 +183,10 @@ def train_scm(
         Fu = _counts_to_matrix(joint_freq_counts(jumbled), size)
 
     eye = np.eye(size, dtype=np.float32)
-    fm = (prior_matched if prior_matched is not None else eye) + learning_rate * Fm
-    fu = (prior_unmatched if prior_unmatched is not None else eye) + learning_rate * Fu
+    fm = (prior_matched if prior_matched is not None else eye) + SCM_LEARNING_RATE * Fm
+    fu = (prior_unmatched if prior_unmatched is not None else eye) + SCM_LEARNING_RATE * Fu
 
-    scm = np.log(fm + eps) - np.log(fu + eps)  # embedder.py:639
+    scm = np.log(fm + SCM_EPS) - np.log(fu + SCM_EPS)  # embedder.py:639
     scm = nearest_pos_semi_definite(scm, eps=1e-6)  # embedder.py:643
     return {"scm": scm, "freq_matr_matched": fm, "freq_matr_unmatched": fu}
 

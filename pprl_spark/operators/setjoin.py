@@ -214,24 +214,22 @@ def jaccard_join(
     s1 = base.select(F.col("_id").alias("id1"), F.col("_tk").alias("_tk1"))
     s2 = base.select(F.col("_id").alias("id2"), F.col("_tk").alias("_tk2"))
     inter = F.size(F.array_intersect("_tk1", "_tk2")).cast("long")
+    n1 = F.size("_tk1").cast("long")
+    n2 = F.size("_tk2").cast("long")
+    i = F.col("intersection")
     return (
         cand.join(s1, "id1")
         .join(s2, "id2")
         .withColumn("intersection", inter)
-        .withColumn(
-            "_union",
-            (F.size("_tk1") + F.size("_tk2")).cast("long") - F.col("intersection"),
-        )
-        .filter(F.col("intersection") * F.lit(den) >= F.col("_union") * F.lit(num))
+        # i / (n1 + n2 - i) >= num/den in integers, with i appearing once
+        .filter(i * F.lit(num + den) >= (n1 + n2) * F.lit(num))
         .select(
             "id1",
             "id2",
-            F.size("_tk1").cast("long").alias("n1"),
-            F.size("_tk2").cast("long").alias("n2"),
+            n1.alias("n1"),
+            n2.alias("n2"),
             "intersection",
-            (F.col("intersection").cast("double") / F.col("_union").cast("double")).alias(
-                "jaccard"
-            ),
+            (i.cast("double") / (n1 + n2 - i).cast("double")).alias("jaccard"),
         )
     )
 

@@ -319,6 +319,12 @@ def _scm_rescore(cand: DataFrame, emb_a: DataFrame, emb_b: DataFrame, scm) -> Da
     return soft_cosine_pairs_native(cand.drop("sim"), emb_a, emb_b, scm, out_col="sim")
 
 
+# source columns the embed stages carry through
+LINKAGE_KEEP = [
+    "doc_id", "true_id", "given_name", "surname", "date_of_birth", "sex", "address", "postcode"
+]
+
+
 def run_linkage(
     spark: SparkSession,
     config: EmbedderConfig,
@@ -328,7 +334,6 @@ def run_linkage(
     run_id: str = "run-0",
     use_thresholds: bool = False,
     match_rounds: int = 1,
-    keep: list[str] | None = None,
     scm=None,
     jw_field: str | None = None,
     jw_weight: float = 0.3,
@@ -354,15 +359,15 @@ def run_linkage(
     trained-linkage path (`embedder.py:568-645`) — before thresholding and
     matching.
 
-    ``jw_field``: optional name of a kept column (e.g. ``"surname"``);
-    when set, candidate sims are blended with batched Jaro-Winkler on
-    that field — ``sim = (1-jw_weight)*sim + jw_weight*jw`` — the north
-    star's Dice/Jaro-Winkler pair scoring
+    ``jw_field``: optional name of a kept column (one of ``LINKAGE_KEEP``,
+    e.g. ``"surname"``); when set, candidate sims are blended with
+    batched Jaro-Winkler on that field —
+    ``sim = (1-jw_weight)*sim + jw_weight*jw`` — the north star's
+    Dice/Jaro-Winkler pair scoring
     (``operators.matching.jaro_winkler_rescore``).
     """
     import hashlib
 
-    keep = keep or ["doc_id", "true_id", "given_name", "surname", "date_of_birth", "sex", "address", "postcode"]
     io = ParquetStageIO(base_dir)
 
     if bucket_blocks is None:
@@ -383,8 +388,8 @@ def run_linkage(
         run_params_hash=hashlib.md5(params.encode()).hexdigest()[:16],
     )
 
-    emb_a = pipe.stage("embed_a", lambda: embed_documents(docs_a, config, keep=keep))
-    emb_b = pipe.stage("embed_b", lambda: embed_documents(docs_b, config, keep=keep))
+    emb_a = pipe.stage("embed_a", lambda: embed_documents(docs_a, config, keep=LINKAGE_KEEP))
+    emb_b = pipe.stage("embed_b", lambda: embed_documents(docs_b, config, keep=LINKAGE_KEEP))
 
     blk_a = pipe.stage(
         "block_a",

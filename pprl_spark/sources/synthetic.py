@@ -78,7 +78,11 @@ DOCS_SCHEMA = T.StructType(
 )
 
 
-def _entity(seed: int, idx: int, celebrity_fraction: float) -> dict:
+# share of entities collapsed onto the hot "celebrity" block keys
+CELEBRITY_FRACTION = 0.01
+
+
+def _entity(seed: int, idx: int) -> dict:
     rng = random.Random((seed << 34) ^ (idx * 2_654_435_761))
     ent = {
         "given_name": rng.choice(GIVEN_NAMES),
@@ -90,7 +94,7 @@ def _entity(seed: int, idx: int, celebrity_fraction: float) -> dict:
     }
     # celebrity blocks: a deterministic slice of entities collapses onto a
     # handful of shared (surname, postcode, dob-year) values -> hot keys
-    if rng.random() < celebrity_fraction:
+    if rng.random() < CELEBRITY_FRACTION:
         hot = rng.randint(0, 3)
         ent["surname"] = SURNAMES[hot]
         ent["postcode"] = f"{9000 + hot}"
@@ -155,7 +159,6 @@ def synthesize_documents(
     source: str = "A",
     seed: int = 42,
     corrupt: bool | None = None,
-    celebrity_fraction: float = 0.01,
     partitions: int | None = None,
 ) -> DataFrame:
     """Generate one party's documents table (doc_id, true_id, spans)."""
@@ -168,7 +171,7 @@ def synthesize_documents(
             rows = []
             for idx in pdf["id"]:
                 idx = int(idx)
-                ent = _entity(seed, idx, celebrity_fraction)
+                ent = _entity(seed, idx)
                 if corrupt:
                     ent = _corrupt(seed, idx, ent)
                 doc_id = f"{source}-{idx:08d}"

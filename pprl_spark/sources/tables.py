@@ -1,10 +1,11 @@
-"""Document-table readers/writers: parquet (default), JSON, CSV.
+"""Document-table readers/writers: parquet (default) and JSON.
 
 Source parity with the reference (SURVEY.md §2.1): S1/S2 JSON read/write
 (`/root/reference/scripts/server.py:89-97`, `matching/local.py:26-30`),
-S3 all-string CSV read (`src/pprl/app/__init__.py:63`). The reference
-reads flat per-party tables; here flat records are lifted into the
-input_hint spans shape so every downstream stage sees one document model.
+S3 all-string CSV (`src/pprl/app/__init__.py:63`) as ``spark.read.csv``
+plus :func:`lift_flat_records`. The reference reads flat per-party
+tables; here flat records are lifted into the input_hint spans shape so
+every downstream stage sees one document model.
 On a cluster the parquet paths are replaced by Iceberg tables
 (``spark.read.table``) — same shape.
 """
@@ -67,17 +68,6 @@ def lift_flat_records(
     return df.select(*cols)
 
 
-def read_flat_csv(
-    spark: SparkSession, path: str, id_col: str, field_cols: list[str]
-) -> DataFrame:
-    """S3 analog: all-string CSV (dtype=str + fillna("") semantics) -> spans."""
-    raw = spark.read.option("header", "true").csv(path)  # all columns string
-    filled = raw.select(
-        *[F.coalesce(F.col(c), F.lit("")).alias(c) for c in raw.columns]
-    )
-    return lift_flat_records(filled, id_col, field_cols)
-
-
 def write_bucketed_blocks(
     blocks: DataFrame,
     table: str,
@@ -110,11 +100,8 @@ def write_bucketed_blocks(
     call against an Iceberg catalog writes a bucket-partitioned Iceberg
     table.
     """
-    if "_bk" in blocks.columns:
-        out = blocks  # already hashed (e.g. a read-back stage table)
-    else:
-        cols = [c for c in blocks.columns if c != "block_key"]
-        out = blocks.select(*cols, F.xxhash64("block_key").alias("_bk"))
+    cols = [c for c in blocks.columns if c != "block_key"]
+    out = blocks.select(*cols, F.xxhash64("block_key").alias("_bk"))
     # repartition on the bucket column first: bucketBy writes one file per
     # (task, bucket) pair, and repartition's HashPartitioning is the same
     # murmur3-pmod the bucket id uses, so each task holds exactly one

@@ -32,6 +32,14 @@ from pprl_spark.operators.embedding import embed_documents
 from pprl_spark.operators.matching import mutual_best_match
 from pprl_spark.sources.synthetic import DOCS_SCHEMA
 
+# parquet layouts the event and text streams read
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+)
+TEXT_SCHEMA = "doc_id long, ts timestamp, text string"
+# event-time lateness bound of the watermarked text and event streams
+WATERMARK = "2 hours"
+
 
 def delta_candidates(
     corpus_blocks: DataFrame,
@@ -117,26 +125,15 @@ def delta_match(prior_pairs: DataFrame, new_pairs: DataFrame) -> DataFrame:
     return mutual_best_match(all_pairs, self_linkage=True)
 
 
-def stream_embed(
-    spark: SparkSession,
-    input_dir: str,
-    config: EmbedderConfig,
-    keep: list[str] | None = None,
-) -> DataFrame:
+def stream_embed(spark: SparkSession, input_dir: str, config: EmbedderConfig) -> DataFrame:
     """readStream(parquet docs) -> embed -> block keys (same plan as batch)."""
     stream = spark.readStream.schema(DOCS_SCHEMA).parquet(input_dir)
-    emb = embed_documents(stream, config, keep=keep or ["doc_id", "true_id"])
+    emb = embed_documents(stream, config, keep=["doc_id", "true_id"])
     return add_block_keys(emb, config)
 
 
-def stream_windowed_stats(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window rollup over an event stream.
+def stream_windowed_stats(spark: SparkSession, input_dir: str) -> DataFrame:
+    """Watermarked 1-hour tumbling-window rollup over an event stream.
 
     Same aggregation plan as ``operators.events.windowed_event_stats``
     (minus exact distinct users, unsupported on unbounded streams); the
@@ -147,9 +144,11 @@ def stream_windowed_stats(
     from pprl_spark.operators.events import windowed_event_stats
 
     stream = (
-        spark.readStream.schema(schema).parquet(input_dir).withWatermark("ts", watermark)
+        spark.readStream.schema(EVENTS_SCHEMA)
+        .parquet(input_dir)
+        .withWatermark("ts", WATERMARK)
     )
-    return windowed_event_stats(stream, window=window, exact_users=False)
+    return windowed_event_stats(stream, exact_users=False)
 
 
 def start_parquet_append(
@@ -175,12 +174,7 @@ def start_parquet_append(
     )
 
 
-def sessionize_stream(
-    spark: SparkSession,
-    input_dir: str,
-    gap_minutes: int = 30,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-) -> DataFrame:
+def sessionize_stream(spark: SparkSession, input_dir: str, gap_minutes: int = 30) -> DataFrame:
     """Custom stateful streaming operator: gap-based sessionization via
     ``applyInPandasWithState``.
 
@@ -228,7 +222,7 @@ def sessionize_stream(
         yield pd.DataFrame(sessions, columns=out_cols)
 
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(EVENTS_SCHEMA)
         .parquet(input_dir)
         .withWatermark("ts", f"{gap_minutes} minutes")
     )
@@ -241,12 +235,7 @@ def sessionize_stream(
     )
 
 
-def stream_exact_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str = "doc_id long, ts timestamp, text string",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def stream_exact_dedup(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming exact dedup: emit only the FIRST occurrence of each
     normalized-text fingerprint across micro-batches.
 
@@ -265,21 +254,16 @@ def stream_exact_dedup(
     first-occurrence dedup over the same input.
     """
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(TEXT_SCHEMA)
         .parquet(input_dir)
         .select("*", *text_key("text"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
     )
     return stream.dropDuplicatesWithinWatermark(["fp1", "fp2"])
 
 
 def stream_decontaminate(
-    spark: SparkSession,
-    input_dir: str,
-    bench: DataFrame,
-    schema: str = "doc_id long, ts timestamp, text string",
-    n: int = 3,
-    watermark: str | None = "2 hours",
+    spark: SparkSession, input_dir: str, bench: DataFrame, n: int = 3
 ) -> DataFrame:
     """Streaming twin of ``operators.corpus.decontaminate``: arriving
     documents are checked against a STATIC benchmark gram table (eval
@@ -287,19 +271,21 @@ def stream_decontaminate(
     broadcast once; each batch is a scan + broadcast join, and the
     per-doc shared-gram count is a streaming aggregation whose state
     holds only CONTAMINATED doc_ids — rare by construction — grouped
-    under the event-time window so the ``watermark`` evicts finished
-    rows (a doc's grams all arrive in its one input row, so its count
-    is complete in the batch that carries it; pass ``watermark=None``
-    only for bounded test inputs). Emit with update/append mode;
-    returns (doc_id, n_shared), same contract as the batch operator.
+    under the 1-hour event-time window so the ``WATERMARK`` evicts
+    finished rows (a doc's grams all arrive in its one input row, so its
+    count is complete in the batch that carries it). Emit with
+    update/append mode; returns (doc_id, n_shared), same contract as the
+    batch operator.
     """
     from pprl_spark.functions.text import rolling_hash_col, word_shingles
     from pprl_spark.operators.corpus import benchmark_grams
 
     grams = F.broadcast(benchmark_grams(bench, n=n))
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    if watermark is not None:
-        stream = stream.withWatermark("ts", watermark)
+    stream = (
+        spark.readStream.schema(TEXT_SCHEMA)
+        .parquet(input_dir)
+        .withWatermark("ts", WATERMARK)
+    )
     doc_grams = stream.select(
         "doc_id",
         "ts",
@@ -310,25 +296,14 @@ def stream_decontaminate(
         ).alias("gram"),
     )
     hits = doc_grams.join(grams, "gram")
-    keys = (
-        [F.window("ts", "1 hour"), F.col("doc_id")]
-        if watermark is not None
-        else [F.col("doc_id")]
-    )
-    agg = hits.groupBy(*keys).agg(F.count("*").alias("n_shared"))
+    agg = hits.groupBy(F.window("ts", "1 hour"), "doc_id").agg(F.count("*").alias("n_shared"))
     return agg.select("doc_id", "n_shared")
 
 
-def asof_stream(
-    spark: SparkSession,
-    input_dir: str,
-    left_type: str = "view",
-    right_type: str = "error",
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-) -> DataFrame:
+def asof_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming as-of join over ONE interleaved event stream: each
-    ``left_type`` event is annotated with the newest ``right_type``
-    event of the same user at-or-before it among those ALREADY ARRIVED.
+    ``view`` event is annotated with the newest ``error`` event of the
+    same user at-or-before it among those ALREADY ARRIVED.
 
     Per-user state is exactly one row — the max-(ts, event_id) right
     payload seen so far — so state is bounded by |users| regardless of
@@ -365,10 +340,10 @@ def asof_stream(
         out = []
         for r in rows.itertuples(index=False):
             ts_us = int(pd.Timestamp(r.ts).value // 1000)
-            if r.event_type == right_type:
+            if r.event_type == "error":
                 if best is None or (ts_us, int(r.event_id)) >= (best[0], best[1]):
                     best = (ts_us, int(r.event_id), float(r.value))
-            elif r.event_type == left_type:
+            elif r.event_type == "view":
                 if best is not None and best[0] <= ts_us:
                     out.append((int(r.event_id), user, ts_us, best[1], best[0], best[2]))
                 else:
@@ -377,9 +352,9 @@ def asof_stream(
             state.update(best)
         yield pd.DataFrame(out, columns=out_cols)
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(input_dir)
     return (
-        stream.where(F.col("event_type").isin(left_type, right_type))
+        stream.where(F.col("event_type").isin("view", "error"))
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,
@@ -398,12 +373,12 @@ def stream_near_duplicates(
     spark: SparkSession,
     input_dir: str,
     corpus_index: tuple[DataFrame, DataFrame],
-    schema: str = "doc_id long, ts timestamp, text string",
+    schema: str = TEXT_SCHEMA,
     k: int = 3,
     threshold: float = 0.7,
     bands: int = 8,
     rows_per_band: int = 2,
-    watermark: str | None = "2 hours",
+    watermark: str | None = WATERMARK,
 ) -> DataFrame:
     """Streaming twin of ``operators.dedup.delta_near_duplicates``,
     DELTA-vs-CORPUS only: arriving documents probe a STATIC standing
@@ -471,7 +446,6 @@ def anomaly_stream(
     input_dir: str,
     trailing: int = 6,
     min_windows: int = 3,
-    schema: str = "event_type string, window_start long, n_events long",
 ) -> DataFrame:
     """Streaming trailing-window anomaly scorer over a per-window count
     stream -> (event_type, window_start, n_events, n_prev, mean_u, z_u).
@@ -536,7 +510,9 @@ def anomaly_stream(
         state.update(tuple(hist + [0] * (trailing - len(hist))) + (len(hist),))
         yield pd.DataFrame(out, columns=out_cols)
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    stream = spark.readStream.schema(
+        "event_type string, window_start long, n_events long"
+    ).parquet(input_dir)
     return stream.groupBy("event_type").applyInPandasWithState(
         fn,
         outputStructType=(

@@ -4,8 +4,8 @@
 (``embedding.bloom_batch``, ``generate_candidates``,
 ``mutual_best_match``), and its near-duplicate queries through the
 ``operators.dedup`` key-join + verify path; these checks run the
-scored-pair, Dice, mutual-best, dedup, set-join, graph and corpus
-queries on the sf0.001 tables and compare them value-exactly with the
+scored-pair, Dice, mutual-best, dedup, set-join, graph, corpus and
+text-scoring queries on the sf0.001 tables and compare them value-exactly with the
 closed-form SQL twins, as ``tools/check_oracles.py`` does.
 """
 
@@ -42,6 +42,9 @@ def con():
         "graph_triangles",
         "corpus_divergence",
         "text_dup_spans",
+        "text_jaro_winkler",
+        "text_bm25",
+        "dedup_simhash",
     ],
 )
 def test_entry_query_matches_oracle(spark, con, name):

@@ -7,12 +7,13 @@ docstring golden at `bloom_filters.py:63-67`.
 from hypothesis import given
 from hypothesis import strategies as st
 
-from pprl_spark.functions.hashing import bloom_indices, bloom_indices_with_collisions
+from pprl_spark.functions.hashing import bloom_indices_with_collisions
 
 
 def test_golden_abc():
     # bloom_filters.py:63-67: ["a","b","c"], defaults -> this exact set
-    assert set(bloom_indices(["a", "b", "c"])) == {334, 1013, 192, 381, 18, 720}
+    idx = bloom_indices_with_collisions(["a", "b", "c"])[0]
+    assert set(idx) == {334, 1013, 192, 381, 18, 720}
 
 
 def test_memo_equivalence():
@@ -25,8 +26,8 @@ def test_memo_equivalence():
 
 
 def test_salt_changes_indices():
-    a = bloom_indices(["a", "b"], salt="")
-    b = bloom_indices(["a", "b"], salt="pepper")
+    a = bloom_indices_with_collisions(["a", "b"], salt="")[0]
+    b = bloom_indices_with_collisions(["a", "b"], salt="pepper")[0]
     assert a != b
 
 
@@ -44,13 +45,34 @@ def test_index_bounds_and_collision_range(feats, size, num_hashes, offset):
     assert idx == sorted(set(idx))
 
 
+def _jvm_bitmap(indices, n_words: int):
+    """Sparse index array -> n_words signed longs, as a JVM aggregate."""
+    from pyspark.sql import functions as F
+
+    pow2 = F.array(
+        *[F.lit(1 << i if i < 63 else -(2**63)).cast("long") for i in range(64)]
+    )
+    wseq = F.array(*[F.lit(w) for w in range(n_words)])
+    return F.aggregate(
+        indices,
+        F.array_repeat(F.lit(0).cast("long"), n_words),
+        lambda acc, x: F.zip_with(
+            acc,
+            wseq,
+            lambda a, w: F.when(
+                F.floor(x.cast("long") / 64).cast("int") == w,
+                a.bitwiseOR(F.element_at(pow2, (x % 64 + 1).cast("int"))),
+            ).otherwise(a),
+        ),
+    )
+
+
 def test_pack_bitmap_matches_jvm_bitmap(spark):
-    """Python pack_bitmap (embed kernel) == bloom_bitmap_col (JVM HOF)
+    """Python pack_bitmap (embed kernel) == the JVM bitmap aggregate
     for boundary-heavy index sets, incl. bit 63's two's-complement wrap."""
     from pyspark.sql import functions as F
 
     from pprl_spark.functions.hashing import pack_bitmap
-    from pprl_spark.operators.candidates import bloom_bitmap_col
 
     cases = [
         [],
@@ -64,7 +86,7 @@ def test_pack_bitmap_matches_jvm_bitmap(spark):
     df = spark.createDataFrame([(i, c) for i, c in enumerate(cases)], "i int, ix array<int>")
     got = {
         r["i"]: r["bm"]
-        for r in df.select("i", bloom_bitmap_col(F.col("ix"), 16).alias("bm")).collect()
+        for r in df.select("i", _jvm_bitmap(F.col("ix"), 16).alias("bm")).collect()
     }
     for i, c in enumerate(cases):
         assert got[i] == pack_bitmap(c, 16), c
