@@ -662,13 +662,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         def kernel(batches):
-            from pprl_spark.functions.tokens import gen_double_metaphone
+            from pprl_spark.functions.phonetic import double_metaphone
 
             for pdf in batches:
                 out = [
                     (doc_id, c)
                     for doc_id, words in zip(pdf["doc_id"], pdf["words"])
-                    for c in sorted({c for w in words for c in gen_double_metaphone(w)})
+                    for c in sorted({c for w in words for c in double_metaphone(w) if c})
                 ]
                 yield pd.DataFrame(out, columns=["doc_id", "code"])
 
@@ -703,18 +703,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def text_jaro_winkler(spark, sf_dir):
         # JW similarity between consecutive docs' first 12 words — the
-        # pair scorer (operators.matching.jaro_winkler_rescore) over
+        # pair scorer (operators.matching.jaro_winkler_scores) over
         # (doc_id, doc_id+1); kernel parity with DuckDB's
         # jaro_winkler_similarity (fuzz-verified)
-        from pprl_spark.operators.matching import jaro_winkler_rescore
+        from pprl_spark.operators.matching import jaro_winkler_scores
 
         docs = _docs(spark, sf_dir).select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.array_join(F.slice(F.split(F.lower("text"), r"\s+"), 1, 12), " ").alias("t"),
         )
-        pairs = docs.select(F.col("doc_id").alias("id1"), (F.col("doc_id") + 1).alias("id2"))
-        out = jaro_winkler_rescore(pairs, docs, None, "t")
-        return out.select(F.col("id1").alias("doc_id"), _floor6(F.col("jw_sim")).alias("jw"))
+        nxt = docs.select((F.col("doc_id") - 1).alias("doc_id"), F.col("t").alias("t2"))
+        out = jaro_winkler_scores(docs.join(nxt, "doc_id"), "t", "t2")
+        return out.select("doc_id", _floor6(F.col("jw_sim")).alias("jw"))
 
     def pprl_jw_pairs(spark, sf_dir):
         # north-star pair scoring: batched Jaro-Winkler over the BLOCKED

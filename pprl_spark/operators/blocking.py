@@ -169,7 +169,7 @@ def add_block_keys(df: DataFrame, config: EmbedderConfig) -> DataFrame:
 
 
 def explode_blocks(df: DataFrame, include_indices: bool = True) -> DataFrame:
-    """(doc_id, [bf_indices,] bf_n, [bf_bitmap,] block_key) — one row per
+    """(doc_id, [bf_indices,] bf_bitmap, bf_n, block_key) — one row per
     (document, key).
 
     Projects down to the columns the candidate join actually needs BEFORE
@@ -180,20 +180,13 @@ def explode_blocks(df: DataFrame, include_indices: bool = True) -> DataFrame:
     stage table entirely.
 
     ``include_indices=False`` drops the ~360B ``bf_indices`` array too —
-    when a precomputed ``bf_bitmap`` exists, the candidate join needs
-    only the 128B bitmap and the scalar ``bf_n`` (set cardinality for the
-    similarity denominator), so the exploded stage table shrinks ~60%.
+    the candidate join needs only the embed kernel's 128B ``bf_bitmap``
+    and the scalar ``bf_n`` (set cardinality for the similarity
+    denominator), so the exploded stage table shrinks ~60%.
     The pipeline's block stages use this; keep indices when downstream
     consumers (per-block Hungarian scoring, SCM alignment) read them.
     """
-    cols = ["doc_id"]
-    if include_indices or "bf_bitmap" not in df.columns:
-        cols.append("bf_indices")
-    if "bf_bitmap" in df.columns:
-        # precomputed join-side bitmap (embed kernel): 128B/doc vs ~360B
-        # of indices — cheaper through the ~10x key explosion, and spares
-        # the candidate join its interpreted-HOF bitmap reconstruction
-        cols.append("bf_bitmap")
+    cols = ["doc_id", *(["bf_indices"] if include_indices else []), "bf_bitmap"]
     return df.select(
         *cols,
         F.size("bf_indices").alias("bf_n"),

@@ -42,6 +42,8 @@ SMALL_GRAPH_EDGES_STR = 1_000_000
 # adjacency (n^2 <= 64MB) instead of per-edge np.minimum.at scatters —
 # see _cc_driver
 DENSE_CC_NODES = 8_192
+# PageRank fixed-point unit: every rank is a BIGINT count of 1/PR_SCALE
+PR_SCALE = 10**12
 
 
 def _cc_driver(edges: DataFrame) -> DataFrame:
@@ -416,9 +418,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
 
 
-def _pagerank_driver(
-    e: DataFrame, iterations: int, damping_pct: int, scale: int
-) -> DataFrame:
+def _pagerank_driver(e: DataFrame, iterations: int, damping_pct: int) -> DataFrame:
     """Counted small-graph fast path: the identical integer fixed-point
     power iteration, vectorized on the driver.
 
@@ -449,8 +449,8 @@ def _pagerank_driver(
             [], f"doc_id {dtype}, deg long, pr_u long, pr double"
         )
     deg = np.bincount(src_c, minlength=n).astype(np.int64)
-    base = (scale * (100 - damping_pct)) // (100 * n)
-    pr = np.full(n, scale // n, dtype=np.int64)
+    base = (PR_SCALE * (100 - damping_pct)) // (100 * n)
+    pr = np.full(n, PR_SCALE // n, dtype=np.int64)
     for _ in range(iterations):
         contrib = (pr[src_c] * damping_pct) // (100 * deg[src_c])
         s = np.zeros(n, dtype=np.int64)
@@ -461,7 +461,7 @@ def _pagerank_driver(
             "doc_id": uniq,
             "deg": deg,
             "pr_u": pr,
-            "pr": pr / float(scale),
+            "pr": pr / float(PR_SCALE),
         }
     )
     return spark.createDataFrame(
@@ -473,7 +473,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 5,
     damping_pct: int = 85,
-    scale: int = 10**12,
     small_graph_edges: int | None = None,
 ) -> DataFrame:
     """Fixed-point PageRank over an undirected graph ->
@@ -485,9 +484,9 @@ def pagerank(
     corpus high-PR hubs are the boilerplate/template attractors blocking
     diagnostics want surfaced first.
 
-    Every quantity is a BIGINT in fixed-point units of ``1/scale``:
+    Every quantity is a BIGINT in fixed-point units of ``1/PR_SCALE``:
     the power iteration ``v' = base + Σ_{u->v} (v_u * damping_pct) DIV
-    (100 * deg(u))`` (with ``base = (scale * (100 - damping_pct)) DIV
+    (100 * deg(u))`` (with ``base = (PR_SCALE * (100 - damping_pct)) DIV
     (100 * N)``) uses only integer multiply / integer divide / integer
     sum, so the result is bit-identical on every engine and independent
     of partitioning and summation order — double-precision PageRank is
@@ -495,7 +494,7 @@ def pagerank(
     nondeterministic). Truncation loses at most ``N * iterations`` units
     of total mass (~1e-9 relative at the defaults), far below any
     ranking-relevant difference. ``pr`` is the single exactly-rounded
-    division ``pr_u / scale`` for human consumption.
+    division ``pr_u / PR_SCALE`` for human consumption.
 
     Scale shape: ``iterations`` is a small constant (PageRank on
     near-dup graphs converges in a handful of rounds; node count inside
@@ -505,7 +504,7 @@ def pagerank(
     ``localCheckpoint``-ed, keeping lineage constant-depth. Undirected
     degree >= 1 by construction (every node arrives on an edge), so
     there are no dangling nodes.
-    Overflow headroom: ``v <= scale`` (mass is conserved minus
+    Overflow headroom: ``v <= PR_SCALE`` (mass is conserved minus
     truncation), so ``v * damping_pct <= 8.5e13`` ≪ 2^63.
     """
     if iterations < 1:
@@ -528,16 +527,16 @@ def pagerank(
             else SMALL_GRAPH_EDGES
         )
     if small_graph_edges and e.count() <= small_graph_edges:
-        return _pagerank_driver(e, iterations, damping_pct, scale)
+        return _pagerank_driver(e, iterations, damping_pct)
     und = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint()
     deg = und.groupBy("u").agg(F.count("*").cast("long").alias("d"))
     nodes = und.select("u").distinct()
     nn = nodes.agg(F.count("*").cast("long").alias("_n"))
-    base_num = scale * (100 - damping_pct)
+    base_num = PR_SCALE * (100 - damping_pct)
     pr = nodes.join(F.broadcast(nn)).select(
-        "u", F.expr(f"CAST({scale} DIV _n AS BIGINT)").alias("v")
+        "u", F.expr(f"CAST({PR_SCALE} DIV _n AS BIGINT)").alias("v")
     )
     for _ in range(iterations):
         # und's columns are (u, v) = (source, dest) and pr's value
@@ -576,6 +575,6 @@ def pagerank(
             F.col("u").alias("doc_id"),
             F.col("d").alias("deg"),
             F.col("v").alias("pr_u"),
-            (F.col("v").cast("double") / F.lit(float(scale))).alias("pr"),
+            (F.col("v").cast("double") / F.lit(float(PR_SCALE))).alias("pr"),
         )
     )

@@ -89,6 +89,44 @@ def apply_thresholds(
     return out.drop("_t1", "_t2")
 
 
+def jaro_winkler_scores(df: DataFrame, s1: str, s2: str) -> DataFrame:
+    """``df`` with its string columns ``s1`` and ``s2`` replaced by their
+    Jaro-Winkler similarity ``jw_sim`` (null when either side is null).
+
+    The pure-Python Winkler kernel (``functions.similarity.jaro_winkler``,
+    bit-parity with DuckDB's ``jaro_winkler_similarity``) runs via
+    ``mapInPandas`` — one Arrow batch per task, a per-batch memo for
+    repeated (s1, s2) pairs, no per-row Python in the driver.
+    """
+    from pyspark.sql import types as T
+
+    from pprl_spark.functions.similarity import jaro_winkler
+
+    schema = T.StructType(
+        [f for f in df.schema.fields if f.name not in (s1, s2)]
+        + [T.StructField("jw_sim", T.DoubleType())]
+    )
+    keep_cols = [f.name for f in schema.fields[:-1]]
+
+    def kernel(batches):
+        for pdf in batches:
+            memo: dict = {}
+            out = []
+            for a, b in zip(pdf[s1], pdf[s2]):
+                if a is None or b is None:
+                    out.append(None)
+                    continue
+                key = (a, b)
+                v = memo.get(key)
+                if v is None:
+                    v = jaro_winkler(a, b)
+                    memo[key] = v
+                out.append(v)
+            yield pdf[keep_cols].assign(jw_sim=out)
+
+    return df.mapInPandas(kernel, schema)
+
+
 def jaro_winkler_rescore(
     pairs: DataFrame,
     docs1: DataFrame,
@@ -103,12 +141,8 @@ def jaro_winkler_rescore(
     Joins each side's ``field`` string (by ``doc_id``) onto the
     ``(id1, id2)`` pair table (two
     hash-joins on 8-byte-ish ids; the strings never appear in the blocked
-    join itself) and scores with the pure-Python Winkler kernel
-    (``functions.similarity.jaro_winkler``, bit-parity with DuckDB's
-    ``jaro_winkler_similarity``) via ``mapInPandas`` — one Arrow batch
-    per task, a per-batch memo for repeated (s1, s2) pairs, no per-row
-    Python in the driver. ``docs2=None`` means self-linkage (both sides
-    drawn from ``docs1``).
+    join itself) and scores with :func:`jaro_winkler_scores`.
+    ``docs2=None`` means self-linkage (both sides drawn from ``docs1``).
 
     ``weight`` blends the JW score into ``sim`` in place:
     ``sim = (1-weight)*sim + weight*jw`` — the Bloom-set similarity
@@ -117,41 +151,11 @@ def jaro_winkler_rescore(
     pipelines combine signals. With ``weight=None`` the raw ``jw_sim``
     is appended and the caller combines.
     """
-    import pandas as pd
-
-    from pprl_spark.functions.similarity import jaro_winkler
-
     s1 = docs1.select(F.col("doc_id").alias("id1"), F.col(field).alias("_jw_s1"))
     s2 = (docs2 if docs2 is not None else docs1).select(
         F.col("doc_id").alias("id2"), F.col(field).alias("_jw_s2")
     )
-    joined = pairs.join(s1, "id1").join(s2, "id2")
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [f for f in joined.schema.fields if f.name not in ("_jw_s1", "_jw_s2")]
-        + [T.StructField("jw_sim", T.DoubleType())]
-    )
-    keep_cols = [f.name for f in schema.fields[:-1]]
-
-    def kernel(batches):
-        for pdf in batches:
-            memo: dict = {}
-            out = []
-            for a, b in zip(pdf["_jw_s1"], pdf["_jw_s2"]):
-                if a is None or b is None:
-                    out.append(None)
-                    continue
-                key = (a, b)
-                v = memo.get(key)
-                if v is None:
-                    v = jaro_winkler(a, b)
-                    memo[key] = v
-                out.append(v)
-            yield pdf[keep_cols].assign(jw_sim=out)
-
-    scored = joined.mapInPandas(kernel, schema)
+    scored = jaro_winkler_scores(pairs.join(s1, "id1").join(s2, "id2"), "_jw_s1", "_jw_s2")
     if weight is None:
         return scored
     blended = F.coalesce(

@@ -373,12 +373,10 @@ def stream_near_duplicates(
     spark: SparkSession,
     input_dir: str,
     corpus_index: tuple[DataFrame, DataFrame],
-    schema: str = TEXT_SCHEMA,
     k: int = 3,
     threshold: float = 0.7,
     bands: int = 8,
     rows_per_band: int = 2,
-    watermark: str | None = WATERMARK,
 ) -> DataFrame:
     """Streaming twin of ``operators.dedup.delta_near_duplicates``,
     DELTA-vs-CORPUS only: arriving documents probe a STATIC standing
@@ -392,7 +390,7 @@ def stream_near_duplicates(
     ``threshold`` filter runs BEFORE the grouping (state holds only
     near-duplicate pairs — rare by construction, same trick as
     ``stream_decontaminate``'s contaminated-only state), and the
-    event-time window under ``watermark`` evicts finished rows (a
+    event-time window under ``WATERMARK`` evicts finished rows (a
     doc's band keys all travel in its one input row, so its pairs
     complete within the batch that carries it).
 
@@ -407,9 +405,11 @@ def stream_near_duplicates(
     from pprl_spark.operators.dedup import _jaccard
 
     corpus_base, corpus_band = corpus_index
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    if watermark is not None:
-        stream = stream.withWatermark("ts", watermark)
+    stream = (
+        spark.readStream.schema(TEXT_SCHEMA)
+        .parquet(input_dir)
+        .withWatermark("ts", WATERMARK)
+    )
     # null-text pre-filter instead of size(sh) > 0: pushdown would
     # re-evaluate the shingle fold for the filter (dedup.minhash_index);
     # shingle arrays are never empty for non-null text
@@ -432,12 +432,9 @@ def stream_near_duplicates(
         "corpus_id",
     ).withColumn("jaccard", _jaccard(F.col("sh"), F.col("sh2")))
     near = scored.where(F.col("jaccard") >= threshold)
-    keys = (
-        [F.window("ts", "1 hour"), F.col("doc_id"), F.col("corpus_id")]
-        if watermark is not None
-        else [F.col("doc_id"), F.col("corpus_id")]
+    out = near.groupBy(F.window("ts", "1 hour"), "doc_id", "corpus_id").agg(
+        F.max("jaccard").alias("jaccard")
     )
-    out = near.groupBy(*keys).agg(F.max("jaccard").alias("jaccard"))
     return out.select("doc_id", "corpus_id", "jaccard")
 
 
