@@ -109,10 +109,6 @@ class EmbedderConfig:
     def to_json(self) -> str:
         return json.dumps(asdict(self), sort_keys=True)
 
-    @classmethod
-    def from_json(cls, s: str) -> "EmbedderConfig":
-        return cls(**json.loads(s))
-
     @property
     def checksum(self) -> str:
         """Deterministic md5 of the full config.

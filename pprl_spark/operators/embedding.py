@@ -25,9 +25,10 @@ from pprl_spark.config import EmbedderConfig
 from pprl_spark.functions.hashing import bloom_indices_with_collisions, pack_bitmap
 from pprl_spark.operators.blocking import minhash_signatures
 
-# Rows per Python task of the embed stage: a fixed ~0.23 s of worker CPU
-# per task (4-vCPU host) against 0.2-0.25 ms of kernel work per document
-# keeps the fixed cost at <= ~12% of a task. It is also below
+# Rows per Python task of the embed stage, sized for the pair joins
+# downstream (see `embed_documents`); a task's fixed 0.11-0.16 s of CPU
+# (4-vCPU host, workers forked from `pprl_spark._daemon`) is under 10% of
+# a full one at 0.2-0.25 ms of kernel work per document. It is also below
 # `spark.sql.execution.arrow.maxRecordsPerBatch` (10000): one Arrow batch,
 # one hash memo per task.
 ROWS_PER_PYTHON_TASK = 8192
@@ -126,12 +127,16 @@ def embed_documents(
 
     The Python stage runs on ``ceil(rows / ROWS_PER_PYTHON_TASK)`` tasks,
     never more than the input has partitions (``coalesce`` never splits).
-    Rows, not upstream partitions, size it because each Python task pays a
-    fixed ~0.23 s of worker CPU (measured on a 4-vCPU host):
-    ``pyspark.worker``'s ``setup_spark_files`` calls
-    ``importlib.invalidate_caches()``, which re-reads the central directory
-    of ``pyspark.zip`` once per cached zipimporter. The kernel costs
-    0.2-0.25 ms per document. A batch input's projection is an eager
+    Rows, not upstream partitions, size it, for the plan downstream: the
+    few row-sized partitions it emits let the pair joins probe without
+    partitioning that side again. In a traced A/B on a 4-vCPU host (3
+    seeds, 6 pairs), embedding on the input's own partitions instead ran
+    ``candidates`` in 13 jobs rather than 7 and ``incremental`` in 17
+    rather than 11, and the ``linkage`` pass used more CPU in 5 of 6
+    pairs, although its Python tasks, forked from
+    :mod:`pprl_spark._daemon`, no longer re-read ``pyspark.zip``. A Python
+    task now costs 0.11-0.16 s of CPU, the kernel 0.2-0.25 ms per document.
+    A batch input's projection is an eager
     ``localCheckpoint`` first, so the row ``count`` scans the checkpoint
     and never re-runs a lazy upstream (a generator, a join).
     A streaming input (``stream_embed``) cannot be counted or

@@ -8,6 +8,12 @@ driver JVM's heap and flags are left alone. AQE is always on: skewed
 celebrity blocks at 10^12-document scale are re-planned at runtime
 (skew-join splitting + partition coalescing), which complements the
 explicit key-salting in ``operators.blocking``.
+
+A warm session reuses what it has built: the codegen cache holds every
+class a ``linkage`` pass or an oracle sweep generates, and a ``local[...]``
+session this module starts itself forks its Python workers from
+:mod:`pprl_spark._daemon`, which stops each task re-reading
+``pyspark.zip``.
 """
 
 from __future__ import annotations
@@ -73,6 +79,14 @@ def get_spark(
         # session build memory pressure that intermittently doubles a
         # query's wall time. 2min bounds the drift.
         "spark.cleaner.periodicGC.interval": "2min",
+        # The generated-class cache is static and keyed by source, and its
+        # default 100 entries are fewer than one warm pass uses: a
+        # perfbench linkage run compiles 143 distinct classes, an sf0.01
+        # oracle sweep 1,203. At 100, every warm linkage pass recompiled
+        # ~90 byte-identical classes and the JIT compiled them again.
+        # 2000 is the sweep plus headroom; it costs Metaspace nothing on
+        # a linkage run and 6 MB by the end of the sweep.
+        "spark.sql.codegen.cache.maxEntries": "2000",
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
         # Arrow's JNI critical sections starve G1 allocations under load
@@ -82,6 +96,13 @@ def get_spark(
             "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=100"
         ),
     }
+    if not launcher and master.startswith("local"):
+        # under spark-submit, --py-files reach the workers only after the
+        # daemon has started, so it could not import this package; here
+        # the workers get its root on their path, wherever they start
+        defaults["spark.python.daemon.module"] = "pprl_spark._daemon"
+        defaults["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__)))
     builder = SparkSession.builder
     for key, value in defaults.items():
         if key not in launcher:

@@ -86,6 +86,31 @@ def test_run_params_invalidate_checkpoints(spark, parties, tmp_path_factory):
     assert not other.skipped
 
 
+def test_pipeline_with_thresholds(spark, parties, tmp_path_factory):
+    """use_thresholds: every surviving match scores at least both rows'
+    self-similarity thresholds plus rel_cutoff, and at least abs_cutoff.
+    Party A holds exact twins of 20 of its records under new ids, so
+    their thresholds are near 1 and mask their cross-party pairs
+    (without the mask, 20 of the matches break the rule)."""
+    base = str(tmp_path_factory.mktemp("pipe_thr"))
+    A, B = parties
+    A = A.unionByName(synthesize_documents(spark, 20, "C", corrupt=False))
+    cfg = EmbedderConfig(abs_cutoff=0.3, rel_cutoff=0.05)
+    pipe = run_linkage(spark, cfg, A, B, base, run_id="r1", use_thresholds=True)
+    assert {"thresholds_a", "thresholds_b"} <= set(pipe.executed)
+    matches = pipe.io.read(spark, "matches")
+    for side, col in (("a", "id1"), ("b", "id2")):
+        thr = pipe.io.read(spark, f"thresholds_{side}")
+        matches = matches.join(thr.select(F.col("doc_id").alias(col),
+                                          F.col("thresholds").alias(f"t_{side}")), col, "left")
+    rows = matches.collect()
+    assert 0 < len(rows) < N
+    for m in rows:
+        assert m["sim"] >= cfg.abs_cutoff
+        for t in (m["t_a"], m["t_b"]):
+            assert t is None or m["sim"] >= t + cfg.rel_cutoff
+
+
 def test_stageio_contract(spark):
     """ParquetStageIO and IcebergStageIO expose the same stage-table
     surface with identical parameter lists, so the pipeline can swap

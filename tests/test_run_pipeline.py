@@ -55,15 +55,19 @@ PROBE = """\
 from pprl_spark.session import get_spark
 spark = get_spark()
 conf = spark.sparkContext.getConf()
+rows = spark.range(6, numPartitions=2).mapInPandas(lambda it: it, "id long").count()
 print("PROBE", conf.get("spark.master"), conf.get("spark.driver.memory"),
-      spark.conf.get("spark.sql.shuffle.partitions"))
+      spark.conf.get("spark.sql.shuffle.partitions"),
+      conf.get("spark.python.daemon.module", "unset"), rows)
 """
 
 
 def test_get_spark_keeps_spark_submit_settings(tmp_path):
     """Builder settings beat the launcher's, so get_spark must not set a
     key spark-submit already set (the script would otherwise run on
-    local[SPARK_GRAFT_CPUS] whatever --master said)."""
+    local[SPARK_GRAFT_CPUS] whatever --master said). Nor may it name its
+    own Python daemon there: ``--py-files`` reach the workers only after
+    the daemon has started, so the daemon could not import it."""
     from pyspark.find_spark_home import _find_spark_home
 
     probe = tmp_path / "probe.py"
@@ -79,4 +83,4 @@ def test_get_spark_keeps_spark_submit_settings(tmp_path):
     )
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("PROBE")]
     assert line, out.stderr[-2000:]
-    assert line[0].split()[1:] == ["local[2]", "1g", "3"]
+    assert line[0].split()[1:] == ["local[2]", "1g", "3", "unset", "6"]
