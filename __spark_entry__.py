@@ -2224,7 +2224,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # streaming delta-match decomposition, oracle-checked: split the
         # corpus deterministically (doc_id %% 5 == 0 -> "newly landed"),
         # score only pairs involving a delta doc via delta_candidates
-        # (new-vs-corpus + new-vs-new through the salted blocked join).
+        # (new-vs-corpus + new-vs-new through the blocked pair join).
         # The oracle computes ALL self-pairs over the full table (the
         # union) and keeps those touching a delta doc — equal by the
         # exact decomposition tests/test_streaming_delta.py pins.

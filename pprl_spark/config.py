@@ -64,7 +64,6 @@ class EmbedderConfig:
                                       # P=1.0 R=0.997 F1=0.9985 (gate 0.99);
                                       # recall is carried jointly with the
                                       # sorted-neighborhood keys
-    salt_buckets: int = 8             # skew salting fan-out for hot blocks
     max_block_size: int = 500         # per-block doc cap: blocks above this
                                       # are deterministically thinned (see
                                       # operators.candidates.cap_blocks);

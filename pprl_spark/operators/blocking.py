@@ -15,10 +15,10 @@ groups of ``rows_per_band`` values; equal band vector => same block key.
 Two documents with Jaccard(bf sets) = s collide in ≥1 band with
 p = 1-(1-s^r)^b — the standard LSH S-curve.
 
-Skew (celebrity blocks): a salt column spreads each block over
-``salt_buckets`` sub-blocks on ONE side of the join while the other side
-replicates over all buckets (operators.candidates); AQE skew-join handles
-residual imbalance at runtime.
+Skew (celebrity blocks) is handled at the pair join, not here:
+``operators.candidates`` thins blocks over ``max_block_size`` docs and,
+when the join shuffles, salts each hot block over up to ``SALT_BUCKETS``
+sub-blocks on ONE side while the other side replicates over them.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Candidate-pair generation: salted blocked equi-join + sparse scoring.
+"""Candidate-pair generation: blocked equi-join + sparse scoring.
 
 Replaces the reference's dense cross-join similarity matrix
 (`/root/reference/src/pprl/embedder/embedder.py:468-528`, SURVEY.md §2.4
@@ -11,11 +11,17 @@ identity-SCM soft-cosine ≡ cosine = |A∩B| / (√|A|·√|B|) via
 
 Scale mechanics:
 - dedupe (doc, key) explosion BEFORE the join;
-- per-block salting: side-1 rows get ``salt = pmod(hash(id), S)``, side-2
-  rows replicate over all S salts, so a celebrity block's pairs spread
-  over S shuffle partitions; S is chosen per block from block sizes
-  (small blocks keep S=1 and do not replicate);
-- AQE skew-join catches residual imbalance;
+- one count of the caller's input picks the join shape
+  (:func:`choose_pair_join_hint`) before anything else is planned;
+- celebrity blocks are thinned to ~``max_block_size`` docs
+  (:func:`cap_blocks`);
+- per-block salting only where the join shuffles (sort-merge or
+  shuffle-hash on unbucketed inputs): side-1 rows get
+  ``salt = pmod(hash(id), S)``, side-2 rows replicate over all S salts
+  (S <= ``SALT_BUCKETS``; small blocks keep S=1), so a hot block's pairs
+  spread over S reduce tasks. A broadcast probe is not partitioned by
+  key and is never salted; AQE's skew join splits by input bytes, not
+  output pairs, and does not replace salting;
 - per-pair dedupe (a pair may share several keys) via min(block_key)
   groupBy, which also carries provenance.
 """
@@ -26,6 +32,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pprl_spark.config import EmbedderConfig
+
+# Salt fan-out ceiling for a hot block in the shuffled join shapes.
+SALT_BUCKETS = 8
 
 
 def _heap_bytes(spark, key: str, default: str = "1g") -> int:
@@ -227,11 +236,6 @@ def generate_candidates(
     suppresses the no-skew-protection warning; without it the warning
     stays, so unwitting callers still hear about the unguarded shape.
     """
-    if cap:
-        blocks1 = cap_blocks(blocks1, config)
-        if blocks2 is not None:
-            blocks2 = cap_blocks(blocks2, config)
-
     # Join-side representation: hash the block key to a long (8B sort keys
     # instead of string compares) and score on the Bloom bitmap the embed
     # kernel precomputed (bf_bitmap; functions.hashing.pack_bitmap).
@@ -241,56 +245,10 @@ def generate_candidates(
     # ~2.7x smaller and the per-pair intersect is 16 word-ANDs.
     n_words = -(-(config.bf_size + config.offset) // 64)
 
-    def n_of(blocks):
-        if "bf_n" in blocks.columns:
-            return F.col("bf_n")
-        return F.size("bf_indices")
-
-    def bk_of(blocks):
-        # bucketed stage tables (sources.tables.write_bucketed_blocks)
-        # store the hashed key as _bk; joining on the stored column keeps
-        # the scan's bucket distribution valid, so the pair join runs
-        # with ZERO exchanges on pre-bucketed inputs
-        if "_bk" in blocks.columns:
-            return F.col("_bk")
-        return F.xxhash64("block_key")
-
-    left = blocks1.select(
-        F.col("doc_id").alias("id1"),
-        bk_of(blocks1).alias("_bk"),
-        F.col("bf_bitmap").alias("_bm1"),
-        n_of(blocks1).alias("_n1"),
-    )
-    right_src = blocks2 if blocks2 is not None else blocks1
-    right = right_src.select(
-        F.col("doc_id").alias("id2"),
-        bk_of(right_src).alias("_bk"),
-        F.col("bf_bitmap").alias("_bm2"),
-        n_of(right_src).alias("_n2"),
-    )
-
-    # ---- skew salting -------------------------------------------------
-    # Block sizes on the (usually larger) left side decide the per-block
-    # fan-out S. Small dim table (block_key -> S) is broadcast to both
-    # sides: left takes one salted key, right replicates S times. This is
-    # the classic salt-and-replicate pattern; S=1 for all but hot keys so
-    # replication cost is bounded.
-    #
-    # PRE-BUCKETED inputs (stored _bk column) skip salting entirely:
-    # salting redistributes rows ACROSS a shuffle, and the whole point of
-    # bucketed stage tables is that the join has no shuffle — adding
-    # _salt to the join keys would force the exchange right back in
-    # (Spark requires all cluster keys covered for co-partitioning).
-    # Skew safety on that path comes from cap_blocks, which bounds any
-    # block to max_block_size docs (~cap²/2 pairs per hot bucket task) —
-    # so the zero-exchange path requires cap=True (warning below).
-    # ONE bucketed side also disables salting, deliberately: Spark then
-    # shuffles only the plain side into the bucket distribution — the
-    # delta-match shape, where a small delta probes a big write-once
-    # corpus with zero corpus-side exchange. Salting would replicate the
-    # corpus over the salt range every batch, re-introducing the very
-    # shuffle bucketing removes, to protect against a skew that
-    # cap_blocks already bounds.
+    # bucketed stage tables (sources.tables.write_bucketed_blocks) store
+    # the hashed key as _bk; joining on the stored column keeps the
+    # scan's bucket distribution valid, so the pair join runs with ZERO
+    # exchanges on pre-bucketed inputs
     pre_bucketed = "_bk" in blocks1.columns or (
         blocks2 is not None and "_bk" in blocks2.columns
     )
@@ -303,8 +261,66 @@ def generate_candidates(
             "active. Pass cap=True (default) on bucketed inputs.",
             stacklevel=2,
         )
-    S = config.salt_buckets
-    if S > 1 and not pre_bucketed:
+
+    # Join-strategy hint — NEVER let the planner choose unhinted: both
+    # sides are corpus-sized (docs x keys, carrying the bitmaps), but
+    # Catalyst's size estimate under the explode/checkpoint lineage comes
+    # in under the broadcast threshold — at 100k docs/source the unhinted
+    # plan silently broadcast a ~400MB hash relation from the driver; at
+    # 400k it OOMed the driver outright. "auto" counts the build side and
+    # broadcasts only under a provable heap bound, falling back to
+    # sort-merge (stable at every measured scale: 100k 75-91s, 400k
+    # 518.7s @5g — spills, never wedges); see choose_pair_join_hint for
+    # why shuffle_hash is pin-only. The count runs on the caller's input
+    # BEFORE capping: on the materialized stage tables and checkpoints
+    # the pipeline and bench feed it is a scan-only job, and capping
+    # only drops rows, so it bounds the capped build side from above.
+    hint = config.pair_join_hint
+    if hint == "auto":
+        build = blocks2 if blocks2 is not None else blocks1
+        hint = choose_pair_join_hint(
+            blocks1.sparkSession, build.count(), n_words=n_words
+        )
+
+    if cap:
+        blocks1 = cap_blocks(blocks1, config)
+        if blocks2 is not None:
+            blocks2 = cap_blocks(blocks2, config)
+
+    def side(blocks, i):
+        n = F.col("bf_n") if "bf_n" in blocks.columns else F.size("bf_indices")
+        bk = F.col("_bk") if "_bk" in blocks.columns else F.xxhash64("block_key")
+        return blocks.select(
+            F.col("doc_id").alias(f"id{i}"),
+            bk.alias("_bk"),
+            F.col("bf_bitmap").alias(f"_bm{i}"),
+            n.alias(f"_n{i}"),
+        )
+
+    left = side(blocks1, 1)
+    right = side(blocks2 if blocks2 is not None else blocks1, 2)
+
+    # ---- skew salting, shuffled shapes only ----------------------------
+    # In sort-merge/shuffle-hash a block key is one reduce task, so a hot
+    # block's ~n²/2 pairs land on one core. Left-side block sizes decide
+    # the per-block fan-out S (1 for all but hot keys, so replication is
+    # bounded); left takes one salted key, right replicates S times.
+    # The broadcast shape is skipped: its probe side is not partitioned
+    # by key, so salting only replicates the build side. Measured on the
+    # sf0.1 pprl_score_pairs blocks (15,000 rows, largest block 3,857;
+    # local[4], noop sink, one session): broadcast 8.4-8.5 s salted vs
+    # 6.0-6.8 s not; forced sort-merge 10.5-12.4 s salted vs 15.4-17.3 s
+    # not (AQE's skew join does not split it: its threshold is input
+    # bytes, the skew is in output pairs).
+    # PRE-BUCKETED inputs (a stored _bk column on either side) skip it
+    # too: salt keys would force back the exchange bucketing removes
+    # (Spark requires all cluster keys covered for co-partitioning) — on
+    # the delta-match shape that is the whole write-once corpus
+    # replicated over the salt range every batch. Skew safety there comes
+    # from cap_blocks (~cap²/2 pairs per hot bucket task), hence the
+    # cap=False warning above.
+    join_keys = ["_bk"]
+    if hint != "broadcast" and not pre_bucketed:
         sizes = (
             left.groupBy("_bk")
             .agg(F.count("*").alias("_n"))
@@ -312,7 +328,8 @@ def generate_candidates(
             .withColumn(
                 "_s",
                 F.least(
-                    F.lit(S), F.ceil(F.col("_n") / F.lit(config.max_block_size)).cast("int")
+                    F.lit(SALT_BUCKETS),
+                    F.ceil(F.col("_n") / F.lit(config.max_block_size)).cast("int"),
                 ),
             )
             .select("_bk", "_s")
@@ -330,35 +347,13 @@ def generate_candidates(
             .drop("_s")
         )
         join_keys = ["_bk", "_salt"]
-    else:
-        join_keys = ["_bk"]
 
-    # Join-strategy hint — NEVER let the planner choose unhinted: both
-    # sides are corpus-sized (docs x keys x salt, carrying the bf arrays),
-    # but Catalyst's size estimate under the explode/checkpoint lineage
-    # comes in under the broadcast threshold — at 100k docs/source the
-    # unhinted plan silently broadcast a ~400MB hash relation from the
-    # driver (plan audit showed BuildRight on the FULL salted right side);
-    # at 400k it OOMed the driver outright. "auto" counts the build side
-    # (one cheap action when the caller feeds materialized stage tables,
-    # as the pipeline and bench do) and broadcasts only under a provable
-    # heap bound, falling back to sort-merge (stable at every measured
-    # scale: 100k 75-91s, 400k 518.7s @5g — spills, never wedges); see
-    # choose_pair_join_hint for why shuffle_hash is pin-only.
-    hint = config.pair_join_hint
-    if hint == "auto":
-        # count the un-bitmapped source (scan-only on materialized input);
-        # 1.25 covers the salt replication of hot blocks (bounded by S)
-        build_rows = int(right_src.count() * 1.25)
-        hint = choose_pair_join_hint(left.sparkSession, build_rows, n_words=n_words)
     if hint == "broadcast":
         pairs = left.join(F.broadcast(right), join_keys)
     else:
-        pairs = left.hint(hint).join(right, join_keys)
+        pairs = left.hint(hint).join(right, join_keys).drop("_salt")
     if blocks2 is None:
         pairs = pairs.where(F.col("id1") < F.col("id2"))
-    if "_salt" in pairs.columns:
-        pairs = pairs.drop("_salt")
 
     # Score BEFORE the pair-dedupe shuffle: the intersect runs on the
     # join output where both bitmaps are already co-located, so the
@@ -373,8 +368,8 @@ def generate_candidates(
     # - broadcast shape, 20k docs/side, noop sink: fold 3.0s vs
     #   unrolled 7.5s, unrolled + a monotonically_increasing_id
     #   pushdown barrier 7.2s — the 16-term chain un-JITs the fused
-    #   broadcast-probe + salt-explode stage with or without the
-    #   pushed-down filter duplicating it;
+    #   broadcast-probe stage (then still carrying a salt explode) with
+    #   or without the pushed-down filter duplicating it;
     # - merge shape, 100k docs/side, local[4] (the at-scale shape):
     #   match phase 58.6s with the fold vs 241.4s with
     #   unrolled+barrier. A 20k merge-shape .count() probe had

@@ -29,16 +29,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-SMALL_NUMBER_LIMIT = 100_000
-
-
 def _numbered(
     df: DataFrame,
     order_col: str,
     offset: int,
     shuffle_col: str | None = None,
     range_by: bool = False,
-    known_count: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Assign dense unique ``slot`` numbers starting at ``offset``.
 
@@ -59,37 +55,8 @@ def _numbered(
     offsets equals the GLOBAL sort rank by ``order_col`` — a distributed
     global ordering with no single-task ``Window.orderBy`` anywhere
     (partition boundaries only decide where ranges split, never the rank).
-
-    ``known_count``: the caller's already-counted row total. When it is
-    at or under ``SMALL_NUMBER_LIMIT`` the distributed machinery (range
-    sample + checkpoint + per-partition count collect + offset join —
-    ~6 fixed jobs) is pure overhead: number in a single coalesced
-    partition instead. The ranks are identical — a one-partition
-    ``row_number`` ordered by ``order_col`` IS the global rank the
-    range-partitioned path computes (order keys are hashes, so ties are
-    negligible) — and a deliberate single task over <=1e5 rows is the
-    cheap case, not the scale trap the distributed path exists to avoid.
     """
     spark = df.sparkSession
-    if (
-        known_count is not None
-        and known_count <= SMALL_NUMBER_LIMIT
-        and shuffle_col is None
-    ):
-        # partitionBy(spark_partition_id()) over the single coalesced
-        # partition = global rank, without tripping Spark's "No Partition
-        # Defined" warning the way a constant-foldable lit(0) key does
-        out = df.coalesce(1).withColumn(
-            "slot",
-            (
-                F.row_number().over(
-                    Window.partitionBy(F.spark_partition_id()).orderBy(order_col)
-                )
-                - 1
-                + offset
-            ).cast("long"),
-        )
-        return out, known_count
     if range_by:
         df = df.repartitionByRange(
             spark.sparkContext.defaultParallelism, order_col

@@ -100,16 +100,6 @@ def train_scm(
     # the identical global rank by the same xxhash64 key distributively,
     # so the seeded-shuffle semantics (embedder.py:623) and the trained
     # matrix are unchanged.
-    #
-    # One count action up front feeds _numbered's counted small-input
-    # fast path: below SMALL_NUMBER_LIMIT training rows the distributed
-    # alignment's ~6 fixed jobs (range sample, checkpoint, offset
-    # collects x2 sides) are pure overhead, and a single-partition
-    # numbering produces the identical ranks (order keys are xxhash64 —
-    # no ties). The checkpoint also pins one materialization for both
-    # numbering passes. Measured: scm_scored 16.2s -> ~8s at sf0.1
-    # (865 training rows); the range-partitioned path still engages
-    # unchanged above the threshold.
     aligned = aligned.select("bf_indices_1", "bf_indices_2").localCheckpoint()
     n_train = aligned.count()
     if driver_rows is None:
@@ -160,7 +150,6 @@ def train_scm(
             "_h1",
             offset=0,
             range_by=True,
-            known_count=n_train,
         )
         numbered = numbered.select(
             "bf_indices_1", "bf_indices_2", F.col("slot").alias("rn")
@@ -175,7 +164,6 @@ def train_scm(
             "_h2",
             offset=0,
             range_by=True,
-            known_count=n_train,
         )
         shuffled2 = shuffled2.select("bf_indices_2", F.col("slot").alias("rn"))
         jumbled = numbered.drop("bf_indices_2").join(shuffled2, "rn")

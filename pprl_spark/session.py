@@ -4,10 +4,11 @@ Plain ``python`` runs (tests, perfbench, tools) get a ``local[N]`` master,
 a sized driver heap and the tuning confs below. Under ``spark-submit``
 (``PYSPARK_GATEWAY_PORT`` set) the launcher's ``--master``,
 ``--driver-memory`` and ``--conf`` values win, and the already-running
-driver JVM's heap and flags are left alone. AQE is always on: skewed
-celebrity blocks at 10^12-document scale are re-planned at runtime
-(skew-join splitting + partition coalescing), which complements the
-explicit key-salting in ``operators.blocking``.
+driver JVM's heap and flags are left alone. AQE is always on for
+partition coalescing and runtime join re-planning. Its skew-join split
+fires only past 256 MB per partition, so it does not balance the pair
+join at these sizes; hot blocks there are capped and, in the shuffled
+join shapes, salted by ``operators.candidates``.
 
 A warm session reuses what it has built: the codegen cache holds every
 class a ``linkage`` pass or an oracle sweep generates, and a ``local[...]``

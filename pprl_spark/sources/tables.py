@@ -87,7 +87,7 @@ def write_bucketed_blocks(
     written once, probed many times), and threshold self-joins.
 
     Salting does NOT apply on this path: ``generate_candidates`` skips
-    the salt-and-replicate step when both inputs carry a stored ``_bk``
+    the salt-and-replicate step when either input carries a stored ``_bk``
     (salt keys would force the exchange right back in — Spark requires
     every cluster key covered for co-partitioning). Skew safety on
     bucketed joins comes from ``cap_blocks``, which bounds any block to

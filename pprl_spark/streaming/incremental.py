@@ -55,7 +55,7 @@ def delta_candidates(
     ``corpus ∪ delta`` decompose exactly into (a) self-candidates over
     the corpus — already computed and stored by the previous run — plus
     (b) this function: delta-vs-corpus cross pairs and delta-vs-delta
-    self pairs, both through the same salted blocked join
+    self pairs, both through the same blocked pair join
     (``operators.candidates.generate_candidates``). Only the delta side
     is small; the corpus side joins by block key, so cost scales with
     the delta's block fan-out, not the corpus size.

@@ -82,7 +82,7 @@ def test_bucketed_with_cap_and_salt(spark, bucketed):
     celebrity blocks keep the same documents whichever table shape the
     caller feeds (was a 1-match divergence at 100k docs)."""
     cfg, blocks = bucketed
-    cfg_capped = cfg.with_args(max_block_size=5, salt_buckets=4)
+    cfg_capped = cfg.with_args(max_block_size=5)
     out = generate_candidates(
         read_bucketed_blocks(spark, blocks["A"][1]),
         read_bucketed_blocks(spark, blocks["B"][1]),

@@ -536,6 +536,44 @@ def test_pair_join_hint_plan_shape(spark):
     assert pairs(merged) == pairs(auto)
 
 
+def test_salting_only_where_the_pair_join_shuffles(spark):
+    """A block over max_block_size is salted in the sort-merge shape and
+    not in the broadcast shape (whose probe side is not partitioned by
+    key); both shapes emit the same rows, one per pair."""
+    from pprl_spark.operators.blocking import add_block_keys, explode_blocks
+    from pprl_spark.operators.candidates import generate_candidates
+    from pprl_spark.operators.embedding import embed_documents
+    from pprl_spark.sources.synthetic import synthesize_documents
+
+    cfg = EmbedderConfig(max_block_size=20)
+    docs = synthesize_documents(spark, 80, "A")
+    blk = explode_blocks(
+        add_block_keys(embed_documents(docs, cfg, keep=["doc_id"]), cfg)
+    )
+    hot = blk.dropDuplicates(["doc_id"]).withColumn("block_key", F.lit("hot"))
+    blocks = blk.unionByName(hot).localCheckpoint()
+
+    def run(hint):
+        out = generate_candidates(
+            blocks, None, cfg.with_args(pair_join_hint=hint), cap=False
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        rows = sorted(
+            (r["id1"], r["id2"], r["block_key_hash"], r["sim"])
+            for r in out.collect()
+        )
+        return plan, rows
+
+    merge_plan, merge_rows = run("merge")
+    bcast_plan, bcast_rows = run("broadcast")
+    assert "SortMergeJoin" in merge_plan and "_salt" in merge_plan
+    assert "BroadcastHashJoin" in bcast_plan and "_salt" not in bcast_plan
+    assert merge_rows == bcast_rows
+    assert len(merge_rows) == len({(r[0], r[1]) for r in merge_rows})
+    # the hot block alone pairs every two of the 80 docs
+    assert len(merge_rows) == 80 * 79 // 2
+
+
 def test_decode_kernel_properties():
     """Property check (no Spark): decode_wav_meta/decode_bmp_meta recover
     the exact generation parameters for arbitrary valid payloads."""
@@ -590,21 +628,19 @@ def test_decode_kernel_properties():
 
 
 def test_numbered_small_fast_path_matches_distributed_ranks(spark):
-    """The counted small-input fast path in _numbered must assign the
-    exact slots the range-partitioned path assigns (same global rank by
-    the order column) — the SCM training fixture depends on it."""
+    """The range-partitioned _numbered assigns each row its global rank
+    by the order column — the slots Python's sorted() gives — which the
+    SCM training fixture depends on."""
     from pprl_spark.operators.private_index import _numbered
 
     df = spark.range(500).select(
         F.col("id"), F.xxhash64("id", F.lit(7)).alias("_h")
     )
-    fast, n_fast = _numbered(df, "_h", offset=0, range_by=True, known_count=500)
-    slow, n_slow = _numbered(df, "_h", offset=0, range_by=True)
-    assert n_fast == n_slow == 500
-    a = {r["id"]: r["slot"] for r in fast.collect()}
-    b = {r["id"]: r["slot"] for r in slow.collect()}
-    assert a == b
-    assert sorted(a.values()) == list(range(500))
+    numbered, n = _numbered(df, "_h", offset=0, range_by=True)
+    assert n == 500
+    got = {r["id"]: r["slot"] for r in numbered.collect()}
+    ranked = sorted(df.collect(), key=lambda r: r["_h"])
+    assert got == {r["id"]: i for i, r in enumerate(ranked)}
 
 
 def test_decode_media_real_png(spark):

@@ -78,7 +78,6 @@ def test_reference_4x4_golden(spark):
         ff_args={"name": {"ngram_length": [2]}},
         num_hashes=1,
         abs_cutoff=0.2,
-        salt_buckets=1,
     )
     df1 = _name_docs(spark, ["Bob", "Sally", "Samina", "John"], "A")
     df2 = _name_docs(spark, ["Saly", "Rob", "Jon", "Ade"], "B")
